@@ -39,37 +39,39 @@ def main():
         shuffle_partitions=max(cpus * 2, 8),
         extra_conf=extra_conf,
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    import pasar_spark.queries as q
-    import pasar_spark.queries_docs  # noqa: F401
+    try:
+        spark.sparkContext.setLogLevel("ERROR")
+        import pasar_spark.queries as q
+        import pasar_spark.queries_docs  # noqa: F401
 
-    registry = q.queries()
+        registry = q.queries()
 
-    def run(df):
-        if noop:
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.count()
+        def run(df):
+            if noop:
+                df.write.format("noop").mode("overwrite").save()
+            else:
+                df.count()
 
-    for name in names:
-        fn = registry[name]
-        spark.sparkContext.setJobDescription(f"warmup:{name}")
-        t0 = time.time()
-        run(fn(spark, sf_dir))
-        warm = time.time() - t0
-        reps = []
-        for i in range(n_reps):
-            spark.sparkContext.setJobDescription(f"{name}:rep{i}")
+        for name in names:
+            fn = registry[name]
+            spark.sparkContext.setJobDescription(f"warmup:{name}")
             t0 = time.time()
             run(fn(spark, sf_dir))
-            reps.append(time.time() - t0)
-        print(
-            f"{name}: best={min(reps):.3f} median={sorted(reps)[len(reps)//2]:.3f} "
-            f"warm={warm:.3f} reps={[round(r,3) for r in reps]}",
-            flush=True,
-        )
-    spark.stop()
-    shutil.rmtree("/dev/shm/pasar_bench_extra", ignore_errors=True)
+            warm = time.time() - t0
+            reps = []
+            for i in range(n_reps):
+                spark.sparkContext.setJobDescription(f"{name}:rep{i}")
+                t0 = time.time()
+                run(fn(spark, sf_dir))
+                reps.append(time.time() - t0)
+            print(
+                f"{name}: best={min(reps):.3f} median={sorted(reps)[len(reps)//2]:.3f} "
+                f"warm={warm:.3f} reps={[round(r,3) for r in reps]}",
+                flush=True,
+            )
+    finally:
+        spark.stop()
+        shutil.rmtree("/dev/shm/pasar_bench_extra", ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pasar_spark.cdc.sources import DataFrameSource, FeedSource
+from pasar_spark.cdc.sources import DataFrameSource
 
 # The transcript row image as Debezium renders it: temporal columns as
 # epoch micros (MicroTimestamp), everything else as-is.
@@ -291,7 +291,7 @@ def to_debezium(
     return events.select(F.to_json(out).alias("value"))
 
 
-class DebeziumJsonSource(FeedSource):
+class DebeziumJsonSource(DataFrameSource):
     """A JSON-lines WAL directory of Debezium events as a FeedSource.
 
     The on-disk shape a Kafka-Connect file/S3 sink (or a `kcat` dump)
@@ -327,12 +327,12 @@ class DebeziumJsonSource(FeedSource):
         self._cached = cache
         if cache:
             parsed = parsed.persist()
-        self._inner = DataFrameSource(parsed)
+        super().__init__(parsed)  # tip/chunk/next_lsn over the parsed envelope
 
     def unpersist(self) -> None:
         """Release the cached parse (no-op when cache=False)."""
         if self._cached:
-            self._inner.df.unpersist()
+            self.df.unpersist()
 
     def rejects(self) -> DataFrame:
         """Raw lines in the WAL that are not row-change events — the
@@ -353,17 +353,8 @@ class DebeziumJsonSource(FeedSource):
         few files — the layout the pruner expects."""
         from pasar_spark.cdc.sources import ParquetDirSource
 
-        self._inner.df.repartitionByRange(n_files, "lsn").write.parquet(path)
+        self.df.repartitionByRange(n_files, "lsn").write.parquet(path)
         return ParquetDirSource(self.spark, path)
-
-    def tip(self) -> int | None:
-        return self._inner.tip()
-
-    def chunk(self, lo: int, hi: int) -> DataFrame | None:
-        return self._inner.chunk(lo, hi)
-
-    def next_lsn(self, after: int) -> int | None:
-        return self._inner.next_lsn(after)
 
 
 def changes_as_debezium(

@@ -66,6 +66,30 @@ def _obs_get(obs: Observation, defaults: dict) -> dict:
         return dict(defaults)
 
 
+def reduce_changes(changes: DataFrame, key, order, payload, normalizer: str) -> DataFrame:
+    """LWW-reduce change events to one winner per key (``op`` kept) and
+    normalize the winners' text — the reduce of :func:`merge_batch` and
+    of the router's combined fan-out (cdc/router.py)."""
+    reduced = lww_reduce(changes, key=key, order=order, payload=payload + ["op"])
+    if normalizer == "arrow":
+        return reduced.withColumn("text", normalize_text(F.col("text")))
+    if normalizer == "native":
+        return reduced.withColumn("text", normalize_text_native(F.col("text")))
+    return reduced
+
+
+def delta_columns(key: list[str], order: list[str], payload: list[str]) -> list:
+    """Reduced winners as stored MoR delta rows: a delete keeps its key
+    and order, nulls its payload and sets the tombstone."""
+    is_delete = F.col("op") == "D"
+    return [
+        *key,
+        *order,
+        *[F.when(is_delete, F.lit(None)).otherwise(F.col(c)).alias(c) for c in payload],
+        is_delete.alias("_tombstone"),
+    ]
+
+
 def merge_batch(
     table: LakeTable,
     changes: DataFrame,
@@ -104,22 +128,14 @@ def merge_batch(
         obs_src, F.count(F.lit(1)).alias("events_seen"), F.max(lsn_col).alias("max_lsn")
     )
 
-    reduced = lww_reduce(changes, key=key, order=order, payload=payload + ["op"])
-    if normalizer == "arrow":
-        reduced = reduced.withColumn("text", normalize_text(F.col("text")))
-    elif normalizer == "native":
-        reduced = reduced.withColumn("text", normalize_text_native(F.col("text")))
-    reduced = reduced.withColumn("_bucket", table.bucket_expr())
+    reduced = reduce_changes(changes, key, order, payload, normalizer).withColumn(
+        "_bucket", table.bucket_expr()
+    )
 
     if mode == "mor":
-        is_delete = F.col("op") == "D"
         obs = Observation(f"mor-{batch_id}")
         final = reduced.select(
-            *key,
-            *order,
-            *[F.when(is_delete, F.lit(None)).otherwise(F.col(c)).alias(c) for c in payload],
-            is_delete.alias("_tombstone"),
-            F.col("_bucket"),
+            *delta_columns(key, order, payload), F.col("_bucket")
         ).observe(
             obs,
             F.sum((~F.col("_tombstone")).cast("long")).alias("applied"),

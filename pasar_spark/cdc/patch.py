@@ -32,10 +32,14 @@ equivalent natively).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from pasar_spark.cdc.merge import _obs_get, compact_buckets
+from pasar_spark.cdc.runner import replay_windows
+from pasar_spark.cdc.sources import as_source
 from pasar_spark.lake.table import LakeTable
+from pasar_spark.streaming.stream import WalTail
 
 KEY = ["conv_id", "turn_idx"]
 ORDER = ["ts", "lsn"]
@@ -74,7 +78,6 @@ def reduce_events(
     value, deletes carry NULL — keyed by (ts, lsn) inside the struct.
     Row term: whole-row LWW of (ts, lsn, op) for version + tombstone.
     """
-    ostruct = F.struct(*[F.col(o) for o in order_cols()])
     aggs = [
         F.max(F.struct(*[F.col(o) for o in order_cols()],
                        (F.col(op_col) == "D").alias("_t"))).alias("_row")
@@ -155,10 +158,10 @@ def merge_patch_chunk(
 
 class PatchReplayRunner:
     """Chunked, checkpointed replay of a PARTIAL-update change feed into
-    a patch-mode table. Mirrors :class:`ReplayRunner` (same feed-source
-    seam, LSN chunking, gap probes, deterministic batch ids, ledger
-    exactly-once, MoR appends + minor compaction) with the patch reduce
-    in place of whole-row LWW."""
+    a patch-mode table. Runs the same LSN-window loop as
+    :class:`ReplayRunner` (cdc/runner.py replay_windows: feed-source
+    seam, gap probes, deterministic batch ids, ledger exactly-once) with
+    the patch reduce in place of whole-row LWW, then MoR compaction."""
 
     def __init__(
         self,
@@ -216,69 +219,41 @@ class PatchReplayRunner:
 
     # ------------------------------------------------------------------
     def replay(self, events, max_events: int | None = None) -> LakeTable:
-        from pasar_spark.cdc.sources import as_source
+        tables = {self.table_path: self.bootstrap()}
+        replay_windows(
+            as_source(self.spark, events), tables, self.chunk_size,
+            self._apply_window, prefix="patch-", max_events=max_events,
+        )
+        return tables[self.table_path]
 
-        source = as_source(self.spark, events)
-        hi = source.tip()
-        table = self.bootstrap()
-        if hi is None:
-            return table
-        if max_events is not None:
-            hi = min(hi, max_events - 1)
-        key = table.manifest["key"]
-        names = payload_names(table)
-        lo = table.last_lsn + 1
-        probe_gap = True
-        while lo <= hi:
-            if probe_gap:
-                nxt = source.next_lsn(lo)
-                if nxt is None or nxt > hi:
-                    break
-                lo = max(lo, nxt)
-                probe_gap = False
-            chunk_hi = min(lo + self.chunk_size - 1, hi)
-            batch_id = f"patch-lsn-{lo}-{chunk_hi}"
-            chunk = source.chunk(lo, chunk_hi)
-            if chunk is None:
-                lo = chunk_hi + 1
-                probe_gap = True
-                continue
-            if not table.has_batch(batch_id):
-                table = merge_patch_chunk(table, chunk, batch_id, last_lsn=chunk_hi)
-                table = self._compact(table)
-            lo = chunk_hi + 1
-        return table
-
-    def _compact(self, table: LakeTable) -> LakeTable:
-        """Minor fold: buckets holding >= compact_min_files delta files
-        collapse to ONE resolved delta (O(deltas) write) — stored form is
-        closed under resolution, so folding is just resolve_stored."""
-        key = table.manifest["key"]
-        names = payload_names(table)
-        for b, n in sorted(table.bucket_file_counts().items(), key=lambda kv: int(kv[0])):
-            if n < self.compact_min_files:
-                continue
-            entries = table.bucket_entries(b)
-            df = table._read_entries(entries)
-            if df is None:
-                continue
-            folded = resolve_stored(df, key, names).withColumn(
-                "_bucket", F.lit(int(b))
-            )
-            files = table.write_files(folded, table.new_commit_id())
-            table = table.commit_merge(
-                replaced_buckets=[int(b)],
-                new_files={b: files.get(b, [])},
-                batch_id=f"patch-compact-{b}-v{table.version}",
-            )
-        return table
+    def _apply_window(self, tables, chunk, batch_id, chunk_hi=None) -> int:
+        """One LSN window or streaming epoch (``chunk_hi=None``); returns
+        its observed event count, so an empty window probes the gap.
+        compact_buckets folds patch tables with :func:`resolve_stored`."""
+        (path, table), = tables.items()
+        obs = Observation(f"patch-src-{batch_id}")
+        chunk = chunk.observe(obs, F.count(F.lit(1)).alias("events_seen"))
+        table = merge_patch_chunk(table, chunk, batch_id, last_lsn=chunk_hi)
+        tables[path], _ = compact_buckets(table, min_files=self.compact_min_files)
+        return int(_obs_get(obs, {"events_seen": 0})["events_seen"] or 0)
 
 
-class PatchStreamingIngest:
-    """Structured Streaming tail into a patch table — same composition
-    as streaming/stream.py: the file source discovers appended WAL
-    files, the epoch id becomes the batch id, and the snapshot-embedded
-    ledger turns at-least-once epoch redelivery into exactly-once."""
+class PatchStreamingIngest(WalTail):
+    """Structured Streaming tail into a patch table — the shared WAL tail
+    of streaming/stream.py with the patch apply: the file source
+    discovers appended WAL files, the epoch id becomes the batch id
+    (``patch-stream-<epoch>``), and the snapshot-embedded ledger turns
+    at-least-once epoch redelivery into exactly-once.
+
+    ``followers`` are downstream incremental consumers with a
+    ``.refresh()`` keyed on consumed source versions (cdc/derived.py
+    works unchanged over a patch source — its materialized view gives
+    the same pre/post images). ``schema`` pins the WAL envelope (patch
+    feeds carry feed-specific payload columns, so the pin comes from the
+    caller's feed registry); None infers it from current WAL contents,
+    which requires at least one file to exist before start."""
+
+    batch_prefix = "patch-stream-"
 
     def __init__(
         self,
@@ -289,48 +264,10 @@ class PatchStreamingIngest:
         schema=None,
         followers: list | None = None,
     ):
-        self.runner = runner
-        self.wal_path = wal_path
-        self.checkpoint_path = checkpoint_path
-        self.max_files_per_trigger = max_files_per_trigger
-        # downstream incremental consumers with a .refresh() keyed on
-        # consumed source versions (cdc/derived.py works unchanged over a
-        # patch source — its materialized view gives the same pre/post
-        # images) — same epoch-embedded refresh + redelivery-heal
-        # contract as streaming/stream.py followers
-        self.followers = list(followers) if followers else []
-        # pinned WAL envelope schema (patch feeds carry feed-specific
-        # payload columns, so the pin comes from the caller's feed
-        # registry); None infers from current WAL contents, which
-        # requires at least one file to exist before start
-        self.schema = schema
-
-    def _apply_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        table = LakeTable.load(self.runner.spark, self.runner.table_path)
-        table = merge_patch_chunk(table, batch_df, f"patch-stream-{epoch_id}")
-        self.runner._compact(table)
-        for f in self.followers:
-            f.refresh()
-
-    def run_available_now(self) -> LakeTable:
-        import os
-
-        self.runner.bootstrap()
-        schema = self.schema
-        if schema is None:
-            schema = self.runner.spark.read.parquet(self.wal_path).schema
-        os.makedirs(self.wal_path, exist_ok=True)
-        reader = self.runner.spark.readStream.schema(schema)
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        q = (
-            reader.parquet(self.wal_path)
-            .writeStream.foreachBatch(self._apply_epoch)
-            .option("checkpointLocation", self.checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
+        super().__init__(
+            runner, {runner.table_path: runner.table_path}, wal_path, checkpoint_path,
+            max_files_per_trigger, schema, followers=followers,
         )
-        q.awaitTermination()
-        for f in self.followers:
-            f.refresh()  # zero-epoch drains still catch followers up
-        return LakeTable.load(self.runner.spark, self.runner.table_path)
+
+    def _apply(self, tables, batch_df, batch_id) -> None:
+        self.runner._apply_window(tables, batch_df, batch_id)

@@ -59,16 +59,17 @@ the single-table runner.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pasar_spark.cdc.merge import compact_buckets, merge_batch
-from pasar_spark.cdc.schema_evolution import EvolutionPlan, max_schema_ver, promote_extra
+from pasar_spark.cdc.merge import compact_buckets
+from pasar_spark.cdc.runner import ReplayRunner, replay_windows
+from pasar_spark.cdc.schema_evolution import EvolutionPlan, promote_extra
 from pasar_spark.cdc.sources import FeedSource, as_source
 from pasar_spark.lake.table import LakeTable
-from pasar_spark.cdc.runner import bootstrap_table
 
 
 class UnroutedEvents(ValueError):
@@ -110,27 +111,26 @@ class MultiTableReplayRunner:
             raise ValueError(f"on_unrouted must be 'error'|'ignore', got {on_unrouted!r}")
         if fanout not in ("auto", "per-table"):
             raise ValueError(f"fanout must be 'auto'|'per-table', got {fanout!r}")
-        self.spark = spark
-        self.base_dir = base_dir
-        self.table_opts: dict[str, dict] = (
+        table_opts: dict[str, dict] = (
             {n: dict(o) for n, o in tables.items()}
             if isinstance(tables, dict)
             else {n: {} for n in tables}
         )
-        if not self.table_opts:
+        if not table_opts:
             raise ValueError("tables must name at least one target")
         # '.' / '..' would bootstrap a lake table AT or ABOVE base_dir
         # (os.path.join(base_dir, '..') walks out of the intended root) —
         # reject alongside separators and empties
         bad = [
             n
-            for n in self.table_opts
+            for n in table_opts
             if os.sep in n or not n.strip() or n.strip() in (".", "..")
         ]
         if bad:
             raise ValueError(f"table names must be plain dir names, got {bad}")
+        self.spark = spark
+        self.base_dir = base_dir
         self.route_by = route_by
-        self.n_buckets = n_buckets
         self.chunk_size = chunk_size
         self.evolution_plan = evolution_plan or EvolutionPlan()
         self.normalizer = normalizer
@@ -138,6 +138,16 @@ class MultiTableReplayRunner:
         self.compact_min_files = compact_min_files
         self.on_unrouted = on_unrouted
         self.fanout = fanout
+        # one single-table runner per target: its bootstrap and its
+        # per-table row apply are the router's
+        self._runners = {
+            n: ReplayRunner(
+                spark, os.path.join(base_dir, n), o.get("n_buckets", n_buckets),
+                chunk_size, self.evolution_plan, normalizer, merge_mode,
+                compact_min_files,
+            )
+            for n, o in table_opts.items()
+        }
         #: events dropped by on_unrouted='ignore' across replay() calls.
         #: At-least-once under crash-resume: a re-derived window recounts
         #: its drops (like every side-band metric of an at-least-once
@@ -146,19 +156,12 @@ class MultiTableReplayRunner:
         self.unrouted_events = 0
 
     # ------------------------------------------------------------------
-    def _route_expr(self) -> Column:
-        e = self.route_by
-        return F.expr(e) if isinstance(e, str) else e
-
     def bootstrap(self) -> dict[str, LakeTable]:
-        return {
-            name: bootstrap_table(
-                self.spark,
-                os.path.join(self.base_dir, name),
-                opts.get("n_buckets", self.n_buckets),
-            )
-            for name, opts in self.table_opts.items()
-        }
+        # a crashed combined window or epoch leaves its staging dir
+        # behind; batch replay and a long-lived streaming tail over the
+        # same base_dir both reclaim it on start
+        sweep_stale_staging(self.base_dir)
+        return {name: r.bootstrap() for name, r in self._runners.items()}
 
     # ------------------------------------------------------------------
     def replay(
@@ -170,168 +173,88 @@ class MultiTableReplayRunner:
         """Apply the feed from the group checkpoint to its tip; returns
         ``{name: LakeTable}`` at the final versions.
 
-        The loop mirrors cdc/runner.py replay() (LSN windows, sparse-gap
-        probing, deterministic batch ids) — the difference is purely the
-        per-window demux fan-out described in the module docstring.
+        The windows are cdc/runner.py :func:`replay_windows` (gap probes,
+        deterministic batch ids, ledger skip); only the per-window demux
+        fan-out described in the module docstring is the router's own.
         """
-        source = as_source(self.spark, events)
         tables = self.bootstrap()
-        self._sweep_stale_staging()
-
-        hi = source.tip()
-        if hi is None:
-            return tables
-        if max_events is not None:
-            hi = min(hi, max_events - 1)
-            if hi < 0:
-                return tables
-
-        lo = min(t.last_lsn for t in tables.values()) + 1
-        names = sorted(tables)
-        chunks_done = 0
-        probe_gap = True
-        while lo <= hi:
-            if probe_gap:
-                # Resume guard BEFORE probing: if any table already
-                # committed the ARITHMETIC window starting at lo, the
-                # original run derived this window without a probe (lo
-                # was a prior window's hi+1 with data mid-window but not
-                # AT lo). Probing here would jump lo to the next existing
-                # lsn, mint a different batch id for the same events, and
-                # defeat the per-table ledger dedup that makes the
-                # crash-split window exactly-once (state would still
-                # converge by LWW idempotence, but metrics would double
-                # count). Committed ids are authoritative — reuse them.
-                arith_hi = min(lo + self.chunk_size - 1, hi)
-                if any(
-                    tables[n].has_batch(f"lsn-{lo}-{arith_hi}") for n in names
-                ):
-                    probe_gap = False
-                else:
-                    nxt = source.next_lsn(lo)
-                    if nxt is None or nxt > hi:
-                        break
-                    lo = max(lo, nxt)
-                    probe_gap = False
-            chunk_hi = min(lo + self.chunk_size - 1, hi)
-            batch_id = f"lsn-{lo}-{chunk_hi}"
-            if all(tables[n].has_batch(batch_id) for n in names):
-                lo = chunk_hi + 1  # resume fast-path: whole window applied
-                chunks_done += 1
-                continue
-            chunk = source.chunk(lo, chunk_hi)
-            if chunk is None:
-                lo = chunk_hi + 1
-                probe_gap = True
-                continue
-
-            routed = chunk.withColumn("_route", self._route_expr()).persist()
-            try:
-                counts = {
-                    r["_route"]: r["n"]
-                    for r in routed.groupBy("_route").agg(
-                        F.count(F.lit(1)).alias("n")
-                    ).collect()
-                }
-                unrouted = {
-                    k: v for k, v in counts.items() if k not in self.table_opts
-                }
-                n_unrouted = sum(unrouted.values())
-                if n_unrouted and self.on_unrouted == "error":
-                    raise UnroutedEvents(
-                        f"window [{lo},{chunk_hi}]: {n_unrouted} events route "
-                        f"to unconfigured targets {sorted(map(repr, unrouted))[:5]}"
-                        " — add them to `tables` or pass on_unrouted='ignore'"
-                    )
-                self.unrouted_events += n_unrouted
-                if sum(counts.get(n, 0) for n in names) == 0:
-                    probe_gap = True  # window had no routable events
-
-                # metadata-only position advance for empty slices: keeps
-                # the lockstep invariant without a Spark job
-                todo = []
-                for name in names:
-                    t = tables[name]
-                    if t.has_batch(batch_id):
-                        continue
-                    if counts.get(name, 0) == 0:
-                        tables[name] = t.commit_append(
-                            {}, batch_id, last_lsn=chunk_hi,
-                            metrics_delta={"events_seen": 0},
-                        )
-                    else:
-                        todo.append(name)
-
-                if todo and self._combined_eligible(tables, todo, routed):
-                    self._combined_window(
-                        tables, routed, todo, batch_id, chunk_hi, counts
-                    )
-                else:
-                    for name in todo:
-                        t = tables[name]
-                        part = routed.where(
-                            F.col("_route") == F.lit(name)
-                        ).drop("_route")
-                        if self.evolution_plan.steps:
-                            ver = max_schema_ver(part)
-                            if ver > t.manifest["ledger"].get("feed_schema_ver", 0):
-                                t = self.evolution_plan.apply_up_to(t, ver)
-                        part = promote_extra(part, t)
-                        t, delta = merge_batch(
-                            t,
-                            part,
-                            batch_id,
-                            last_lsn=chunk_hi,
-                            normalizer=self.normalizer,
-                            mode=self.merge_mode,
-                        )
-                        if self.merge_mode == "mor":
-                            t, _ = compact_buckets(t, min_files=self.compact_min_files)
-                        tables[name] = t
-            finally:
-                routed.unpersist()
-
-            lo = chunk_hi + 1
-            chunks_done += 1
-            if stop_after_chunks is not None and chunks_done >= stop_after_chunks:
-                break
+        replay_windows(
+            as_source(self.spark, events), tables, self.chunk_size,
+            self._apply_window, max_events=max_events,
+            stop_after_chunks=stop_after_chunks,
+        )
         return tables
 
+    def _apply_window(self, tables, chunk, batch_id, chunk_hi) -> int:
+        with self._routed(chunk, batch_id) as (routed, counts, n_unrouted):
+            self.unrouted_events += n_unrouted
+            # metadata-only position advance for empty slices: keeps the
+            # lockstep invariant without a Spark job
+            todo = []
+            for name in sorted(tables):
+                t = tables[name]
+                if t.has_batch(batch_id):
+                    continue
+                if counts.get(name, 0) == 0:
+                    tables[name] = t.commit_append(
+                        {}, batch_id, last_lsn=chunk_hi, metrics_delta={"events_seen": 0}
+                    )
+                else:
+                    todo.append(name)
+            if todo:
+                self._fan_out(tables, routed, todo, batch_id, counts, chunk_hi)
+        # zero routable events sends the window loop to probe the gap
+        return sum(counts.get(n, 0) for n in tables)
+
     # ------------------------------------------------------------------
-    def _sweep_stale_staging(self, min_age_sec: float = 3600.0) -> None:
-        sweep_stale_staging(self.base_dir, min_age_sec)
+    @contextlib.contextmanager
+    def _routed(self, events: DataFrame, batch_id: str):
+        """Tag a window's (or epoch's) events with their target in
+        ``_route``, persisted for the whole fan-out, and count them per
+        route with one ``groupBy``. Yields ``(routed, counts, n_unrouted)``;
+        under ``on_unrouted='error'`` unrouted events raise first."""
+        e = self.route_by
+        routed = events.withColumn("_route", F.expr(e) if isinstance(e, str) else e).persist()
+        try:
+            counts = {
+                r["_route"]: r["count"] for r in routed.groupBy("_route").count().collect()
+            }
+            unrouted = {k: v for k, v in counts.items() if k not in self._runners}
+            n_unrouted = sum(unrouted.values())
+            if n_unrouted and self.on_unrouted == "error":
+                raise UnroutedEvents(
+                    f"{batch_id}: {n_unrouted} events route to unconfigured "
+                    f"targets {sorted(map(repr, unrouted))[:5]} — add them to "
+                    "`tables` or pass on_unrouted='ignore'"
+                )
+            yield routed, counts, n_unrouted
+        finally:
+            routed.unpersist()
 
-    def _combined_eligible(self, tables: dict, todo: list[str], routed) -> bool:
-        """Combined fan-out needs mor mode (cow needs a per-table
-        full-outer merge), homogeneous targets, and no schema-evolution
-        step landing in this window (the per-table path owns evolution)."""
-        if self.fanout == "per-table" or self.merge_mode != "mor":
-            return False
-        if not combined_eligible(tables, todo):
-            return False
-        if self.evolution_plan.steps:
-            ver = max_schema_ver(routed)
-            if any(
-                ver > tables[n].manifest["ledger"].get("feed_schema_ver", 0)
-                for n in todo
-            ):
-                return False
-        return True
-
-    def _combined_window(
-        self,
-        tables: dict,
-        routed,
-        todo: list[str],
-        batch_id: str,
-        chunk_hi: int,
-        counts: dict,
-    ) -> None:
-        combined_window(
-            self.base_dir, tables, routed, todo, batch_id, counts,
-            chunk_hi=chunk_hi, normalizer=self.normalizer,
-            compact_min_files=self.compact_min_files,
-        )
+    def _fan_out(self, tables, routed, todo, batch_id, counts, chunk_hi=None) -> None:
+        """Apply one routed window or streaming epoch to the ``todo``
+        targets, replacing their entries in ``tables``. The combined
+        fan-out (:func:`combined_window`) needs mor mode (cow needs a
+        per-table full-outer merge), homogeneous targets, and no
+        schema-evolution step landing in this window — otherwise each
+        slice takes the single-table row apply, which owns evolution."""
+        if (
+            self.fanout == "auto"
+            and self.merge_mode == "mor"
+            and combined_eligible(tables, todo)
+            and not self.evolution_plan.pending(routed, [tables[n] for n in todo])
+        ):
+            combined_window(
+                self.base_dir, tables, routed, todo, batch_id, counts,
+                chunk_hi=chunk_hi, normalizer=self.normalizer,
+                compact_min_files=self.compact_min_files,
+            )
+            return
+        for name in todo:
+            part = routed.where(F.col("_route") == F.lit(name)).drop("_route")
+            tables[name], _ = self._runners[name]._merge_rows(
+                tables[name], part, batch_id, last_lsn=chunk_hi
+            )
 
 
 def group_snapshot(
@@ -371,21 +294,9 @@ def group_snapshot(
     }
     cut = min(t.last_lsn for t in heads.values())
     for n, t in heads.items():
-        while t.last_lsn > cut:
-            parent = t.manifest.get("parent_version")
-            if not parent:
-                raise LookupError(
-                    f"table {n!r}: no retained version at group cut lsn "
-                    f"{cut} (chain ends at v{t.version}, lsn {t.last_lsn})"
-                )
-            try:
-                t = LakeTable.load(spark, t.path, version=parent)
-            except FileNotFoundError:
-                raise LookupError(
-                    f"table {n!r}: version v{parent} at group cut lsn {cut} "
-                    "was expired — raise the expire_snapshots horizon above "
-                    "reader staleness"
-                ) from None
+        t = _walk_back(
+            spark, n, t, lambda t: t.last_lsn > cut, f"group cut lsn {cut}"
+        )
         if t.last_lsn != cut:
             raise ValueError(
                 f"table {n!r} has no version at the group boundary lsn {cut} "
@@ -466,22 +377,31 @@ def group_snapshot_epochs(
         k -= 1  # newest epoch split across targets: cut below it
     out: dict[str, LakeTable] = {}
     for n, t in heads.items():
-        while (_max_stream_epoch(t) or -1) > k:
-            parent = t.manifest.get("parent_version")
-            if not parent:
-                raise LookupError(
-                    f"table {n!r}: no retained version at group epoch {k}"
-                )
-            try:
-                t = LakeTable.load(spark, t.path, version=parent)
-            except FileNotFoundError:
-                raise LookupError(
-                    f"table {n!r}: version v{parent} at group epoch {k} was "
-                    "expired — raise the expire_snapshots horizon above "
-                    "reader staleness"
-                ) from None
-        out[n] = t
+        out[n] = _walk_back(
+            spark, n, t, lambda t: (_max_stream_epoch(t) or -1) > k,
+            f"group epoch {k}",
+        )
     return out
+
+
+def _walk_back(spark: SparkSession, name: str, t: LakeTable, ahead, cut: str) -> LakeTable:
+    """Walk ``t`` down its parent chain (a metadata read per step, never
+    data) while ``ahead(t)``; ``cut`` names the group cut in errors."""
+    while ahead(t):
+        parent = t.manifest.get("parent_version")
+        if not parent:
+            raise LookupError(
+                f"table {name!r}: no retained version at {cut} "
+                f"(chain ends at v{t.version}, lsn {t.last_lsn})"
+            )
+        try:
+            t = LakeTable.load(spark, t.path, version=parent)
+        except FileNotFoundError:
+            raise LookupError(
+                f"table {name!r}: version v{parent} at {cut} was expired — "
+                "raise the expire_snapshots horizon above reader staleness"
+            ) from None
+    return t
 
 
 def combined_eligible(tables: dict, todo: list[str]) -> bool:
@@ -536,12 +456,7 @@ def combined_window(
 
     from pyspark.sql import Observation
 
-    from pasar_spark.cdc.lww import lww_reduce
-    from pasar_spark.cdc.merge import ORDER
-    from pasar_spark.functions.normalize import (
-        normalize_text,
-        normalize_text_native,
-    )
+    from pasar_spark.cdc.merge import ORDER, delta_columns, reduce_changes
     from pasar_spark.lake.table import bucket_dir_entries, configure_parquet_writer
 
     t0 = tables[todo[0]]
@@ -571,23 +486,10 @@ def combined_window(
                 for i, name in enumerate(todo)
             ],
         )
-    reduced = lww_reduce(
-        src, key=["_route"] + key, order=order, payload=payload + ["op"]
-    )
-    if normalizer == "arrow":
-        reduced = reduced.withColumn("text", normalize_text(F.col("text")))
-    elif normalizer == "native":
-        reduced = reduced.withColumn("text", normalize_text_native(F.col("text")))
-    is_delete = F.col("op") == "D"
+    reduced = reduce_changes(src, ["_route"] + key, order, payload, normalizer)
     final = reduced.select(
         F.col("_route"),
-        *key,
-        *order,
-        *[
-            F.when(is_delete, F.lit(None)).otherwise(F.col(c)).alias(c)
-            for c in payload
-        ],
-        is_delete.alias("_tombstone"),
+        *delta_columns(key, order, payload),
         t0.bucket_expr().alias("_bucket"),
     )
     staging = os.path.join(

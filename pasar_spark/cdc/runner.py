@@ -15,15 +15,25 @@ id counter) with LSN-range chunking:
 - resume = start from ``table.last_lsn + 1``; nothing else to restore;
 - fetch cap (``max_events``) mirrors the reference's
   OMOP_MEASUREMENT_..._FETCH_LIMIT sampling knob (measurement.py:154-158).
+
+That loop exists once, :func:`replay_windows`; the row, per-partition,
+router (cdc/router.py) and patch (cdc/patch.py) modes supply only the
+per-window apply. Its batch-id prefixes are durable ledger format —
+``lsn-`` (row and router), ``p<part>-lsn-`` (partitioned) and
+``patch-lsn-`` (patch) — as are the streaming tail's ``stream-`` and
+``patch-stream-`` epoch ids (streaming/stream.py).
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 
 from pasar_spark.cdc.merge import compact_buckets, merge_batch
-from pasar_spark.cdc.schema_evolution import EvolutionPlan, max_schema_ver, promote_extra
-from pasar_spark.cdc.sources import FeedSource, as_source, lsn_file_stats
+from pasar_spark.cdc.schema_evolution import EvolutionPlan, promote_extra
+from pasar_spark.cdc.sources import FeedSource, as_source
+from pasar_spark.cdc.wap import write_audit_publish
 from pasar_spark.lake.table import LakeTable
 
 # The transcript target schema (BASELINE.json input_hint) + the LWW
@@ -41,19 +51,6 @@ BASE_COLUMNS: list[tuple[str, str]] = [
     ("_tombstone", "boolean"),
 ]
 KEY = ["conv_id", "turn_idx"]
-
-
-# Footer-stat reader lives with the feed sources now (cdc/sources.py);
-# re-exported here for callers/tests that grew up with the old location.
-_lsn_file_stats = lsn_file_stats
-
-
-def _max_lsn_from_footers(path: str) -> int | None:
-    """Feed tip via footer stats — a metadata read, not a column scan."""
-    stats = lsn_file_stats(path)
-    if not stats:
-        return None
-    return max(hi for _, _, hi in stats)
 
 
 def bootstrap_table(spark: SparkSession, path: str, n_buckets: int) -> LakeTable:
@@ -77,6 +74,78 @@ def bootstrap_table(spark: SparkSession, path: str, n_buckets: int) -> LakeTable
         n_buckets=n_buckets,
         bucket_by="conv_id",
     )
+
+
+def replay_windows(
+    source: FeedSource,
+    tables: dict[str, LakeTable],
+    chunk_size: int,
+    apply,
+    lo: int | None = None,
+    prefix: str = "",
+    max_events: int | None = None,
+    stop_after_chunks: int | None = None,
+) -> int:
+    """The LSN-window loop of every batch mode: walks ``[lo, tip]`` (``lo``
+    defaults to the group checkpoint ``min(last_lsn) + 1``; tip capped
+    below ``max_events``) in ``chunk_size`` windows with batch id
+    ``<prefix>lsn-<lo>-<hi>``, skips a window every table already
+    committed, and otherwise calls ``apply(tables, chunk, batch_id,
+    chunk_hi)``, which stores the committed versions back into ``tables``
+    and returns the events it saw (None if unknown). Returns the windows
+    walked; ``stop_after_chunks`` aborts mid-stream as a killed driver
+    would (crash/resume tests).
+
+    Real LSN spaces are sparse (WAL byte offsets, GTID gaps), so the loop
+    must not degrade to O(lsn_range / chunk_size) empty-merge iterations:
+    ``source.next_lsn(lo)`` — free for parquet (footer stats), an index
+    min-probe for JDBC — jumps the gap at start, after a provably-empty
+    range, and after a merged window that saw zero events. Jump targets
+    are deterministic for an append-only feed, so batch ids stay stable
+    across resume.
+    """
+    hi = source.tip()
+    if hi is None:
+        return 0
+    if lo is None:
+        lo = min(t.last_lsn for t in tables.values()) + 1
+    if max_events is not None:
+        hi = min(hi, max_events - 1)
+    chunks_done = 0
+    probe_gap = True
+    while lo <= hi:
+        if probe_gap:
+            # Resume guard BEFORE probing: a table that already committed
+            # the ARITHMETIC window at lo (a router crash split it) got it
+            # without a probe. Probing would mint a different batch id for
+            # the same events and defeat the per-table ledger dedup —
+            # committed ids are authoritative. A single table's lo is past
+            # its last committed window, so there it never fires.
+            arith_id = f"{prefix}lsn-{lo}-{min(lo + chunk_size - 1, hi)}"
+            if not any(t.has_batch(arith_id) for t in tables.values()):
+                nxt = source.next_lsn(lo)
+                if nxt is None or nxt > hi:
+                    break
+                lo = max(lo, nxt)
+            probe_gap = False
+        chunk_hi = min(lo + chunk_size - 1, hi)
+        batch_id = f"{prefix}lsn-{lo}-{chunk_hi}"
+        if not all(t.has_batch(batch_id) for t in tables.values()):
+            chunk = source.chunk(lo, chunk_hi)
+            if chunk is None:
+                # source proved the lsn range empty (footer stats / DB
+                # index): nothing to apply; re-walked (cheaply) on resume
+                # since last_lsn doesn't advance past it
+                lo = chunk_hi + 1
+                probe_gap = True
+                continue
+            if apply(tables, chunk, batch_id, chunk_hi) == 0:
+                probe_gap = True  # window was empty — jump the gap
+        lo = chunk_hi + 1
+        chunks_done += 1
+        if stop_after_chunks is not None and chunks_done >= stop_after_chunks:
+            break
+    return chunks_done
 
 
 class ReplayRunner:
@@ -121,73 +190,14 @@ class ReplayRunner:
         custom :class:`FeedSource`, or an events DataFrame. The replay
         loop itself never knows which — the source decides how ``tip``
         and each LSN-range ``chunk`` are answered (SURVEY.md S2/S3).
-
-        ``stop_after_chunks`` exists for crash/resume testing: it aborts
-        the loop mid-stream exactly as a killed driver would.
         """
-        source = as_source(self.spark, events)
-
-        hi = source.tip()
-        if hi is None:
-            return self.bootstrap()
-        if max_events is not None:
-            hi = min(hi, max_events - 1)
-            if hi < 0:
-                return self.bootstrap()
-
-        table = self.bootstrap()
-        lo = table.last_lsn + 1
-        chunks_done = 0
-        # Real LSN spaces are sparse (WAL byte offsets, GTID gaps), so the
-        # loop must not degrade to O(lsn_range / chunk_size) empty-merge
-        # iterations. `probe_gap` consults source.next_lsn(lo) — free for
-        # parquet (footer stats), an index min-probe for JDBC — whenever a
-        # gap is evidenced: at start, after a provably-empty range, and
-        # after a merged window that saw zero events. Dense feeds never
-        # probe after the first jump. Jump targets are deterministic for
-        # an append-only feed, so batch ids stay stable across resume.
-        probe_gap = True
-        while lo <= hi:
-            if probe_gap:
-                nxt = source.next_lsn(lo)
-                if nxt is None or nxt > hi:
-                    break
-                lo = max(lo, nxt)
-                probe_gap = False
-            chunk_hi = min(lo + self.chunk_size - 1, hi)
-            batch_id = f"lsn-{lo}-{chunk_hi}"
-            chunk = source.chunk(lo, chunk_hi)
-            if chunk is None:
-                # source proved the lsn range empty (footer stats / DB
-                # index): nothing to apply; re-walked (cheaply) on resume
-                # since last_lsn doesn't advance past it
-                lo = chunk_hi + 1
-                probe_gap = True
-                continue
-
-            if not table.has_batch(batch_id):
-                if self.evolution_plan.steps:
-                    ver = max_schema_ver(chunk)
-                    if ver > table.manifest["ledger"].get("feed_schema_ver", 0):
-                        table = self.evolution_plan.apply_up_to(table, ver)
-                chunk = promote_extra(chunk, table)
-                table, delta = merge_batch(
-                    table,
-                    chunk,
-                    batch_id,
-                    last_lsn=chunk_hi,
-                    normalizer=self.normalizer,
-                    mode=self.merge_mode,
-                )
-                if delta.get("events_seen", 1) == 0:
-                    probe_gap = True  # window was empty — jump the gap
-                if self.merge_mode == "mor":
-                    table, _ = compact_buckets(table, min_files=self.compact_min_files)
-            lo = chunk_hi + 1
-            chunks_done += 1
-            if stop_after_chunks is not None and chunks_done >= stop_after_chunks:
-                break
-        return table
+        tables = {self.table_path: self.bootstrap()}
+        replay_windows(
+            as_source(self.spark, events), tables, self.chunk_size,
+            self._apply_window, max_events=max_events,
+            stop_after_chunks=stop_after_chunks,
+        )
+        return tables[self.table_path]
 
     # ------------------------------------------------------------------
     def replay_partitions(
@@ -214,51 +224,55 @@ class ReplayRunner:
         crash/rerun re-derives them and the ledger dedupes redelivery;
         chunks older than the ledger's id window are excluded by the
         offset cut itself, exactly like the single-feed path."""
-        table = self.bootstrap()
+        tables = {self.table_path: self.bootstrap()}
         chunks_done = 0
         for part in sorted(sources, key=str):
-            source = as_source(self.spark, sources[part])
-            hi = source.tip()
-            if hi is None:
-                continue
-            lo = table.source_offset(part) + 1
-            probe_gap = True
-            while lo <= hi:
-                if probe_gap:
-                    nxt = source.next_lsn(lo)
-                    if nxt is None or nxt > hi:
-                        break
-                    lo = max(lo, nxt)
-                    probe_gap = False
-                chunk_hi = min(lo + self.chunk_size - 1, hi)
-                batch_id = f"p{part}-lsn-{lo}-{chunk_hi}"
-                chunk = source.chunk(lo, chunk_hi)
-                if chunk is None:
-                    lo = chunk_hi + 1
-                    probe_gap = True
-                    continue
-                if not table.has_batch(batch_id):
-                    if self.evolution_plan.steps:
-                        ver = max_schema_ver(chunk)
-                        if ver > table.manifest["ledger"].get("feed_schema_ver", 0):
-                            table = self.evolution_plan.apply_up_to(table, ver)
-                    chunk = promote_extra(chunk, table)
-                    table, delta = merge_batch(
-                        table,
-                        chunk,
-                        batch_id,
-                        normalizer=self.normalizer,
-                        mode=self.merge_mode,
-                        partition_offsets={part: chunk_hi},
-                    )
-                    if delta.get("events_seen", 1) == 0:
-                        probe_gap = True
-                    if self.merge_mode == "mor":
-                        table, _ = compact_buckets(
-                            table, min_files=self.compact_min_files
-                        )
-                lo = chunk_hi + 1
-                chunks_done += 1
-                if stop_after_chunks is not None and chunks_done >= stop_after_chunks:
-                    return table
-        return table
+            left = None if stop_after_chunks is None else stop_after_chunks - chunks_done
+            if left == 0:
+                break
+            chunks_done += replay_windows(
+                as_source(self.spark, sources[part]), tables, self.chunk_size,
+                functools.partial(self._apply_window, part=part),
+                lo=tables[self.table_path].source_offset(part) + 1,
+                prefix=f"p{part}-", stop_after_chunks=left,
+            )
+        return tables[self.table_path]
+
+    # ------------------------------------------------------------------
+    def _apply_window(self, tables, chunk, batch_id, chunk_hi, part=None):
+        # a partition window checkpoints its offset, not the global lsn
+        (path, table), = tables.items()
+        tables[path], delta = self._merge_rows(
+            table, chunk, batch_id,
+            last_lsn=chunk_hi if part is None else None,
+            partition_offsets=None if part is None else {part: chunk_hi},
+        )
+        return delta.get("events_seen")
+
+    def _merge_rows(
+        self,
+        table: LakeTable,
+        chunk: DataFrame,
+        batch_id: str,
+        last_lsn: int | None = None,
+        partition_offsets: dict | None = None,
+        audit_checks=None,
+    ) -> tuple[LakeTable, dict]:
+        """The row-mode apply of batch windows, router slices and streaming
+        epochs: schema evolution, ``extra`` promotion, LWW merge (or WAP
+        under ``audit_checks``), MoR compaction."""
+        ver = self.evolution_plan.pending(chunk, [table])
+        if ver:
+            table = self.evolution_plan.apply_up_to(table, ver)
+        chunk = promote_extra(chunk, table)
+        kw = dict(last_lsn=last_lsn, normalizer=self.normalizer, mode=self.merge_mode,
+                  partition_offsets=partition_offsets)
+        if audit_checks is None:
+            table, delta = merge_batch(table, chunk, batch_id, **kw)
+        else:
+            table, delta, _ = write_audit_publish(
+                table, chunk, batch_id, checks=audit_checks, **kw
+            )
+        if self.merge_mode == "mor":
+            table, _ = compact_buckets(table, min_files=self.compact_min_files)
+        return table, delta

@@ -36,6 +36,15 @@ class EvolutionPlan:
 
     steps: dict[int, list[tuple]] = field(default_factory=dict)
 
+    def pending(self, events: DataFrame, tables) -> int:
+        """The feed schema version ``events`` carry when any of ``tables``
+        has not applied it yet, else 0 — the one evolution check every
+        ingest path makes before a merge. A plan without steps answers 0
+        without scanning ``events``."""
+        ver = max_schema_ver(events) if self.steps else 0
+        behind = any(ver > t.manifest["ledger"].get("feed_schema_ver", 0) for t in tables)
+        return ver if behind else 0
+
     def apply_up_to(self, table: LakeTable, target_ver: int) -> LakeTable:
         """Apply DDL for feed versions (applied, target] — ONE atomic
         manifest commit per version carrying BOTH the schema change and

@@ -147,6 +147,19 @@ def cmd_lookup(args) -> int:
     return 0
 
 
+def _run_live(ingest, args) -> dict:
+    """``--live`` tail for ``--duration`` seconds; every target's head."""
+    q = ingest.start(processing_time=args.trigger_interval)
+    try:
+        if args.duration > 0:
+            q.awaitTermination(args.duration)
+        else:
+            q.awaitTermination()
+    finally:
+        q.stop()
+    return ingest.heads()
+
+
 def cmd_stream(args) -> int:
     from pasar_spark.streaming.stream import StreamingIngest
 
@@ -179,17 +192,7 @@ def cmd_stream(args) -> int:
         # production live tail: processingTime trigger; --duration bounds
         # the run (0 = until killed; the checkpoint + ledger make any
         # stop/restart exactly-once either way)
-        from pasar_spark.lake.table import LakeTable
-
-        q = ingest.start(processing_time=args.trigger_interval)
-        try:
-            if args.duration > 0:
-                q.awaitTermination(args.duration)
-            else:
-                q.awaitTermination()
-        finally:
-            q.stop()
-        t = LakeTable.load(spark, args.table)
+        (t,) = _run_live(ingest, args).values()
     else:
         t = ingest.run_available_now()
     print(json.dumps({"table": args.table, "last_lsn": t.last_lsn, "metrics": t.metrics}))
@@ -316,25 +319,7 @@ def cmd_etl(args) -> int:
             merge_mode=args.mode,
             on_unrouted=args.on_unrouted,
         )
-        if args.live:
-            import os
-
-            from pasar_spark.lake.table import LakeTable
-
-            q = ingest.start(processing_time=args.trigger_interval)
-            try:
-                if args.duration > 0:
-                    q.awaitTermination(args.duration)
-                else:
-                    q.awaitTermination()
-            finally:
-                q.stop()
-            tables = {
-                n: LakeTable.load(spark, os.path.join(args.base_dir, n))
-                for n in names
-            }
-        else:
-            tables = ingest.run_available_now()
+        tables = _run_live(ingest, args) if args.live else ingest.run_available_now()
         runner = ingest
     else:
         runner = MultiTableReplayRunner(

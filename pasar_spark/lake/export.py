@@ -148,12 +148,15 @@ def export_snapshot(
     try:
         try:
             fcntl.flock(lock_fh, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
+        except BlockingIOError:  # EAGAIN / EWOULDBLOCK: the lock is held
             raise ValueError(
                 f"another exporter holds the publish lock for {dest!r} "
                 "(dest/.publish.lock); concurrent publishes to one dest "
                 "are serialized — retry after it completes"
             ) from None
+        except OSError as e:  # ENOLCK / EOPNOTSUPP: no flock on this filesystem
+            raise OSError(e.errno, f"unsupported publish lock {dest}/.publish.lock: "
+                          f"flock failed ({e.strerror})") from e
         return _export_snapshot_locked(table, dest, incremental, columns)
     finally:
         lock_fh.close()  # closing the fd releases the flock

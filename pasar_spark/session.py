@@ -59,8 +59,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("PASAR_DRIVER_MEM", "16g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # Parquet writers: zstd compresses transcripts ~2x better than
-        # snappy at similar CPU — matters at 100 TB.
+        # Session default codec: it governs only the parquet writes that
+        # set none of their own — export files (lake/export.py) and
+        # auxiliary outputs. Lake data files are always snappy
+        # (lake/table.py configure_parquet_writer).
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
     if master:

@@ -22,6 +22,8 @@ module is the north-rule 'binlog/WAL tail' capability.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -32,9 +34,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from pasar_spark.cdc.merge import compact_buckets, merge_batch
-from pasar_spark.cdc.runner import bootstrap_table
-from pasar_spark.cdc.schema_evolution import EvolutionPlan, max_schema_ver, promote_extra
+# merge_batch / compact_buckets stay importable from this module: the
+# benchmark's tracer (perfbench/spans.py) hooks them by these names
+from pasar_spark.cdc.merge import compact_buckets, merge_batch  # noqa: F401
+from pasar_spark.cdc.router import MultiTableReplayRunner
+from pasar_spark.cdc.runner import ReplayRunner
+from pasar_spark.cdc.schema_evolution import EvolutionPlan
 from pasar_spark.lake.table import LakeTable
 
 
@@ -60,82 +65,49 @@ def envelope_schema() -> StructType:
     )
 
 
-def open_wal_stream(
-    spark: SparkSession,
-    wal_path: str,
-    schema: StructType | None,
-    wire_format: str,
-    max_files_per_trigger: int | None,
-):
-    """Build the readStream over the WAL dir — the one place the wire
-    format decides the source shape. ``debezium-json`` tails JSON lines
-    (schema is `value string` by construction, always startable against
-    an empty dir); ``parquet`` needs an envelope schema — pinned by the
-    caller (production) or inferred from current contents (ad-hoc)."""
-    import os
+class WalTail:
+    """The Structured Streaming tail of the row, multi-table and patch
+    (cdc/patch.py) ingests: it owns the readStream, the per-epoch
+    Debezium decode with its DLQ, both triggers and the followers. A
+    subclass supplies ``runner`` (whose ``bootstrap()`` creates the
+    targets), the target ``paths`` ``{name: table path}`` and the
+    per-epoch ``_apply(tables, batch_df, batch_id)``, which commits
+    epoch ``e`` as batch ``<batch_prefix><e>``."""
 
-    if wire_format == "debezium-json":
-        os.makedirs(wal_path, exist_ok=True)
-        reader = spark.readStream
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return reader.text(wal_path)
-    if schema is None:
-        schema = spark.read.parquet(wal_path).schema
-    os.makedirs(wal_path, exist_ok=True)  # tail-before-first-ship
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(wal_path)
+    batch_prefix = "stream-"
+    #: a multi-table tail decodes Debezium's ``source.table`` as ``_table``
+    #: (the canonical routing key) and returns every head from a drain
+    multi_table = False
 
-
-class StreamingIngest:
     def __init__(
         self,
-        spark: SparkSession,
-        table_path: str,
+        runner,
+        paths: dict[str, str],
         wal_path: str,
         checkpoint_path: str,
-        n_buckets: int = 16,
-        evolution_plan: EvolutionPlan | None = None,
-        normalizer: str = "arrow",
         max_files_per_trigger: int | None = None,
-        merge_mode: str = "mor",
-        compact_min_files: int = 8,
-        audit_checks=None,
         schema: StructType | None = None,
         wire_format: str = "parquet",
         dlq_path: str | None = None,
         followers: list | None = None,
     ):
-        self.spark = spark
-        self.table_path = table_path
-        self.wal_path = wal_path
-        self.checkpoint_path = checkpoint_path
-        self.n_buckets = n_buckets
-        self.evolution_plan = evolution_plan or EvolutionPlan()
-        self.normalizer = normalizer
-        self.max_files_per_trigger = max_files_per_trigger
-        self.merge_mode = merge_mode
-        self.compact_min_files = compact_min_files
-        # quality-gated streaming (WAP per epoch): each micro-batch is
-        # committed STAGED, audited by these checks against the staged
-        # state, and only a passing audit publishes — readers of a live
-        # tail never observe a bad epoch; a failing epoch raises, the
-        # stream stops, and on restart the same epoch re-stages (the
-        # batch id only entered the ledger if it published)
-        self.audit_checks = audit_checks
-        # pinned WAL envelope schema (the production path: a stream must
-        # be startable BEFORE the first file ships, and must not re-infer
-        # its envelope from whatever happens to be in the directory).
-        # None keeps the old infer-from-contents behavior for ad-hoc use.
-        self.schema = schema
         # WAL encoding: "parquet" (native envelope files) or
         # "debezium-json" (JSON-lines connector events — the shape a
         # Kafka-Connect file/S3 sink ships; cdc/debezium.py decodes them
         # inside each epoch, so the merge core is format-blind).
         if wire_format not in ("parquet", "debezium-json"):
             raise ValueError(f"unknown wire_format {wire_format!r}")
+        self.runner = runner
+        self.spark = runner.spark
+        self._paths = paths
+        self.wal_path = wal_path
+        self.checkpoint_path = checkpoint_path
+        self.max_files_per_trigger = max_files_per_trigger
+        # pinned WAL envelope schema (the production path: a stream must
+        # be startable BEFORE the first file ships, and must not re-infer
+        # its envelope from whatever happens to be in the directory).
+        # None keeps the old infer-from-contents behavior for ad-hoc use.
+        self.schema = schema
         self.wire_format = wire_format
         # quarantine for non-row-change lines on the debezium-json path
         # (truncates, tx markers, corrupt JSON): written per epoch under
@@ -154,13 +126,17 @@ class StreamingIngest:
         # follower's commit heals on the next delivery.
         self.followers = list(followers) if followers else []
 
-    def bootstrap(self) -> LakeTable:
-        return bootstrap_table(self.spark, self.table_path, self.n_buckets)
+    def bootstrap(self):
+        return self.runner.bootstrap()
+
+    def heads(self) -> dict[str, LakeTable]:
+        """Every target at its current version, keyed as ``paths``."""
+        return {n: LakeTable.load(self.spark, p) for n, p in self._paths.items()}
 
     def _apply_epoch(self, batch_df, epoch_id: int) -> None:
-        batch_id = f"stream-{epoch_id}"
-        table = LakeTable.load(self.spark, self.table_path)
-        if table.has_batch(batch_id):
+        batch_id = f"{self.batch_prefix}{epoch_id}"
+        tables = self.heads()
+        if all(t.has_batch(batch_id) for t in tables.values()):
             # redelivered epoch after a checkpoint/commit race: the source
             # merge is a ledger no-op, but followers still refresh — the
             # crash may have landed BETWEEN the source commit and a
@@ -179,27 +155,9 @@ class StreamingIngest:
                 debezium_rejects(raw, "value").write.mode("overwrite").text(
                     f"{self.dlq_path}/epoch={epoch_id}"
                 )
-            batch_df = from_debezium(raw, "value")
+            batch_df = from_debezium(raw, "value", include_table=self.multi_table)
         try:
-            if self.evolution_plan.steps:
-                ver = max_schema_ver(batch_df)
-                if ver > table.manifest["ledger"].get("feed_schema_ver", 0):
-                    table = self.evolution_plan.apply_up_to(table, ver)
-            batch_df = promote_extra(batch_df, table)
-            if self.audit_checks is not None:
-                from pasar_spark.cdc.wap import write_audit_publish
-
-                table, _, _ = write_audit_publish(
-                    table, batch_df, batch_id, checks=self.audit_checks,
-                    normalizer=self.normalizer, mode=self.merge_mode,
-                )
-            else:
-                table, _ = merge_batch(
-                    table, batch_df, batch_id,
-                    normalizer=self.normalizer, mode=self.merge_mode,
-                )
-            if self.merge_mode == "mor":
-                compact_buckets(table, min_files=self.compact_min_files)
+            self._apply(tables, batch_df, batch_id)
             self._refresh_followers()
         finally:
             if raw is not None:
@@ -216,10 +174,24 @@ class StreamingIngest:
             f.refresh()
 
     def _start(self, **trigger):
+        """Build the readStream over the WAL dir — the one place the wire
+        format decides the source shape. ``debezium-json`` tails JSON
+        lines (schema is `value string` by construction, always startable
+        against an empty dir); ``parquet`` needs an envelope schema —
+        pinned by the caller (production) or inferred from current
+        contents (ad-hoc)."""
         self.bootstrap()
-        stream = open_wal_stream(
-            self.spark, self.wal_path, self.schema,
-            self.wire_format, self.max_files_per_trigger,
+        parquet = self.wire_format == "parquet"
+        schema = self.schema
+        if parquet and schema is None:
+            schema = self.spark.read.parquet(self.wal_path).schema
+        os.makedirs(self.wal_path, exist_ok=True)  # tail-before-first-ship
+        reader = self.spark.readStream
+        if self.max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
+        stream = (
+            reader.schema(schema).parquet(self.wal_path) if parquet
+            else reader.text(self.wal_path)
         )
         return (
             stream.writeStream.foreachBatch(self._apply_epoch)
@@ -230,30 +202,78 @@ class StreamingIngest:
 
     def run_available_now(self):
         """Drain everything currently in the WAL dir, then stop — the
-        bounded trigger (catch-up / test runs). Post-condition with
-        followers: they are caught up to the source HEAD, even when the
-        drain fired zero epochs (e.g. out-of-band source commits since
-        the last drain — compaction, another writer)."""
-        q = self._start(availableNow=True)
-        q.awaitTermination()
+        bounded trigger (catch-up / test runs). Returns the target at its
+        final version (every target, for a multi-table tail).
+        Post-condition with followers: they are caught up to the source
+        HEAD, even when the drain fired zero epochs (e.g. out-of-band
+        source commits since the last drain — compaction, another
+        writer)."""
+        self._start(availableNow=True).awaitTermination()
         self._refresh_followers()
-        return LakeTable.load(self.spark, self.table_path)
+        heads = self.heads()
+        return heads if self.multi_table else next(iter(heads.values()))
 
     def start(self, processing_time: str = "1 second"):
         """LIVE tail: fire every ``processing_time``, picking up WAL
         files as the shipper appends them — the production trigger. The
-        per-epoch core (ledger batch id ``stream-<epoch>``, snapshot
-        commit, MoR compaction) is identical to availableNow, so the
-        exactly-once argument carries over unchanged. Returns the
-        StreamingQuery; callers stop() it (tests) or awaitTermination()
-        (a deployment)."""
+        per-epoch core (ledger batch id, snapshot commit, MoR
+        compaction) is identical to availableNow, so the exactly-once
+        argument carries over unchanged. Returns the StreamingQuery;
+        callers stop() it (tests) or awaitTermination() (a deployment)."""
         return self._start(processingTime=processing_time)
 
 
-class MultiTableStreamingIngest:
+class StreamingIngest(WalTail):
+    """Row-mode WAL tail into one lake table: epoch ``e`` takes the batch
+    replay's row apply (cdc/runner.py ``ReplayRunner``) as ``stream-<e>``."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        table_path: str,
+        wal_path: str,
+        checkpoint_path: str,
+        n_buckets: int = 16,
+        evolution_plan: EvolutionPlan | None = None,
+        normalizer: str = "arrow",
+        max_files_per_trigger: int | None = None,
+        merge_mode: str = "mor",
+        compact_min_files: int = 8,
+        audit_checks=None,
+        schema: StructType | None = None,
+        wire_format: str = "parquet",
+        dlq_path: str | None = None,
+        followers: list | None = None,
+    ):
+        runner = ReplayRunner(
+            spark, table_path, n_buckets, evolution_plan=evolution_plan,
+            normalizer=normalizer, merge_mode=merge_mode,
+            compact_min_files=compact_min_files,
+        )
+        super().__init__(
+            runner, {table_path: table_path}, wal_path, checkpoint_path,
+            max_files_per_trigger, schema, wire_format, dlq_path, followers,
+        )
+        self.table_path = table_path
+        # quality-gated streaming (WAP per epoch): each micro-batch is
+        # committed STAGED, audited by these checks against the staged
+        # state, and only a passing audit publishes — readers of a live
+        # tail never observe a bad epoch; a failing epoch raises, the
+        # stream stops, and on restart the same epoch re-stages (the
+        # batch id only entered the ledger if it published)
+        self.audit_checks = audit_checks
+
+    def _apply(self, tables, batch_df, batch_id) -> None:
+        (table,) = tables.values()
+        self.runner._merge_rows(table, batch_df, batch_id, audit_checks=self.audit_checks)
+
+
+class MultiTableStreamingIngest(WalTail):
     """Streaming demux: ONE WAL tail feeding N lake tables — the live
     form of cdc/router.py MultiTableReplayRunner (the reference's
-    `python . etl <tables>` shape on a continuous feed).
+    `python . etl <tables>` shape on a continuous feed), whose
+    constructor checks, routing and combined-or-per-table fan-out it
+    reuses.
 
     The streaming epoch replaces the router's LSN window: the epoch id
     is the batch id on EVERY target's ledger, so at-least-once epoch
@@ -266,8 +286,11 @@ class MultiTableStreamingIngest:
 
     The epoch is persisted once and sliced per table — one decode/scan
     per epoch regardless of table count, same single-pass argument as
-    the batch router.
+    the batch router. A Debezium feed can route by ``_table`` (the
+    connector's ``source.table``: one publication, one LSN stream).
     """
+
+    multi_table = True
 
     def __init__(
         self,
@@ -288,167 +311,33 @@ class MultiTableStreamingIngest:
         on_unrouted: str = "error",
         followers: list | None = None,
     ):
-        import os
-
-        if wire_format not in ("parquet", "debezium-json"):
-            raise ValueError(f"unknown wire_format {wire_format!r}")
-        if on_unrouted not in ("error", "ignore"):
-            raise ValueError(f"on_unrouted must be 'error'|'ignore', got {on_unrouted!r}")
-        if not tables:
-            raise ValueError("tables must name at least one target")
-        self.spark = spark
-        self.base_dir = base_dir
-        self.names = sorted(tables)
-        self.route_by = route_by
-        self.wal_path = wal_path
-        self.checkpoint_path = checkpoint_path
-        self.n_buckets = n_buckets
-        self.normalizer = normalizer
-        self.max_files_per_trigger = max_files_per_trigger
-        self.merge_mode = merge_mode
-        self.compact_min_files = compact_min_files
-        self.schema = schema
-        self.wire_format = wire_format
-        self.dlq_path = dlq_path
-        self.on_unrouted = on_unrouted
-        self.followers = list(followers) if followers else []
+        router = MultiTableReplayRunner(
+            spark, base_dir, tables, route_by, n_buckets=n_buckets,
+            normalizer=normalizer, merge_mode=merge_mode,
+            compact_min_files=compact_min_files, on_unrouted=on_unrouted,
+        )
+        super().__init__(
+            router, {n: os.path.join(base_dir, n) for n in sorted(tables)},
+            wal_path, checkpoint_path, max_files_per_trigger, schema,
+            wire_format, dlq_path, followers,
+        )
         self.unrouted_events = 0
-        # same guard as MultiTableReplayRunner: a separator or '.'/'..'
-        # component would place a "table" outside base_dir
-        bad = [
-            n
-            for n in self.names
-            if os.sep in n or not n.strip() or n.strip() in (".", "..")
-        ]
-        if bad:
-            raise ValueError(f"table names must be plain dir names, got {bad}")
-        self._paths = {n: os.path.join(base_dir, n) for n in self.names}
 
-    def bootstrap(self) -> dict[str, LakeTable]:
-        from pasar_spark.cdc.router import sweep_stale_staging
-
-        # a crashed combined epoch leaves its staging dir behind; without
-        # this a long-lived streaming deployment that never runs a batch
-        # replay over the same base_dir would leak staged epochs forever
-        sweep_stale_staging(self.base_dir)
-        return {
-            n: bootstrap_table(self.spark, p, self.n_buckets)
-            for n, p in self._paths.items()
-        }
-
-    def _apply_epoch(self, batch_df, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from pasar_spark.cdc.router import UnroutedEvents
-
-        batch_id = f"stream-{epoch_id}"
-        raw = None
-        if self.wire_format == "debezium-json":
-            from pasar_spark.cdc.debezium import debezium_rejects, from_debezium
-
-            raw = batch_df.persist()
-            if self.dlq_path is not None:
-                debezium_rejects(raw, "value").write.mode("overwrite").text(
-                    f"{self.dlq_path}/epoch={epoch_id}"
-                )
-            # _table = source.table, so route_by="_table" demuxes by the
-            # connector's own relation identity — the canonical Debezium
-            # multi-table topology (one publication, one LSN stream)
-            batch_df = from_debezium(raw, "value", include_table=True)
-        routed = batch_df.withColumn("_route", F.expr(self.route_by)).persist()
-        try:
-            counts = {
-                r["_route"]: r["n"]
-                for r in routed.groupBy("_route").agg(
-                    F.count(F.lit(1)).alias("n")
-                ).collect()
-            }
-            n_unrouted = sum(v for k, v in counts.items() if k not in self._paths)
-            if n_unrouted and self.on_unrouted == "error":
-                raise UnroutedEvents(
-                    f"epoch {epoch_id}: {n_unrouted} events route to "
-                    "unconfigured targets — add them to `tables` or pass "
-                    "on_unrouted='ignore'"
-                )
-            tables = {}
-            todo = []
-            already_applied = False
-            for name in self.names:
-                if counts.get(name, 0) == 0:
-                    continue  # empty slice: checkpoint is the position authority
-                table = LakeTable.load(self.spark, self._paths[name])
-                if table.has_batch(batch_id):
-                    already_applied = True
-                    continue  # redelivered epoch, this target already has it
-                tables[name] = table
-                todo.append(name)
-            if n_unrouted and (todo or not already_applied):
+    def _apply(self, tables, batch_df, batch_id) -> None:
+        with self.runner._routed(batch_df, batch_id) as (routed, counts, n_unrouted):
+            live = [n for n in sorted(tables) if counts.get(n, 0)]
+            todo = [n for n in live if not tables[n].has_batch(batch_id)]
+            if n_unrouted and (todo or len(todo) == len(live)):
                 # counted on first delivery: when work remains (todo), or
                 # when NO routed target has applied this epoch — which
-                # covers an epoch whose events are ALL unrouted (todo
-                # empty, nothing ever records the batch id), previously a
-                # silent drop. A redelivered fully-applied epoch (some
-                # target has the batch, nothing todo) doesn't double the
-                # count; partial redeliveries and all-unrouted epochs
-                # recount — at-least-once under crash-redelivery, same
-                # contract as the batch router's per-window counter.
+                # covers an epoch whose events are ALL unrouted (nothing
+                # ever records the batch id). A redelivered fully-applied
+                # epoch (some target has the batch, nothing todo) doesn't
+                # double the count; partial redeliveries and all-unrouted
+                # epochs recount — at-least-once under crash-redelivery,
+                # same contract as the batch router's per-window counter.
                 self.unrouted_events += n_unrouted
-            from pasar_spark.cdc.router import combined_eligible, combined_window
-
-            if todo and self.merge_mode == "mor" and combined_eligible(tables, todo):
-                # the epoch is the window: one reduce + one write for all
-                # targets, per-route max lsn recorded (no window bound)
-                combined_window(
-                    self.base_dir, tables, routed, todo, batch_id, counts,
-                    chunk_hi=None, normalizer=self.normalizer,
-                    compact_min_files=self.compact_min_files,
-                )
-            else:
-                for name in todo:
-                    table = tables[name]
-                    part = routed.where(F.col("_route") == F.lit(name)).drop("_route")
-                    part = promote_extra(part, table)
-                    table, _ = merge_batch(
-                        table, part, batch_id,
-                        normalizer=self.normalizer, mode=self.merge_mode,
-                    )
-                    if self.merge_mode == "mor":
-                        compact_buckets(table, min_files=self.compact_min_files)
-            self._refresh_followers()
-        finally:
-            routed.unpersist()
-            if raw is not None:
-                raw.unpersist()
-
-    def _refresh_followers(self) -> None:
-        # same contract as StreamingIngest followers: refresh inside the
-        # epoch, idempotent fold keyed on consumed source versions, so
-        # redelivery heals a crash between source and follower commits
-        for f in self.followers:
-            f.refresh()
-
-    def _start(self, **trigger):
-        self.bootstrap()
-        stream = open_wal_stream(
-            self.spark, self.wal_path, self.schema,
-            self.wire_format, self.max_files_per_trigger,
-        )
-        return (
-            stream.writeStream.foreachBatch(self._apply_epoch)
-            .option("checkpointLocation", self.checkpoint_path)
-            .trigger(**trigger)
-            .start()
-        )
-
-    def run_available_now(self) -> dict[str, LakeTable]:
-        """Drain everything currently in the WAL dir, then stop; returns
-        every target at its final version."""
-        q = self._start(availableNow=True)
-        q.awaitTermination()
-        self._refresh_followers()
-        return {n: LakeTable.load(self.spark, p) for n, p in self._paths.items()}
-
-    def start(self, processing_time: str = "1 second"):
-        """LIVE multi-table tail; same trigger semantics as
-        StreamingIngest.start()."""
-        return self._start(processingTime=processing_time)
+            if todo:
+                # the epoch is the window; with no window bound, each
+                # target records its observed max lsn
+                self.runner._fan_out(tables, routed, todo, batch_id, counts)

@@ -17,8 +17,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pasar_spark.cdc.merge import compact_buckets
-from pasar_spark.cdc.runner import ReplayRunner, _lsn_file_stats
+from pasar_spark.cdc.runner import ReplayRunner
 from pasar_spark.cdc.schema_evolution import EvolutionPlan, promote_extra
+from pasar_spark.cdc.sources import lsn_file_stats
 from pasar_spark.datagen import change_events, write_change_log
 
 
@@ -27,7 +28,7 @@ def test_replay_empty_wal_returns_bootstrap(spark, tmp_path):
     empty = change_events(spark, 10, n_convs=4, seed=1).where(F.lit(False))
     empty.coalesce(1).write.parquet(wal)
     # the footer reader must skip zero-row-group files instead of int(None)
-    stats = _lsn_file_stats(wal)
+    stats = lsn_file_stats(wal)
     assert stats in (None, [])
     runner = ReplayRunner(spark, str(tmp_path / "t"), n_buckets=2, chunk_size=100)
     table = runner.replay(wal)
@@ -41,7 +42,7 @@ def test_replay_mixed_empty_and_real_wal_files(spark, tmp_path):
     ev = change_events(spark, 500, n_convs=10, seed=2)
     write_change_log(ev, wal, n_files=2)
     ev.where(F.lit(False)).coalesce(1).write.mode("append").parquet(wal)
-    stats = _lsn_file_stats(wal)
+    stats = lsn_file_stats(wal)
     assert stats is not None and len(stats) >= 2  # empty file skipped
     table = ReplayRunner(spark, str(tmp_path / "t"), n_buckets=2, chunk_size=250).replay(wal)
     assert table.read().count() > 0

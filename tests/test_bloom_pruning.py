@@ -8,8 +8,8 @@ tasks (write_files options), and is consumed by Spark's row-group
 filtering when read_key pushes the key equality down. These tests prove
 the filter is physically present in every delta file's footer, that its
 membership semantics are right (present key found, absent key rejected —
-the property row-group skipping relies on), that lookups stay correct
-with blooms active, and that PASAR_PARQUET_BLOOM=0 disables the write.
+the property row-group skipping relies on), and that lookups stay
+correct with blooms active.
 
 Reference parity: pasar's Postgres target gets this from the btree
 primary-key index (reference: pasar/db/schema.sql); a lakehouse has no
@@ -163,18 +163,3 @@ def test_min_max_stats_are_inert_but_lookup_is_exact(table):
     got = table.read_key(conv_id=_conv(7), turn_idx=21).collect()
     assert len(got) == 1 and got[0].text == f"text c2 j{N_CONVS + 7}"
     assert table.read_key(conv_id="conv-not-there-xyz", turn_idx=0).count() == 0
-
-
-def test_env_knob_disables_bloom(spark, table, tmp_path, monkeypatch):
-    monkeypatch.setenv("PASAR_PARQUET_BLOOM", "0")
-    path = str(tmp_path / "nobloom")
-    t = LakeTable.create(
-        spark, path, columns=BASE_COLUMNS, key=KEY, n_buckets=1, bucket_by="conv_id"
-    )
-    df = _uniform_chunk(spark, 0).withColumn("_bucket", t.bucket_expr())
-    t = t.commit_append(
-        t.write_files(df, t.new_commit_id()), batch_id="c0", last_lsn=999
-    )
-    conv_phys = f"f{t.schema.field_by_name('conv_id').id}"
-    for f in _data_files(t):
-        assert _footer_blooms(spark, f)[conv_phys] == -1

@@ -160,6 +160,28 @@ def test_rebucket_forces_full_rewrite(spark, built):
     assert _duck_state(dest) == _live_state(t2)
 
 
+def test_unsupported_flock_is_not_reported_as_contention(spark, tmp_path, monkeypatch):
+    """Only EAGAIN/EWOULDBLOCK (BlockingIOError) means another exporter
+    holds the publish lock. A filesystem without flock (ENOLCK,
+    EOPNOTSUPP) must surface as its own error naming the lock, not as
+    the retry-later contention message."""
+    import errno
+    import fcntl
+
+    t = ReplayRunner(spark, str(tmp_path / "tbl"), n_buckets=2).bootstrap()
+
+    def no_locks(fh, op):
+        raise OSError(errno.ENOLCK, os.strerror(errno.ENOLCK))
+
+    monkeypatch.setattr(fcntl, "flock", no_locks)
+    dest = str(tmp_path / "exp")
+    with pytest.raises(OSError, match="publish lock") as exc:
+        export_snapshot(t, dest)
+    assert exc.value.errno == errno.ENOLCK
+    assert "another exporter" not in str(exc.value)
+    assert current_export_version(dest) is None
+
+
 def test_import_snapshot_bootstrap_and_resume(spark, tmp_path):
     """The CDC snapshot+position bootstrap: seed a replica from the
     export (re-sharded to a different bucket count), resume the SAME WAL

@@ -137,11 +137,45 @@ def test_jdbc_source_chunk_options(spark):
     assert src.tip_query() == "(SELECT max(lsn) AS m FROM wal.events) t"
 
 
-def test_sparse_lsn_space_jumps_gaps(spark, tmp_path):
+def _replay_row(spark, path, src):
+    t = ReplayRunner(spark, path, n_buckets=4, chunk_size=500).replay(src)
+    return [t.last_lsn], t.read()
+
+
+def _replay_patch(spark, path, src):
+    from pasar_spark.cdc.patch import PatchReplayRunner
+
+    runner = PatchReplayRunner(spark, path, n_buckets=4, chunk_size=500)
+    t = runner.replay(src)
+    return [t.last_lsn], runner.read(t)
+
+
+def _replay_router(spark, path, src):
+    from pasar_spark.cdc.router import MultiTableReplayRunner
+
+    tables = MultiTableReplayRunner(
+        spark, path, ["even", "odd"],
+        route_by="CASE WHEN turn_idx % 2 = 0 THEN 'even' ELSE 'odd' END",
+        n_buckets=4, chunk_size=500,
+    ).replay(src)
+    cols = ["conv_id", "turn_idx", "lsn"]
+    live = tables["even"].read().select(cols).unionByName(
+        tables["odd"].read().select(cols)
+    )
+    return [t.last_lsn for t in tables.values()], live
+
+
+@pytest.mark.parametrize(
+    "replay",
+    [_replay_row, _replay_patch, _replay_router],
+    ids=["row", "patch", "router"],
+)
+def test_sparse_lsn_space_jumps_gaps(spark, tmp_path, replay):
     """Real WAL positions are sparse (byte offsets, GTID gaps). The
     replay loop must stay O(data regions), never walking empty chunk
     windows one by one: a feed with events at lsn ~[0,1k) and one event
-    at lsn=10M must NOT schedule ~10M/chunk_size merge jobs."""
+    at lsn=10M must NOT schedule ~10M/chunk_size merge jobs — in every
+    ingest mode, since they share one window loop."""
     ev = change_events(spark, 1_000, n_convs=20, seed=77)
     far = (
         ev.orderBy("lsn")
@@ -158,14 +192,16 @@ def test_sparse_lsn_space_jumps_gaps(spark, tmp_path):
 
         def chunk(self, lo, hi):
             self.chunks_asked.append((lo, hi))
+            # fail fast instead of walking the 10M-lsn gap window by window
+            assert len(self.chunks_asked) <= 10, self.chunks_asked
             return super().chunk(lo, hi)
 
     src = CountingSource(feed)
-    t = ReplayRunner(spark, str(tmp_path / "t"), n_buckets=4, chunk_size=500).replay(src)
+    last_lsns, live = replay(spark, str(tmp_path / "t"), src)
     # 2 dense windows + 1 empty window that evidences the gap + 1 far window
     assert len(src.chunks_asked) <= 5, src.chunks_asked
-    assert t.last_lsn >= 10_000_000
-    assert t.read().where("lsn = 10000000").count() == 1
+    assert all(lsn >= 10_000_000 for lsn in last_lsns)
+    assert live.where("lsn = 10000000").count() == 1
     # live rows = LWW winners that are not deletes
     from pyspark.sql import Window
 
@@ -175,7 +211,7 @@ def test_sparse_lsn_space_jumps_gaps(spark, tmp_path):
         .where("rn = 1 AND op <> 'D'")
         .count()
     )
-    assert t.read().count() == expected_live
+    assert live.count() == expected_live
 
 
 def test_parquet_source_next_lsn_from_stats(spark, tmp_path):

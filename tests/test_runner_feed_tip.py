@@ -2,24 +2,26 @@
 
 from pyspark.sql import functions as F
 
-from pasar_spark.cdc.runner import ReplayRunner, _max_lsn_from_footers
+from pasar_spark.cdc.runner import ReplayRunner
+from pasar_spark.cdc.sources import ParquetDirSource, lsn_file_stats
 from pasar_spark.datagen import change_events, write_change_log
 
 
 def test_footer_stats_match_scan(spark, tmp_path):
     wal = str(tmp_path / "wal")
     write_change_log(change_events(spark, 5_000, n_convs=50, seed=11), wal, n_files=4)
-    from_footers = _max_lsn_from_footers(wal)
+    assert lsn_file_stats(wal) is not None  # tip comes from the footers
+    from_footers = ParquetDirSource(spark, wal).tip()
     from_scan = spark.read.parquet(wal).agg(F.max("lsn")).collect()[0][0]
     assert from_footers == from_scan == 4_999
 
 
 def test_footer_helper_degrades_to_none(tmp_path):
     # missing dir / no parquet files -> None (caller falls back to a scan)
-    assert _max_lsn_from_footers(str(tmp_path / "nope")) is None
+    assert lsn_file_stats(str(tmp_path / "nope")) is None
     empty = tmp_path / "empty"
     empty.mkdir()
-    assert _max_lsn_from_footers(str(empty)) is None
+    assert lsn_file_stats(str(empty)) is None
 
 
 def test_dataframe_feed_still_works(spark, tmp_path):
