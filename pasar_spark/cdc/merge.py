@@ -294,33 +294,12 @@ def compact_buckets(
     if not todo:
         return table, {"compacted_buckets": 0, "minor_compacted_buckets": 0}
 
-    key = table.manifest["key"]
-    order = table.manifest.get("resolve_order", ["ts", "lsn"])
-    payload = [c for c in table.schema.names() if c not in set(key) | set(order)]
-    # Patch tables fold with the PER-COLUMN resolve (their stored form is
-    # closed under it); whole-row lww_reduce here would pick the newest
-    # stored row and discard older rows' still-winning column structs.
-    is_patch = table.manifest.get("conflict") == "patch"
-    if is_patch:
-        from pasar_spark.cdc.patch import resolve_stored
-
-        patch_cols = [
-            c[len("_pv_"):] for c in table.schema.names() if c.startswith("_pv_")
-        ]
-
-        def _fold(df):
-            return resolve_stored(df, key, patch_cols)
-    else:
-
-        def _fold(df):
-            return lww_reduce(df, key=key, order=order, payload=payload)
-
     major, minor = [], []
     for b in todo:
         if not table.bucket_entries(b, kind="delta"):
             # nothing to fold — e.g. an explicitly-passed bucket whose
             # entries all pre-date the 'kind' field (default to base);
-            # the minor path would otherwise lww_reduce(None) and crash
+            # the minor path would otherwise resolve None and crash
             continue
         base_rows = sum(e.get("rows", 0) for e in table.bucket_entries(b, kind="base"))
         delta_rows = sum(e.get("rows", 0) for e in table.bucket_entries(b, kind="delta"))
@@ -333,9 +312,9 @@ def compact_buckets(
 
     if minor:
         entries = [e for b in minor for e in table.bucket_entries(b, kind="delta")]
-        deltas = table._read_entries(entries)
-        folded = _fold(deltas)
-        folded = folded.select(*table.schema.names()).withColumn(
+        # the table's own conflict rule folds the deltas (patch tables'
+        # stored form is closed under their per-column resolve)
+        folded = table._resolve(table._read_entries(entries)).withColumn(
             "_bucket", table.bucket_expr()
         )
         commit_id = table.new_commit_id()

@@ -192,7 +192,10 @@ class PatchReplayRunner:
                     "whole-row-LWW layout; use cdc.runner.ReplayRunner"
                 )
             return t
-        t = LakeTable.create(
+        # the conflict rule is in the FIRST manifest, so every reader
+        # dispatches on it and row-mode tools refuse politely — and no
+        # crash can leave a row-mode table behind at this path
+        return LakeTable.create(
             self.spark,
             self.table_path,
             columns=stored_columns(self.key, self.payload),
@@ -200,22 +203,14 @@ class PatchReplayRunner:
             n_buckets=self.n_buckets,
             bucket_by=self.key[0][0],
             name="transcripts-patch",
+            conflict="patch",
         )
-        # mark the conflict rule in the manifest so any future reader can
-        # dispatch (and so row-mode tools refuse politely)
-        import json
-
-        m = json.loads(json.dumps(t.manifest))
-        m["conflict"] = "patch"
-        return t._commit(m, tag="conflict-patch")
 
     def read(self, table: LakeTable | None = None) -> DataFrame:
-        """Resolved, materialized user view of the patch table."""
+        """Resolved, materialized user view of the patch table
+        (``table.read`` already resolves it per column)."""
         table = table or LakeTable.load(self.spark, self.table_path)
-        names = payload_names(table)
-        key = table.manifest["key"]
-        stored = table.read(include_tombstones=True)
-        return materialize(resolve_stored(stored, key, names), names)
+        return materialize(table.read(include_tombstones=True), payload_names(table))
 
     # ------------------------------------------------------------------
     def replay(self, events, max_events: int | None = None) -> LakeTable:

@@ -69,22 +69,10 @@ class EvolutionPlan:
                     schema = schema.widen_column(op[1], op[2])
                 else:
                     raise ValueError(f"unknown evolution op {op!r}")
-            import json as _json
-
-            m = _json.loads(_json.dumps(table.manifest))
-            m["schemas"][str(schema.schema_id)] = schema.to_json()
-            m["current_schema_id"] = schema.schema_id
-            for old, new in renames:
-                # logical references + the feed-name alias follow a rename
-                m["key"] = [new if k == old else k for k in m["key"]]
-                if m.get("bucket_by") == old:
-                    m["bucket_by"] = new
-                m["resolve_order"] = [
-                    new if c == old else c for c in m.get("resolve_order", [])
-                ]
-                m.setdefault("feed_aliases", {})[old] = new
-            m["ledger"]["feed_schema_ver"] = applied
-            table = table._commit(m, tag=f"feed-schema-ver-{applied}")
+            table = table.evolve(
+                schema, renames, tag=f"feed-schema-ver-{applied}",
+                feed_schema_ver=applied,
+            )
         return table
 
 

@@ -419,11 +419,8 @@ def import_snapshot(
         key=m["key"],
         n_buckets=n_buckets or m["n_buckets"],
         bucket_by=m["bucket_by"],
+        resolve_order=m["resolve_order"],
     )
-    if m["resolve_order"] != t.manifest["resolve_order"]:
-        mm = json.loads(json.dumps(t.manifest))
-        mm["resolve_order"] = m["resolve_order"]
-        t = t._commit(mm)
     seed = read_export(spark, dest, version).withColumn("op", F.lit("U"))
     del_files = [
         os.path.join(dest, f"v{m['source_version']}", rel)

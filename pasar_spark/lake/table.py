@@ -32,6 +32,8 @@ and replay layers (cdc/) only touch the narrow read/commit API below.
 
 from __future__ import annotations
 
+import functools
+import itertools
 import json
 import os
 import uuid
@@ -148,6 +150,10 @@ def _entry_may_contain(entry: dict, phys_col: str, value) -> bool:
         return True
 
 
+def _union(parts: list[DataFrame]) -> DataFrame | None:
+    return functools.reduce(DataFrame.unionByName, parts) if parts else None
+
+
 class CommitConflict(Exception):
     pass
 
@@ -179,7 +185,15 @@ class LakeTable:
         n_buckets: int = 16,
         bucket_by: str | None = None,
         name: str = "transcripts",
+        resolve_order: list[str] | None = None,
+        conflict: str | None = None,
     ) -> "LakeTable":
+        """Create a table at v1. ``resolve_order`` (default ``[ts, lsn]``)
+        and ``conflict`` (None = row LWW, ``'patch'`` = cdc/patch.py) land
+        in the first manifest, so no crash can leave a table that exists
+        under the wrong rule."""
+        if conflict not in (None, "patch"):
+            raise ValueError(f"unknown conflict rule {conflict!r}")
         os.makedirs(os.path.join(path, "metadata"), exist_ok=False)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         schema = TableSchema.from_pairs(columns)
@@ -188,7 +202,7 @@ class LakeTable:
             "name": name,
             "key": key,
             "bucket_by": bucket_by or key[0],
-            "resolve_order": ["ts", "lsn"],
+            "resolve_order": list(resolve_order or ["ts", "lsn"]),
             "n_buckets": n_buckets,
             "current_schema_id": 0,
             "schemas": {"0": schema.to_json()},
@@ -207,6 +221,8 @@ class LakeTable:
             "tags": {},
             "parent_version": 0,
         }
+        if conflict:
+            manifest["conflict"] = conflict
         cls._write_manifest(path, 1, manifest)
         cls._flip_current(path, 1)
         return cls(spark, path, manifest, 1)
@@ -225,19 +241,13 @@ class LakeTable:
         if tag is not None:
             if version is not None:
                 raise ValueError("pass version OR tag, not both")
-            with open(os.path.join(path, "metadata", CURRENT)) as fh:
-                cur = int(fh.read().strip())
-            with open(cls._manifest_path(path, cur)) as fh:
-                tags = json.load(fh)["tags"]
+            tags = cls._read_manifest(path, cls._current(path))["tags"]
             if tag not in tags:
                 raise KeyError(f"unknown tag {tag!r}; have {sorted(tags)}")
             version = tags[tag]
         if version is None:
-            with open(os.path.join(path, "metadata", CURRENT)) as fh:
-                version = int(fh.read().strip())
-        with open(cls._manifest_path(path, version)) as fh:
-            manifest = json.load(fh)
-        return cls(spark, path, manifest, version)
+            version = cls._current(path)
+        return cls(spark, path, cls._read_manifest(path, version), version)
 
     @staticmethod
     def exists(path: str) -> bool:
@@ -253,33 +263,44 @@ class LakeTable:
     def _schema_at(self, schema_id: int) -> TableSchema:
         return TableSchema.from_json(self.manifest["schemas"][str(schema_id)])
 
-    def _evolve(self, new_schema: TableSchema, tag: str | None = None) -> "LakeTable":
-        m = json.loads(json.dumps(self.manifest))
-        m["schemas"][str(new_schema.schema_id)] = new_schema.to_json()
-        m["current_schema_id"] = new_schema.schema_id
-        return self._commit(m, tag=tag)
-
-    def add_column(self, name: str, dtype: str) -> "LakeTable":
-        return self._evolve(self.schema.add_column(name, dtype), tag=f"add-{name}")
-
-    def rename_column(self, old: str, new: str) -> "LakeTable":
-        schema = self.schema.rename_column(old, new)
+    def evolve(
+        self, schema: TableSchema, renames=(), tag: str | None = None,
+        feed_schema_ver: int | None = None,
+    ) -> "LakeTable":
+        """Make ``schema`` current in one metadata-only commit. ``renames``
+        ((old, new) pairs already applied to ``schema``) carry the
+        manifest's logical references along; ``feed_schema_ver`` records
+        the feed version this DDL implements in the same commit."""
         m = json.loads(json.dumps(self.manifest))
         m["schemas"][str(schema.schema_id)] = schema.to_json()
         m["current_schema_id"] = schema.schema_id
-        # logical references in the manifest follow the rename (key /
-        # bucketing / LWW order may name the renamed column)
-        m["key"] = [new if k == old else k for k in m["key"]]
-        if m.get("bucket_by") == old:
-            m["bucket_by"] = new
-        m["resolve_order"] = [new if c == old else c for c in m.get("resolve_order", [])]
-        # feed events keep sending the OLD name; promote_extra renames
-        # them on ingest (never synthesizes a key/order column from JSON)
-        m.setdefault("feed_aliases", {})[old] = new
-        return self._commit(m, tag=f"rename-{old}-{new}")
+        for old, new in renames:
+            # key / bucketing / LWW order may name the renamed column
+            m["key"] = [new if k == old else k for k in m["key"]]
+            if m.get("bucket_by") == old:
+                m["bucket_by"] = new
+            m["resolve_order"] = [
+                new if c == old else c for c in m.get("resolve_order", [])
+            ]
+            # feed events keep sending the OLD name; promote_extra renames
+            # them on ingest (never synthesizes a key/order column from JSON)
+            m.setdefault("feed_aliases", {})[old] = new
+        if feed_schema_ver is not None:
+            m["ledger"]["feed_schema_ver"] = feed_schema_ver
+        return self._commit(m, tag=tag)
+
+    def add_column(self, name: str, dtype: str) -> "LakeTable":
+        return self.evolve(self.schema.add_column(name, dtype), tag=f"add-{name}")
+
+    def rename_column(self, old: str, new: str) -> "LakeTable":
+        return self.evolve(
+            self.schema.rename_column(old, new),
+            renames=[(old, new)],
+            tag=f"rename-{old}-{new}",
+        )
 
     def widen_column(self, name: str, new_type: str) -> "LakeTable":
-        return self._evolve(self.schema.widen_column(name, new_type), tag=f"widen-{name}")
+        return self.evolve(self.schema.widen_column(name, new_type), tag=f"widen-{name}")
 
     # ----------------------------------------------------------------- read
     def bucket_expr(self, col: str | None = None):
@@ -325,36 +346,37 @@ class LakeTable:
         lazy = self._read_files(
             [b for b in wanted if b in unresolved], key_equals
         )
-        if lazy is not None and self.manifest.get("conflict") == "patch":
-            # patch tables resolve PER COLUMN (cdc/patch.py); a whole-row
-            # reduce here would drop older rows still holding the winning
-            # value for some column. Resolution is the patch layer's job.
-            from pasar_spark.cdc.patch import resolve_stored
-
-            names = [c[len("_pv_"):] for c in cur.names() if c.startswith("_pv_")]
-            lazy = resolve_stored(lazy, self.manifest["key"], names)
-            lazy = lazy.select(*cur.names())
-        elif lazy is not None:
-            from pasar_spark.cdc.lww import lww_reduce  # lazy: avoids cycle
-
-            key = self.manifest["key"]
-            order = self.manifest.get("resolve_order", ["ts", "lsn"])
-            payload = [c for c in cur.names() if c not in set(key) | set(order)]
-            lazy = lww_reduce(lazy, key=key, order=order, payload=payload)
-            # restore declared column order after reduce
-            lazy = lazy.select(*cur.names())
-        parts = [p for p in (plain, lazy) if p is not None]
-        if not parts:
+        if lazy is not None:
+            lazy = self._resolve(lazy)
+        out = _union([p for p in (plain, lazy) if p is not None])
+        if out is None:
             out = self.spark.createDataFrame([], cur.logical_struct())
-        else:
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
         if not include_tombstones and "_tombstone" in cur.names():
             out = out.where(
                 (F.col("_tombstone").isNull()) | (~F.col("_tombstone"))
             ).drop("_tombstone")
         return out
+
+    def _resolve(self, df: DataFrame) -> DataFrame:
+        """One row per key under the table's conflict rule, in declared
+        column order — the one place stored rows are resolved (MoR reads,
+        the changes() diff, compaction folds). Patch tables resolve PER
+        COLUMN (cdc/patch.py): a whole-row reduce would drop older rows
+        still holding the winning value for some column. Row tables keep
+        the max over ``resolve_order``."""
+        names = self.schema.names()
+        key = self.manifest["key"]
+        if self.manifest.get("conflict") == "patch":
+            from pasar_spark.cdc.patch import payload_names, resolve_stored
+
+            out = resolve_stored(df, key, payload_names(self))
+        else:
+            from pasar_spark.cdc.lww import lww_reduce  # lazy: avoids cycle
+
+            order = self.manifest.get("resolve_order", ["ts", "lsn"])
+            payload = [c for c in names if c not in set(key) | set(order)]
+            out = lww_reduce(df, key=key, order=order, payload=payload)
+        return out.select(*names)
 
     def bucket_of(self, value) -> int:
         """The bucket a bucket_by value lands in — evaluated through the
@@ -455,12 +477,7 @@ class LakeTable:
                 for f in cur.fields
             ]
             parts.append(raw.select(*cols))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union(parts)
 
     # ---------------------------------------------------------------- write
     def write_files(
@@ -569,43 +586,24 @@ class LakeTable:
             for b in replaced_buckets
         }
 
-        def build(base: "LakeTable") -> dict:
-            m = json.loads(json.dumps(base.manifest))
-            unresolved = set(m.get("unresolved", []))
-            for b in replaced_buckets:
-                b = str(b)
+        def edit(buckets: dict, unresolved: set) -> None:
+            for b in map(str, replaced_buckets):
                 survivors = [
-                    e
-                    for e in m["buckets"].get(b, [])
-                    if e["path"] not in covered[b]
+                    e for e in buckets.get(b, []) if e["path"] not in covered[b]
                 ]
                 if survivors:
-                    m["buckets"][b] = survivors
+                    buckets[b] = survivors
                     unresolved.add(b)
                 else:
-                    m["buckets"].pop(b, None)
+                    buckets.pop(b, None)
                     unresolved.discard(b)
             for b, entries in new_files.items():
-                for e in entries:
-                    e["kind"] = "base"  # fully LWW-resolved rewrite
-                    e["batch"] = batch_id
-                m["buckets"][b] = entries + m["buckets"].get(b, [])
-            m["unresolved"] = sorted(unresolved)
-            led = m["ledger"]
-            if batch_id in led["batch_ids"]:
-                raise CommitConflict(f"batch {batch_id} already committed")
-            led["batch_ids"] = (led["batch_ids"] + [batch_id])[-256:]
-            if last_lsn is not None:
-                led["last_lsn"] = max(led["last_lsn"], last_lsn)
-            sp = led.setdefault("source_partitions", {})
-            for pt, off in (partition_offsets or {}).items():
-                sp[str(pt)] = max(sp.get(str(pt), -1), int(off))
-            for k, v in (metrics_delta or {}).items():
-                m["metrics"][k] = m["metrics"].get(k, 0) + v
-            return m
+                buckets[b] = entries + buckets.get(b, [])
 
-        return self._commit_rebasing(
-            build, batch_id, tag or f"batch-{batch_id}", staged_name=staged_name
+        # 'base': the new files are a fully LWW-resolved rewrite
+        return self._commit_batch(
+            edit, new_files, "base", batch_id, tag, last_lsn, metrics_delta,
+            partition_offsets, staged_name,
         )
 
     def commit_append(
@@ -635,32 +633,15 @@ class LakeTable:
         monotone max-merge per partition, so rebases and out-of-order
         committers can never move a checkpoint backwards."""
 
-        def build(base: "LakeTable") -> dict:
-            m = json.loads(json.dumps(base.manifest))
-            unresolved = set(m.get("unresolved", []))
+        def edit(buckets: dict, unresolved: set) -> None:
             for b, entries in new_files.items():
-                for e in entries:
-                    e["kind"] = "delta"  # may hold >1 version per key vs base
-                    e["batch"] = batch_id
-                m["buckets"].setdefault(b, [])
-                m["buckets"][b] = m["buckets"][b] + entries
+                buckets[b] = buckets.get(b, []) + entries
                 unresolved.add(b)
-            m["unresolved"] = sorted(unresolved)
-            led = m["ledger"]
-            if batch_id in led["batch_ids"]:
-                raise CommitConflict(f"batch {batch_id} already committed")
-            led["batch_ids"] = (led["batch_ids"] + [batch_id])[-256:]
-            if last_lsn is not None:
-                led["last_lsn"] = max(led["last_lsn"], last_lsn)
-            sp = led.setdefault("source_partitions", {})
-            for p, off in (partition_offsets or {}).items():
-                sp[str(p)] = max(sp.get(str(p), -1), int(off))
-            for k, v in (metrics_delta or {}).items():
-                m["metrics"][k] = m["metrics"].get(k, 0) + v
-            return m
 
-        return self._commit_rebasing(
-            build, batch_id, tag or f"batch-{batch_id}", staged_name=staged_name
+        # 'delta': may hold >1 version per key vs the bucket's base
+        return self._commit_batch(
+            edit, new_files, "delta", batch_id, tag, last_lsn, metrics_delta,
+            partition_offsets, staged_name,
         )
 
     def commit_replace_deltas(
@@ -692,14 +673,9 @@ class LakeTable:
             for b in new_files
         }
 
-        def build(base: "LakeTable") -> dict:
-            m = json.loads(json.dumps(base.manifest))
-            unresolved = set(m.get("unresolved", []))
+        def edit(buckets: dict, unresolved: set) -> None:
             for b, entries in new_files.items():
-                for e in entries:
-                    e["kind"] = "delta"
-                    e["batch"] = batch_id
-                cur = m["buckets"].get(b, [])
+                cur = buckets.get(b, [])
                 bases = [e for e in cur if e.get("kind", "base") == "base"]
                 newer = [
                     e
@@ -707,18 +683,50 @@ class LakeTable:
                     if e.get("kind", "base") == "delta"
                     and e["path"] not in folded[b]
                 ]
-                m["buckets"][b] = bases + entries + newer
+                buckets[b] = bases + entries + newer
                 unresolved.add(b)
+
+        return self._commit_batch(
+            edit, new_files, "delta", batch_id, tag, metrics_delta=metrics_delta
+        )
+
+    def _commit_batch(
+        self, edit, new_files: dict, kind: str, batch_id: str, tag: str | None,
+        last_lsn=None, metrics_delta=None, partition_offsets=None, staged_name=None,
+    ) -> "LakeTable":
+        """The one ledger-advancing commit under the three commit_* kinds.
+        ``new_files`` entries are stamped ``kind`` and ``batch_id``;
+        ``edit(buckets, unresolved)`` rewrites a copy of the base
+        manifest's bucket map and unresolved set, and the ledger advances
+        in the same snapshot: batch-id dedup over a 256-id window,
+        monotone max of ``last_lsn`` and of each source partition's
+        offset, and the metrics add. ``edit`` re-runs on every rebase, so
+        it must be a pure function of the base it is handed."""
+        for entries in new_files.values():
+            for e in entries:
+                e["kind"], e["batch"] = kind, batch_id
+
+        def build(base: "LakeTable") -> dict:
+            m = json.loads(json.dumps(base.manifest))
+            unresolved = set(m.get("unresolved", []))
+            edit(m["buckets"], unresolved)
             m["unresolved"] = sorted(unresolved)
             led = m["ledger"]
             if batch_id in led["batch_ids"]:
                 raise CommitConflict(f"batch {batch_id} already committed")
             led["batch_ids"] = (led["batch_ids"] + [batch_id])[-256:]
+            if last_lsn is not None:
+                led["last_lsn"] = max(led["last_lsn"], last_lsn)
+            sp = led.setdefault("source_partitions", {})
+            for p, off in (partition_offsets or {}).items():
+                sp[str(p)] = max(sp.get(str(p), -1), int(off))
             for k, v in (metrics_delta or {}).items():
                 m["metrics"][k] = m["metrics"].get(k, 0) + v
             return m
 
-        return self._commit_rebasing(build, batch_id, tag or f"batch-{batch_id}")
+        return self._commit_rebasing(
+            build, batch_id, tag or f"batch-{batch_id}", staged_name=staged_name
+        )
 
     def bucket_entries(self, bucket: str, kind: str | None = None) -> list[dict]:
         entries = self.manifest["buckets"].get(str(bucket), [])
@@ -792,9 +800,7 @@ class LakeTable:
         to = self if to_version is None or to_version == self.version else (
             LakeTable.load(self.spark, self.path, version=to_version)
         )
-        frm_manifest = LakeTable.load(
-            self.spark, self.path, version=from_version
-        ).manifest
+        frm_manifest = self._read_manifest(self.path, from_version)
 
         def _sig(entries: list[dict]) -> tuple:
             return tuple(e["path"] for e in entries)
@@ -835,20 +841,13 @@ class LakeTable:
             ]
         )
 
-        from pasar_spark.cdc.lww import lww_reduce  # lazy: avoids cycle
-
         def _state(entries: list[dict], buckets_read, manifest: dict) -> DataFrame:
             df = to._read_entries(entries)
             if df is None:
                 df = self.spark.createDataFrame([], cur.logical_struct())
-            # reduce: identity on resolved buckets, the MoR resolve on
-            # unresolved ones
-            if is_patch:
-                from pasar_spark.cdc.patch import resolve_stored
-
-                return resolve_stored(df, key, pv_names).select(*cur.names())
-            # resolved-bucket fast path: a copy-on-write/compacted bucket
-            # already holds exactly one row per key, so the reduce is the
+            # resolved-bucket fast path: a bucket leaves 'unresolved' only
+            # through a commit_merge of a fully resolved rewrite, so it
+            # already holds exactly one row per key and the reduce is the
             # identity — skipping it removes one full exchange + aggregate
             # per side (driver-side decision from the owning manifest;
             # the guard is per SIDE, so a mixed range still reduces)
@@ -856,10 +855,8 @@ class LakeTable:
             if buckets_read is not None and not (
                 set(buckets_read) & unresolved_here
             ):
-                return df.select(*key, *order, *payload, "_tombstone")
-            return lww_reduce(
-                df, key=key, order=order, payload=payload + ["_tombstone"]
-            )
+                return df
+            return to._resolve(df)
 
         a_read = changed if changed is not None else list(a_buckets)
         b_read = changed if changed is not None else list(b_buckets)
@@ -976,8 +973,7 @@ class LakeTable:
         ledger rolls back with the data, a subsequent replay resumes from
         the rolled-back ``last_lsn`` and re-applies later chunks
         exactly-once (their batch ids are no longer in the ledger)."""
-        target = LakeTable.load(self.spark, self.path, version=version)
-        m = json.loads(json.dumps(target.manifest))
+        m = self._read_manifest(self.path, version)
         return self._commit(m, tag=f"rollback-to-v{version}")
 
     def expire_snapshots(
@@ -1014,7 +1010,6 @@ class LakeTable:
         """
         import time as _time
 
-        meta = os.path.join(self.path, "metadata")
         # versions whose STAGED pointer this call TTL-drops: their
         # publish window provably ENDED (the pointer landed — manifests
         # are written before pointers — and then aged past the TTL), so
@@ -1030,38 +1025,23 @@ class LakeTable:
                         ttl_dropped.add(sv)
                 except FileNotFoundError:
                     pass  # published/discarded concurrently
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(meta)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        versions = self._versions(self.path)
         vset = set(versions)
         # keep the newest keep_last snapshots ON the CURRENT chain —
         # walked via parent_version, not taken by number, so orphaned
         # forks (lost commit races) and dropped stages never displace
         # real history from the retention window
-        try:
-            with open(os.path.join(meta, CURRENT)) as fh:
-                head = int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
-            head = self.version
-        keep = {self.version}
-        v = head
-        for _ in range(max(keep_last, 1)):
-            keep.add(v)
-            if v not in vset:
-                break
-            with open(self._manifest_path(self.path, v)) as fh:
-                v = json.load(fh)["parent_version"]
-            if v not in vset:
-                break
+        head = self._current(self.path, default=self.version)
+        keep = {self.version, head}
+        chain = self._ancestors(self.path, head)
+        keep.update(v for v, _ in itertools.islice(chain, max(keep_last, 1)))
         # staged (unpublished) snapshots are live by definition: keep
         # each staged head and its parent chain down to a kept version
-        for v in self.staged_refs().values():
-            while v not in keep and v in set(versions):
+        for sv in self.staged_refs().values():
+            for v, _ in self._ancestors(self.path, sv):
+                if v in keep:
+                    break
                 keep.add(v)
-                with open(self._manifest_path(self.path, v)) as fh:
-                    v = json.load(fh)["parent_version"]
         # min_age_sec guards IN-FLIGHT MANIFESTS too, not just data
         # files — but only those numbered PAST the current head: a
         # writer links its manifest before flipping CURRENT (and a stage
@@ -1077,11 +1057,10 @@ class LakeTable:
         # publish window by construction — reclaim regardless of mtime
         exempt: set[int] = set()
         for sv in ttl_dropped:
-            v = sv
-            while v in vset and v > head and v not in exempt and v not in keep:
+            for v, _ in self._ancestors(self.path, sv):
+                if v not in vset or v <= head or v in exempt or v in keep:
+                    break
                 exempt.add(v)
-                with open(self._manifest_path(self.path, v)) as fh:
-                    v = json.load(fh)["parent_version"]
         now = _time.time()
         for v in versions:
             if v in keep or v <= head or v in exempt:
@@ -1094,9 +1073,7 @@ class LakeTable:
                 keep.add(v)
         referenced: set[str] = set()
         for v in keep:
-            with open(self._manifest_path(self.path, v)) as fh:
-                man = json.load(fh)
-            for entries in man["buckets"].values():
+            for entries in self._read_manifest(self.path, v)["buckets"].values():
                 referenced.update(e["path"] for e in entries)
 
         deleted_files = 0
@@ -1210,12 +1187,6 @@ class LakeTable:
                     out[f[len("STAGED-"):]] = int(fh.read().strip())
         return out
 
-    @classmethod
-    def load_staged(cls, spark: SparkSession, path: str, name: str) -> "LakeTable":
-        """Handle at a staged snapshot's head — what audits read."""
-        with open(cls._staged_pointer(path, name)) as fh:
-            return cls.load(spark, path, version=int(fh.read().strip()))
-
     def publish_staged(self, name: str) -> "LakeTable":
         """Atomically expose a staged snapshot to every reader —
         fast-forward only: the staged head's parent chain must reach the
@@ -1225,16 +1196,12 @@ class LakeTable:
         so a lost publish race can never double-apply a chunk)."""
         with open(self._staged_pointer(self.path, name)) as fh:
             head_v = int(fh.read().strip())
-        cur = LakeTable.load(self.spark, self.path)
-        walk = LakeTable.load(self.spark, self.path, version=head_v).manifest
-        while walk["parent_version"] > cur.version:
-            with open(self._manifest_path(self.path, walk["parent_version"])) as fh:
-                walk = json.load(fh)
-        if walk["parent_version"] != cur.version:
+        cur = self._current(self.path)
+        if not self._chain_reaches(self.path, head_v, cur):
             raise CommitConflict(
-                f"staged snapshot {name!r} (v{head_v}) is stale: its base "
-                f"v{walk['parent_version']} is behind CURRENT v{cur.version}"
-                " — discard and re-stage on the new base"
+                f"staged snapshot {name!r} (v{head_v}) is stale: its chain "
+                f"does not reach CURRENT v{cur} — discard and re-stage on "
+                "the new base"
             )
         # The staleness walk above is only a fast path: a main commit can
         # land between it and the flip. The chain-aware flip is the real
@@ -1243,10 +1210,9 @@ class LakeTable:
         # silently no-op while we report 'published'. On refusal the
         # STAGED pointer is LEFT IN PLACE and the caller re-stages.
         if not self._flip_current(self.path, head_v):
-            fresh = LakeTable.load(self.spark, self.path)
             raise CommitConflict(
                 f"staged snapshot {name!r} (v{head_v}) lost the publish "
-                f"race: CURRENT moved to v{fresh.version} mid-publish — "
+                f"race: CURRENT moved to v{self._current(self.path)} mid-publish — "
                 "discard and re-stage on the new base"
             )
         os.remove(self._staged_pointer(self.path, name))
@@ -1259,15 +1225,7 @@ class LakeTable:
         os.remove(self._staged_pointer(self.path, name))
 
     def _max_version(self) -> int:
-        meta = os.path.join(self.path, "metadata")
-        return max(
-            (
-                int(f[1:-5])
-                for f in os.listdir(meta)
-                if f.startswith("v") and f.endswith(".json")
-            ),
-            default=0,
-        )
+        return max(self._versions(self.path), default=0)
 
     # ------------------------------------------------------------ internals
     def _roll_forward(self) -> "LakeTable":
@@ -1287,15 +1245,11 @@ class LakeTable:
         while True:
             cur = LakeTable.load(self.spark, self.path)
             child = None
-            for v in range(cur.version + 1, self._max_version() + 1):
-                p = self._manifest_path(self.path, v)
-                if not os.path.exists(p):
+            for v in self._versions(self.path):
+                if v <= cur.version:
                     continue
-                with open(p) as fh:
-                    m = json.load(fh)
-                if m.get("staged"):
-                    continue
-                if m["parent_version"] == cur.version:
+                m = self._read_manifest(self.path, v)
+                if not m.get("staged") and m["parent_version"] == cur.version:
                     child = v
                     break
             if child is None:
@@ -1416,6 +1370,46 @@ class LakeTable:
         return os.path.join(path, "metadata", f"v{version:08d}.json")
 
     @staticmethod
+    def _read_manifest(path: str, version: int) -> dict:
+        with open(LakeTable._manifest_path(path, version)) as fh:
+            return json.load(fh)
+
+    @staticmethod
+    def _current(path: str, default: int | None = None) -> int:
+        """The version CURRENT names; ``default`` when the pointer is
+        missing or unparseable (None: raise)."""
+        try:
+            with open(os.path.join(path, "metadata", CURRENT)) as fh:
+                return int(fh.read().strip())
+        except (FileNotFoundError, ValueError):
+            if default is None:
+                raise
+            return default
+
+    @staticmethod
+    def _versions(path: str) -> list[int]:
+        """Every manifest version on disk, ascending."""
+        return sorted(
+            int(f[1:-5])
+            for f in os.listdir(os.path.join(path, "metadata"))
+            if f.startswith("v") and f.endswith(".json")
+        )
+
+    @staticmethod
+    def _ancestors(path: str, version: int):
+        """Yield (version, manifest) down the parent_version chain from
+        ``version`` — the one parent walk. Ends after the creation
+        snapshot (parent 0) or at the first manifest no longer on disk
+        (expired); parent versions strictly decrease, so it terminates."""
+        while version > 0:
+            try:
+                m = LakeTable._read_manifest(path, version)
+            except FileNotFoundError:
+                return
+            yield version, m
+            version = m["parent_version"]
+
+    @staticmethod
     def _write_manifest(path: str, version: int, manifest: dict) -> None:
         target = LakeTable._manifest_path(path, version)
         # Write the full content to a temp file, then CLAIM the version
@@ -1437,26 +1431,13 @@ class LakeTable:
     def _chain_reaches(path: str, version: int, ancestor: int) -> bool:
         """True iff walking parent_version links down from ``version``
         lands exactly on ``ancestor`` (0 = table creation reaches all).
-        Parent versions strictly decrease, so this terminates."""
-        v = version
-        while v > ancestor:
-            p = LakeTable._manifest_path(path, v)
-            if not os.path.exists(p):
-                return False
-            with open(p) as fh:
-                v = json.load(fh)["parent_version"]
-        return v == ancestor
-
-    @staticmethod
-    def _on_current_chain(path: str, version: int) -> bool:
-        """True iff ``version`` is an ancestor-or-self of CURRENT — i.e.
-        the commit is part of the acknowledged history, not orphaned."""
-        try:
-            with open(os.path.join(path, "metadata", CURRENT)) as fh:
-                cur = int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
-            return False
-        return cur >= version and LakeTable._chain_reaches(path, cur, version)
+        A missing manifest on the way breaks the chain."""
+        if version <= ancestor:
+            return version == ancestor
+        for _, m in LakeTable._ancestors(path, version):
+            if m["parent_version"] <= ancestor:
+                return m["parent_version"] == ancestor
+        return False
 
     @staticmethod
     def _flip_current(path: str, version: int) -> bool:
@@ -1491,11 +1472,7 @@ class LakeTable:
         with open(lock_path, "w") as lock:
             fcntl.flock(lock, fcntl.LOCK_EX)
             try:
-                try:
-                    with open(cur_path) as fh:
-                        cur = int(fh.read().strip())
-                except (FileNotFoundError, ValueError):
-                    cur = 0
+                cur = LakeTable._current(path, default=0)
                 if cur >= version:
                     return LakeTable._chain_reaches(path, cur, version)
                 if not LakeTable._chain_reaches(path, version, cur):
@@ -1511,18 +1488,13 @@ class LakeTable:
                 fcntl.flock(lock, fcntl.LOCK_UN)
 
     def history(self) -> list[dict]:
-        out = []
-        meta = os.path.join(self.path, "metadata")
-        for f in sorted(os.listdir(meta)):
-            if f.startswith("v") and f.endswith(".json"):
-                with open(os.path.join(meta, f)) as fh:
-                    m = json.load(fh)
-                out.append(
-                    {
-                        "version": m["version"],
-                        "tags": m["tags"],
-                        "last_lsn": m["ledger"]["last_lsn"],
-                        "metrics": m["metrics"],
-                    }
-                )
-        return out
+        manifests = (self._read_manifest(self.path, v) for v in self._versions(self.path))
+        return [
+            {
+                "version": m["version"],
+                "tags": m["tags"],
+                "last_lsn": m["ledger"]["last_lsn"],
+                "metrics": m["metrics"],
+            }
+            for m in manifests
+        ]

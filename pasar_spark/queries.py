@@ -135,8 +135,10 @@ def spread(df: DataFrame, *keys: str, min_bytes: int = 0) -> DataFrame:
         try:
             size = _os.path.getsize(p)
         except OSError:
-            size = 0
+            # unknown size: count one split, and stop trusting the byte
+            # total — it would undercount and skip a needed fan-out
             splits += 1
+            min_bytes = 0
         else:
             total_bytes += size
             splits += max(1, -(-size // max_bytes))
@@ -395,13 +397,14 @@ def cdc_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cdc_duration_eras",
     """
     WITH expo AS (
-      SELECT o_custkey AS person_id, c_nationkey AS leaf_concept,
+      SELECT o_custkey AS person_id, c_nationkey AS leaf_concept, o_orderkey,
              CAST(o_orderdate AS TIMESTAMP) AS start_ts,
              CAST(o_orderdate AS TIMESTAMP)
                + ((o_orderkey % 7) + 1) * INTERVAL 1 DAY AS end_ts
       FROM orders JOIN customer ON o_custkey = c_custkey),
     rolled AS (
-      SELECT e.person_id, con.concept_name AS ingredient, e.start_ts, e.end_ts
+      SELECT e.person_id, con.concept_name AS ingredient, e.start_ts, e.end_ts,
+             e.o_orderkey
       FROM expo e
       JOIN (SELECT n_nationkey AS descendant_id,
                    n_regionkey + 100 AS ancestor_id FROM nation) ca
@@ -409,17 +412,19 @@ def cdc_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN (SELECT r_regionkey + 100 AS concept_id,
                    r_name AS concept_name FROM region) con
         ON ca.ancestor_id = con.concept_id),
+    -- o_orderkey: both windows must order tied (start, end) rows alike,
+    -- or one era splits into two overlapping ones
     flagged AS (
-      SELECT person_id, ingredient, start_ts, end_ts,
+      SELECT person_id, ingredient, start_ts, end_ts, o_orderkey,
              CASE WHEN prev_max IS NULL
                        OR start_ts > prev_max + INTERVAL 30 DAY THEN 1 ELSE 0 END AS ni
       FROM (SELECT *, max(end_ts) OVER (PARTITION BY person_id, ingredient
-                     ORDER BY start_ts, end_ts
+                     ORDER BY start_ts, end_ts, o_orderkey
                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max
             FROM rolled) t),
     isl AS (
       SELECT *, sum(ni) OVER (PARTITION BY person_id, ingredient
-                              ORDER BY start_ts, end_ts
+                              ORDER BY start_ts, end_ts, o_orderkey
                               ROWS UNBOUNDED PRECEDING) AS island
       FROM flagged)
     SELECT person_id, ingredient, min(start_ts) AS era_start,

@@ -123,9 +123,9 @@ def test_flip_refuses_fork_even_with_higher_version(spark, base_table):
     _crashed_main_manifest(t, t2.version + 1, "batch-fork")
     assert LakeTable._flip_current(t.path, t2.version + 1) is False
     assert _current(t.path) == t2.version
-    assert not LakeTable._on_current_chain(t.path, t2.version + 1)
-    assert LakeTable._on_current_chain(t.path, t2.version)
-    assert LakeTable._on_current_chain(t.path, t.version)
+    assert not LakeTable._chain_reaches(t.path, _current(t.path), t2.version + 1)
+    assert LakeTable._chain_reaches(t.path, _current(t.path), t2.version)
+    assert LakeTable._chain_reaches(t.path, _current(t.path), t.version)
 
 
 def test_commit_on_stale_base_with_explicit_version_raises(spark, base_table):

@@ -73,7 +73,7 @@ def test_separate_process_writers_all_land_exactly_once(spark, tmp_path):
     # the acknowledged history is one linear chain down to the base, and
     # the CURRENT pointer names a version that is on it
     assert LakeTable._chain_reaches(path, final.version, v0)
-    assert LakeTable._on_current_chain(path, final.version)
+    assert LakeTable._chain_reaches(path, LakeTable._current(path), final.version)
     # orphaned manifests from lost races (off-chain version numbers) may
     # exist — but no batch id anywhere on disk is missing from the
     # winning ledger (nothing any process ever saw acknowledged was lost)

@@ -72,3 +72,36 @@ def test_keys_are_independent(spark):
     ]
     got = _eras(spark, rows)
     assert [g[0] for g in got] == ["a", "b", "b"]
+
+
+def test_identical_intervals_merge_into_one_era(spark):
+    # tied (start, end) pairs: however they order, neither opens an era
+    rows = [("a", _ts(0), _ts(5)), ("a", _ts(0), _ts(5))]
+    assert _eras(spark, rows) == [("a", _ts(0), _ts(5), 2)]
+
+
+def test_duration_eras_matches_oracle_at_sf01(spark):
+    """cdc_duration_eras against its DuckDB oracle at sf0.1, where orders
+    tie on (start, end) within a person/ingredient: the oracle's two
+    windows must break those ties the same way, or it splits one era
+    into two overlapping ones."""
+    import os
+
+    import duckdb
+    import pytest
+
+    import pasar_spark.queries as q
+    from test_retired_oracles import SF_DIR, _norm_rows
+
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"no sf0.1 tables next to {SF_DIR}")
+    sdf = q.queries()["cdc_duration_eras"](spark, sf_dir)
+    con = duckdb.connect()
+    for t in ("orders", "customer", "nation", "region"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    cur = con.execute(q.oracle_sql()["cdc_duration_eras"])
+    dcols = [d[0] for d in cur.description]
+    assert _norm_rows(sdf.columns, [tuple(r) for r in sdf.collect()]) == _norm_rows(
+        dcols, cur.fetchall()
+    )

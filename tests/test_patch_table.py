@@ -117,6 +117,44 @@ def test_patch_resume_and_rerun_are_exactly_once(spark, partial_wal, tmp_path):
     assert _read(r) == _oracle(spark, partial_wal)
 
 
+def test_bootstrap_crash_after_create_resumes(spark, partial_wal, tmp_path, monkeypatch):
+    """A driver killed during bootstrap must not leave a table that every
+    later bootstrap refuses as row-mode: the conflict rule lands in the
+    creating manifest, not in a second commit after it."""
+    tbl = str(tmp_path / "t")
+
+    def killed(self, *args, **kwargs):
+        raise RuntimeError("driver killed mid-bootstrap")
+
+    with monkeypatch.context() as m:
+        m.setattr(LakeTable, "_commit", killed)
+        try:
+            PatchReplayRunner(spark, tbl, n_buckets=4).bootstrap()
+        except RuntimeError:
+            pass  # the kill, if bootstrap commits after creating
+    r = PatchReplayRunner(spark, tbl, n_buckets=4, chunk_size=3_000)
+    t = r.bootstrap()
+    assert (t.version, t.manifest["conflict"]) == (1, "patch")
+    r.replay(partial_wal)
+    assert _read(r) == _oracle(spark, partial_wal)
+
+
+def test_conflict_marked_by_second_commit_still_bootstraps(spark, tmp_path):
+    """Tables whose conflict rule was set by a commit after creation
+    (v2) keep loading as patch tables."""
+    import json
+
+    r = PatchReplayRunner(spark, str(tmp_path / "t"), n_buckets=2)
+    t = LakeTable.create(
+        spark, r.table_path, columns=[("conv_id", "string"), ("turn_idx", "int")],
+        key=["conv_id", "turn_idx"], n_buckets=2, name="transcripts-patch",
+    )
+    m = json.loads(json.dumps(t.manifest))
+    m["conflict"] = "patch"
+    t._commit(m, tag="conflict-patch")
+    assert r.bootstrap().version == 2
+
+
 def test_patch_changes_feed_classifies(spark, partial_wal, tmp_path):
     """changes() dispatches to the patch resolve: diff two snapshots of a
     patch table without corrupting column winners."""

@@ -157,3 +157,27 @@ def test_changes_resolved_fast_path_equals_reduce_path(spark, tmp_path):
     # and the fast path really is reachable: v_a's buckets are all resolved
     frm = LakeTable.load(spark, str(tmp_path / "a"), version=v_a).manifest
     assert not frm.get("unresolved"), "compacted v1 should have no unresolved buckets"
+
+
+# ---------------------------------------------------------------------------
+# spread(): an unreadable file size must not skip the fan-out
+
+
+def test_spread_unknown_file_size_keeps_exchange(spark, tmp_path, monkeypatch):
+    import os
+
+    from pasar_spark.queries import spread
+
+    path = str(tmp_path / "one")
+    spark.range(200).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 1
+    big = 1 << 30  # far above the file's size
+    assert spread(df, min_bytes=big) is df  # a readable small scan is skipped
+
+    def unreadable(p):
+        raise OSError(f"cannot stat {p}")
+
+    monkeypatch.setattr(os.path, "getsize", unreadable)
+    out = spread(df, min_bytes=big)
+    assert "Exchange" in out._jdf.queryExecution().executedPlan().toString()

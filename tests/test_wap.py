@@ -61,7 +61,7 @@ def test_stage_is_invisible_until_publish(spark, base_table):
     assert main.read().where("conv_id = 'conv-wap'").count() == 0
     assert not main.has_batch("wap-good")
     # audit view: sees the chunk
-    audit = LakeTable.load_staged(spark, t.path, "audit")
+    audit = LakeTable.load(spark, t.path, version=main.staged_refs()["audit"])
     assert audit.read().where("conv_id = 'conv-wap'").count() == 1
 
     published = main.publish_staged("audit")
@@ -211,7 +211,7 @@ def test_expire_keeps_live_staged_chain(spark, base_table):
     stats = cur.expire_snapshots(keep_last=1, min_age_sec=0.0)
     assert stats["expired_manifests"] > 0
     # the staged snapshot still loads and reads after expiry
-    audit = LakeTable.load_staged(spark, t.path, "keep")
+    audit = LakeTable.load(spark, t.path, version=cur.staged_refs()["keep"])
     assert audit.read().where("conv_id = 'conv-wap'").count() == 1
     # once discarded, a second expire reclaims it
     cur.discard_staged("keep")
