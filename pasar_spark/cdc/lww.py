@@ -11,10 +11,8 @@ payload...))`` (max_by semantics via struct ordering) gets map-side
 partial aggregation for free, so a conversation receiving 10^7 updates
 collapses to one row per map task before the shuffle — the reduce side
 sees at most (#map tasks) rows per key regardless of skew. That makes the
-aggregate formulation *inherently* hot-key-tolerant; the explicit salted
-two-phase variant below exists for the north-rule requirement and for
-workloads where the combiner is defeated (e.g. high-cardinality
-``(key, salt)`` pre-shuffle in sort-based fallback).
+aggregate formulation *inherently* hot-key-tolerant (BENCH.md §1, 90% of
+events on 3 keys), so no salted two-phase variant is needed.
 
 Duplicate deliveries (same lsn twice from an at-least-once feed) need no
 separate pass: identical (ts, lsn, payload) tuples are idempotent under
@@ -158,31 +156,3 @@ def lww_reduce_partial(
         *([F.col("_w_op._v").alias(op_col)] if op_col is not None else []),
         *[F.col(f"_w_{c}._v").alias(c) for c in payload],
     )
-
-
-def salted_lww_reduce(
-    events: DataFrame,
-    n_salts: int = 16,
-    key: list[str] | None = None,
-    order: list[str] | None = None,
-    payload: list[str] | None = None,
-) -> DataFrame:
-    """Two-phase salted LWW: reduce on (key, salt) first, then on key.
-
-    Salt derives from the order columns (not random) so the result stays
-    deterministic; because max() is associative+commutative, the split is
-    semantics-preserving. Reference analogue: the per-key suffix minting
-    of stg__visit_occurrence.sql:53-64 is identity-disambiguation, not
-    load-balancing — salting is the load-balancing version the engine adds
-    per the north rule.
-    """
-    key = key or DEFAULT_KEY
-    order = order or DEFAULT_ORDER
-    if payload is None:
-        payload = [c for c in events.columns if c not in set(key) | set(order)]
-    salted = events.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in order]), F.lit(n_salts)).cast("int")
-    )
-    phase1 = salted.groupBy(*key, "_salt").agg(F.max(_packed(order, payload)).alias("_w"))
-    phase2 = phase1.groupBy(*key).agg(F.max("_w").alias("_w"))
-    return _unpack(phase2, key, order, payload)

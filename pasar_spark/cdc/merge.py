@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pasar_spark.cdc.lww import lww_reduce
-from pasar_spark.functions.normalize import normalize_text, normalize_text_native
+from pasar_spark.functions.normalize import normalize_text
 from pasar_spark.lake.table import LakeTable
 
 ORDER = ["ts", "lsn"]
@@ -66,15 +66,13 @@ def _obs_get(obs: Observation, defaults: dict) -> dict:
         return dict(defaults)
 
 
-def reduce_changes(changes: DataFrame, key, order, payload, normalizer: str) -> DataFrame:
+def reduce_changes(changes: DataFrame, key, order, payload, normalize: bool = True) -> DataFrame:
     """LWW-reduce change events to one winner per key (``op`` kept) and
     normalize the winners' text — the reduce of :func:`merge_batch` and
     of the router's combined fan-out (cdc/router.py)."""
     reduced = lww_reduce(changes, key=key, order=order, payload=payload + ["op"])
-    if normalizer == "arrow":
+    if normalize:
         return reduced.withColumn("text", normalize_text(F.col("text")))
-    if normalizer == "native":
-        return reduced.withColumn("text", normalize_text_native(F.col("text")))
     return reduced
 
 
@@ -95,7 +93,7 @@ def merge_batch(
     changes: DataFrame,
     batch_id: str,
     last_lsn: int | None = None,
-    normalizer: str = "arrow",  # 'arrow' | 'native' | 'none'
+    normalize: bool = True,  # False: stored text is already the lake's
     mode: str = "cow",  # 'cow' (eager merge) | 'mor' (append deltas)
     partition_offsets: dict | None = None,
     stage: str | None = None,  # WAP: commit as staged snapshot <stage>
@@ -113,6 +111,8 @@ def merge_batch(
     equivalent under LWW because the reduce is associative: resolving
     (base ∪ deltas) lazily equals resolving eagerly per batch.
     """
+    if mode not in ("mor", "cow"):
+        raise ValueError(f"merge_batch: mode must be 'mor'|'cow', got {mode!r}")
     _require_row_mode(table, "merge_batch")
     if table.has_batch(batch_id):
         return table, {"skipped_batches": 1}
@@ -128,7 +128,7 @@ def merge_batch(
         obs_src, F.count(F.lit(1)).alias("events_seen"), F.max(lsn_col).alias("max_lsn")
     )
 
-    reduced = reduce_changes(changes, key, order, payload, normalizer).withColumn(
+    reduced = reduce_changes(changes, key, order, payload, normalize).withColumn(
         "_bucket", table.bucket_expr()
     )
 
@@ -260,17 +260,15 @@ def merge_batch(
 def compact_buckets(
     table: LakeTable,
     min_files: int = 8,
-    buckets: list[str] | None = None,
     policy: str = "tiered",  # 'tiered' (LSM-style) | 'full'
-    major_ratio: float = 1.0,
 ) -> tuple[LakeTable, dict]:
     """Fold MoR delta files; bounds read amplification to ``min_files``.
 
     policy='tiered' (the 10^10-event path): when a bucket's delta file
     count reaches ``min_files``, fold ONLY the deltas into one delta
     (minor compaction, O(deltas) write) — unless the folded deltas have
-    grown to ``major_ratio`` x the base row count, in which case rewrite
-    the whole bucket (major compaction, resolves it). Like an LSM tree,
+    grown to the base row count, in which case rewrite the whole bucket
+    (major compaction, resolves it). Like an LSM tree,
     each row is rewritten O(log) times over the table's life instead of
     O(table/chunk) times under full-rewrite-every-K-chunks.
 
@@ -282,28 +280,26 @@ def compact_buckets(
     property-tested). Tombstones are KEPT: they still guard against
     resurrection by out-of-order stragglers; vacuum_tombstones drops
     them past the out-of-order horizon."""
-    unresolved = set(table.manifest.get("unresolved", []))
-    if buckets is not None:
-        todo = [str(b) for b in buckets if str(b) in unresolved]
-    else:
-        todo = [
-            b
-            for b in unresolved
-            if len(table.bucket_entries(b, kind="delta")) >= min_files
-        ]
+    if policy not in ("tiered", "full"):
+        raise ValueError(f"compact_buckets: policy must be 'tiered'|'full', got {policy!r}")
+    todo = [
+        b
+        for b in table.manifest.get("unresolved", [])
+        if len(table.bucket_entries(b, kind="delta")) >= min_files
+    ]
     if not todo:
         return table, {"compacted_buckets": 0, "minor_compacted_buckets": 0}
 
     major, minor = [], []
     for b in todo:
         if not table.bucket_entries(b, kind="delta"):
-            # nothing to fold — e.g. an explicitly-passed bucket whose
-            # entries all pre-date the 'kind' field (default to base);
-            # the minor path would otherwise resolve None and crash
+            # nothing to fold (min_files=0) — e.g. a bucket whose entries
+            # all pre-date the 'kind' field (default to base); the minor
+            # path would otherwise resolve None and crash
             continue
         base_rows = sum(e.get("rows", 0) for e in table.bucket_entries(b, kind="base"))
         delta_rows = sum(e.get("rows", 0) for e in table.bucket_entries(b, kind="delta"))
-        if policy == "full" or base_rows == 0 or delta_rows >= major_ratio * base_rows:
+        if policy == "full" or delta_rows >= base_rows:
             major.append(b)
         else:
             minor.append(b)

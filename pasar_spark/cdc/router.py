@@ -45,10 +45,11 @@ Scale design (the part that matters at 10^10 events):
   per-table 53.7 s (2.45×) — the gap grows with table count, which is
   the reference's ~22-target shape. Falls back to per-table merges
   when targets diverge (different schema/buckets/key), when a
-  schema-evolution step lands mid-window, or in cow mode. Equivalence
-  is the same LWW-associativity argument as merge-on-read itself:
-  reducing each route's slice separately or all routes together keyed
-  by (route, key) yields identical winners.
+  schema-evolution step lands mid-window, or in cow mode — a choice
+  made from that observed state each window, never set by the caller.
+  Equivalence is the same LWW-associativity argument as merge-on-read
+  itself: reducing each route's slice separately or all routes together
+  keyed by (route, key) yields identical winners.
 
 Heterogeneous payloads: all targets share the transcript base schema
 (cdc/runner.py BASE_COLUMNS, the BASELINE.json input_hint); per-table
@@ -79,9 +80,9 @@ class UnroutedEvents(ValueError):
 class MultiTableReplayRunner:
     """Demux one LSN-ordered change feed into N lake tables.
 
-    ``tables`` — target names (list), or ``{name: {per-table kwargs}}``
-    to override e.g. ``n_buckets`` per target. Each target lives at
-    ``<base_dir>/<name>``.
+    ``tables`` — target names (list), or ``{name: {"n_buckets": n}}`` to
+    override the bucket count per target (the only per-table option).
+    Each target lives at ``<base_dir>/<name>``.
 
     ``route_by`` — a column name or Catalyst expression (str or Column)
     evaluated on each event to yield its target table name. Events whose
@@ -101,16 +102,12 @@ class MultiTableReplayRunner:
         n_buckets: int = 16,
         chunk_size: int = 1_000_000,
         evolution_plan: EvolutionPlan | None = None,
-        normalizer: str = "arrow",
         merge_mode: str = "mor",
         compact_min_files: int = 8,
         on_unrouted: str = "error",
-        fanout: str = "auto",
     ):
         if on_unrouted not in ("error", "ignore"):
             raise ValueError(f"on_unrouted must be 'error'|'ignore', got {on_unrouted!r}")
-        if fanout not in ("auto", "per-table"):
-            raise ValueError(f"fanout must be 'auto'|'per-table', got {fanout!r}")
         table_opts: dict[str, dict] = (
             {n: dict(o) for n, o in tables.items()}
             if isinstance(tables, dict)
@@ -118,6 +115,9 @@ class MultiTableReplayRunner:
         )
         if not table_opts:
             raise ValueError("tables must name at least one target")
+        unknown = sorted({k for o in table_opts.values() for k in o} - {"n_buckets"})
+        if unknown:
+            raise ValueError(f"per-table options must be 'n_buckets', got {unknown}")
         # '.' / '..' would bootstrap a lake table AT or ABOVE base_dir
         # (os.path.join(base_dir, '..') walks out of the intended root) —
         # reject alongside separators and empties
@@ -133,18 +133,15 @@ class MultiTableReplayRunner:
         self.route_by = route_by
         self.chunk_size = chunk_size
         self.evolution_plan = evolution_plan or EvolutionPlan()
-        self.normalizer = normalizer
         self.merge_mode = merge_mode
         self.compact_min_files = compact_min_files
         self.on_unrouted = on_unrouted
-        self.fanout = fanout
         # one single-table runner per target: its bootstrap and its
         # per-table row apply are the router's
         self._runners = {
             n: ReplayRunner(
                 spark, os.path.join(base_dir, n), o.get("n_buckets", n_buckets),
-                chunk_size, self.evolution_plan, normalizer, merge_mode,
-                compact_min_files,
+                chunk_size, self.evolution_plan, merge_mode, compact_min_files,
             )
             for n, o in table_opts.items()
         }
@@ -239,15 +236,13 @@ class MultiTableReplayRunner:
         schema-evolution step landing in this window — otherwise each
         slice takes the single-table row apply, which owns evolution."""
         if (
-            self.fanout == "auto"
-            and self.merge_mode == "mor"
+            self.merge_mode == "mor"
             and combined_eligible(tables, todo)
             and not self.evolution_plan.pending(routed, [tables[n] for n in todo])
         ):
             combined_window(
                 self.base_dir, tables, routed, todo, batch_id, counts,
-                chunk_hi=chunk_hi, normalizer=self.normalizer,
-                compact_min_files=self.compact_min_files,
+                chunk_hi=chunk_hi, compact_min_files=self.compact_min_files,
             )
             return
         for name in todo:
@@ -387,20 +382,19 @@ def group_snapshot_epochs(
 def _walk_back(spark: SparkSession, name: str, t: LakeTable, ahead, cut: str) -> LakeTable:
     """Walk ``t`` down its parent chain (a metadata read per step, never
     data) while ``ahead(t)``; ``cut`` names the group cut in errors."""
+    chain = LakeTable._ancestors(t.path, t.manifest["parent_version"])
     while ahead(t):
-        parent = t.manifest.get("parent_version")
-        if not parent:
-            raise LookupError(
-                f"table {name!r}: no retained version at {cut} "
-                f"(chain ends at v{t.version}, lsn {t.last_lsn})"
-            )
-        try:
-            t = LakeTable.load(spark, t.path, version=parent)
-        except FileNotFoundError:
+        step = next(chain, None)
+        if step is None:
+            parent = t.manifest["parent_version"]
             raise LookupError(
                 f"table {name!r}: version v{parent} at {cut} was expired — "
                 "raise the expire_snapshots horizon above reader staleness"
-            ) from None
+                if parent
+                else f"table {name!r}: no retained version at {cut} "
+                f"(chain ends at v{t.version}, lsn {t.last_lsn})"
+            )
+        t = LakeTable(spark, t.path, step[1], step[0])
     return t
 
 
@@ -431,7 +425,6 @@ def combined_window(
     batch_id: str,
     counts: dict,
     chunk_hi: int | None = None,
-    normalizer: str = "arrow",
     compact_min_files: int = 8,
 ) -> None:
     """ONE Spark job for a whole window/epoch, any number of targets:
@@ -486,7 +479,7 @@ def combined_window(
                 for i, name in enumerate(todo)
             ],
         )
-    reduced = reduce_changes(src, ["_route"] + key, order, payload, normalizer)
+    reduced = reduce_changes(src, ["_route"] + key, order, payload)
     final = reduced.select(
         F.col("_route"),
         *delta_columns(key, order, payload),

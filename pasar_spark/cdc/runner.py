@@ -156,7 +156,6 @@ class ReplayRunner:
         n_buckets: int = 16,
         chunk_size: int = 1_000_000,
         evolution_plan: EvolutionPlan | None = None,
-        normalizer: str = "arrow",
         # 'mor' (default): O(chunk) delta appends + bounded compaction —
         # 3x faster than 'cow' at 8 chunks and the gap grows with table
         # size; 'cow' keeps reads join-free (see cdc/merge.py)
@@ -168,7 +167,6 @@ class ReplayRunner:
         self.n_buckets = n_buckets
         self.chunk_size = chunk_size
         self.evolution_plan = evolution_plan or EvolutionPlan()
-        self.normalizer = normalizer
         self.merge_mode = merge_mode
         self.compact_min_files = compact_min_files
 
@@ -265,8 +263,7 @@ class ReplayRunner:
         if ver:
             table = self.evolution_plan.apply_up_to(table, ver)
         chunk = promote_extra(chunk, table)
-        kw = dict(last_lsn=last_lsn, normalizer=self.normalizer, mode=self.merge_mode,
-                  partition_offsets=partition_offsets)
+        kw = dict(last_lsn=last_lsn, mode=self.merge_mode, partition_offsets=partition_offsets)
         if audit_checks is None:
             table, delta = merge_batch(table, chunk, batch_id, **kw)
         else:

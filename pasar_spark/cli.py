@@ -91,6 +91,10 @@ def _load_evolution_plan(path: str | None):
 def cmd_ingest(args) -> int:
     from pasar_spark.cdc.runner import ReplayRunner
 
+    if args.conflict == "patch" and (args.mode == "cow" or args.evolution_plan):
+        print("error: ingest --conflict patch takes neither --mode cow nor "
+              "--evolution-plan", file=sys.stderr)
+        return 2
     spark = _spark(args)
     if bool(args.wal) == bool(args.jdbc_url):
         print("error: ingest needs exactly one of --wal or --jdbc-url", file=sys.stderr)
@@ -127,7 +131,6 @@ def cmd_ingest(args) -> int:
         n_buckets=args.buckets,
         chunk_size=args.chunk_size,
         merge_mode=args.mode,
-        normalizer=args.normalizer,
         compact_min_files=args.compact_min_files,
         evolution_plan=_load_evolution_plan(args.evolution_plan),
     )
@@ -331,7 +334,6 @@ def cmd_etl(args) -> int:
             chunk_size=args.chunk_size,
             merge_mode=args.mode,
             on_unrouted=args.on_unrouted,
-            fanout=args.fanout,
         )
         tables = runner.replay(args.wal, max_events=args.max_events)
     print(
@@ -483,7 +485,6 @@ def build_parser() -> argparse.ArgumentParser:
         default="row",
         help="row: whole-row LWW (default); patch: per-column LWW for partial-update feeds",
     )
-    i.add_argument("--normalizer", choices=["arrow", "native", "none"], default="arrow")
     i.add_argument("--compact-min-files", type=int, default=8)
     i.add_argument(
         "--evolution-plan",
@@ -615,11 +616,6 @@ def build_parser() -> argparse.ArgumentParser:
     et.add_argument("--max-events", type=int, default=None)
     et.add_argument("--mode", choices=["mor", "cow"], default="mor")
     et.add_argument("--on-unrouted", choices=["error", "ignore"], default="error")
-    et.add_argument(
-        "--fanout", choices=["auto", "per-table"], default="auto",
-        help="auto = ONE reduce+write job per window for homogeneous targets "
-        "(table-count-invariant cost); per-table forces N independent merges",
-    )
     et.add_argument("--stream", action="store_true", help="tail the WAL via Structured Streaming instead of batch LSN windows")
     et.add_argument("--checkpoint", default=None, help="streaming checkpoint dir (required with --stream)")
     et.add_argument("--live", action="store_true", help="with --stream: processingTime trigger instead of a one-shot drain")

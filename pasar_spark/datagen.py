@@ -7,7 +7,7 @@ staying bit-identical for a given (seed, n_events, dials).
 
 Dials (all deterministic functions of (seed, lsn)):
 - hot-key skew: ``hot_fraction`` of events land on ``n_hot`` conversations
-  (the Zipf-head analogue; exercises salting / AQE skew-join);
+  (the Zipf-head analogue; exercises the map-side combine / AQE skew-join);
 - out-of-order fraction: events whose ``ts`` is jittered backwards so that
   LSN order and event-time order disagree — the LWW-on-(ts, lsn) test;
 - duplicate deliveries: a fraction of LSNs are emitted twice (at-least-once

@@ -26,8 +26,6 @@ import unicodedata
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
@@ -44,9 +42,8 @@ def normalize_text(s: pd.Series) -> pd.Series:
     # ~57% of END-TO-END replay wall time (4M-event replay: 13.5 s with
     # it, 5.8 s with normalization disabled, same window).
     # Explicit ASCII whitespace class: Python's/RE2's \s handling differs
-    # on Unicode while this class is unambiguous and matches
-    # normalize_text_native (Java) and DuckDB's RE2 \s (ASCII-only) —
-    # the lockstep contract with NORMALIZE_SQL below.
+    # on Unicode while this class is unambiguous and matches DuckDB's
+    # RE2 \s (ASCII-only) — the lockstep contract with NORMALIZE_SQL.
     arr = pa.Array.from_pandas(s, type=pa.string())
     arr = pc.replace_substring_regex(
         arr, pattern=r"[ \t\n\r\f\v]+", replacement=" "
@@ -65,11 +62,3 @@ def normalize_text(s: pd.Series) -> pd.Series:
             lambda x: unicodedata.normalize("NFC", x)
         )
     return out
-
-
-def normalize_text_native(col: Column) -> Column:
-    """Catalyst-native normalization (no Python at all) — identical output
-    for ASCII-only corpora (NFC is a no-op on ASCII). The replay pipeline
-    uses this fast path when the feed declares an ASCII text domain; the
-    pandas_udf path is the general-unicode path."""
-    return F.trim(F.regexp_replace(col, r"\s+", " "))

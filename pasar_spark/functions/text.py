@@ -193,14 +193,12 @@ def with_lang_id(df, text_col: str = "text", out_col: str = "pred_lang"):
 
 
 def fingerprint(col: Column) -> Column:
-    """Deterministic 128-bit document fingerprint over the normalized
-    text (exact-dup detection key). md5 is chosen over xxhash64 here so
-    external systems (and the DuckDB oracle) can reproduce it. Reuses the
-    engine's canonical normal form so the dedup key can never drift from
-    lake contents."""
-    from pasar_spark.functions.normalize import normalize_text_native
-
-    return F.md5(normalize_text_native(col))
+    """Deterministic 128-bit document fingerprint (exact-dup detection
+    key): md5 over the text with whitespace runs collapsed to one space
+    and trimmed — no NFC, so it is not the lake's normal form
+    (functions/normalize.py). md5 is chosen over xxhash64 here so
+    external systems (and the DuckDB oracle) can reproduce it."""
+    return F.md5(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
 def shingles(col: Column, n: int = 5) -> Column:

@@ -438,7 +438,7 @@ def import_snapshot(
         seed,
         batch_id=f"import-v{m['source_version']}",
         last_lsn=m["last_lsn"],
-        normalizer="none",
+        normalize=False,  # an import must not rewrite the primary's text
         mode="mor",
     )
     return t

@@ -15,7 +15,6 @@ Determinism rules applied throughout (both sides!):
 
 from __future__ import annotations
 
-import os as _os_mod
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -100,8 +99,8 @@ def spread(df: DataFrame, *keys: str, min_bytes: int = 0) -> DataFrame:
     files it is a net -0.3..-0.8 s. Byte-cheap relational feeds pass
     ``min_bytes=SPREAD_MIN_BYTES``; compute-bound text/embedding
     pipelines keep 0 (their per-row interpreted-HOF work dwarfs the
-    exchange at any size). PASAR_SPREAD_MIN_BYTES overrides for cluster
-    tuning (moot there: many-split scans skip the spread entirely).
+    exchange at any size). On a cluster the threshold is moot: many-split
+    scans skip the spread entirely.
     """
     sc = df.sparkSession.sparkContext
     if not sc.master.startswith("local"):
@@ -154,7 +153,7 @@ def spread(df: DataFrame, *keys: str, min_bytes: int = 0) -> DataFrame:
 # Below this input size the spread exchange costs more than the serial
 # scan it parallelizes (measured both ways on the events feed — see the
 # spread() docstring); applied by the byte-cheap relational feed callers.
-SPREAD_MIN_BYTES = int(_os_mod.environ.get("PASAR_SPREAD_MIN_BYTES", 6 * 1024 * 1024))
+SPREAD_MIN_BYTES = 6 * 1024 * 1024
 
 
 def queries() -> dict[str, QueryFn]:

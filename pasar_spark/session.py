@@ -4,8 +4,8 @@ Defaults are chosen for the 100 TB design point and scaled by core count
 for local runs:
 
 - AQE on (runtime shuffle-partition coalescing + skew-join splitting) —
-  the engine's backstop for hot conversation keys on top of explicit
-  salting (see cdc/lww.py);
+  the engine's backstop for hot conversation keys on top of the LWW
+  aggregate's map-side combine (see cdc/lww.py);
 - Arrow execution on — every Python-side transform is a vectorized
   pandas_udf batch, never a row-at-a-time UDF;
 - shuffle partitions sized to cores locally; on a real cluster this is

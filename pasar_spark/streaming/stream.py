@@ -235,7 +235,6 @@ class StreamingIngest(WalTail):
         checkpoint_path: str,
         n_buckets: int = 16,
         evolution_plan: EvolutionPlan | None = None,
-        normalizer: str = "arrow",
         max_files_per_trigger: int | None = None,
         merge_mode: str = "mor",
         compact_min_files: int = 8,
@@ -247,8 +246,7 @@ class StreamingIngest(WalTail):
     ):
         runner = ReplayRunner(
             spark, table_path, n_buckets, evolution_plan=evolution_plan,
-            normalizer=normalizer, merge_mode=merge_mode,
-            compact_min_files=compact_min_files,
+            merge_mode=merge_mode, compact_min_files=compact_min_files,
         )
         super().__init__(
             runner, {table_path: table_path}, wal_path, checkpoint_path,
@@ -301,7 +299,6 @@ class MultiTableStreamingIngest(WalTail):
         wal_path: str,
         checkpoint_path: str,
         n_buckets: int = 16,
-        normalizer: str = "arrow",
         max_files_per_trigger: int | None = None,
         merge_mode: str = "mor",
         compact_min_files: int = 8,
@@ -313,8 +310,8 @@ class MultiTableStreamingIngest(WalTail):
     ):
         router = MultiTableReplayRunner(
             spark, base_dir, tables, route_by, n_buckets=n_buckets,
-            normalizer=normalizer, merge_mode=merge_mode,
-            compact_min_files=compact_min_files, on_unrouted=on_unrouted,
+            merge_mode=merge_mode, compact_min_files=compact_min_files,
+            on_unrouted=on_unrouted,
         )
         super().__init__(
             router, {n: os.path.join(base_dir, n) for n in sorted(tables)},

@@ -7,7 +7,7 @@
    still ingest pre-rename events (coalesce over the reverse-alias
    chain) — otherwise all history before the rename silently becomes
    NULL under LWW replay.
-3. compact_buckets(buckets=[b]) on a bucket whose manifest entries
+3. compact_buckets(min_files=0) over buckets whose manifest entries
    pre-date the 'kind' field (all default to 'base', so no deltas)
    must be a no-op, not an AttributeError.
 """
@@ -100,10 +100,10 @@ def test_compact_explicit_bucket_without_kind_field(spark, tmp_path):
     table = runner.replay(wal)
     assert table.manifest.get("unresolved")
     # simulate a manifest written before the 'kind' field existed
-    b = table.manifest["unresolved"][0]
-    for e in table.manifest["buckets"][b]:
-        e.pop("kind", None)
-    assert table.bucket_entries(b, kind="delta") == []
-    t2, metrics = compact_buckets(table, buckets=[b])  # must not raise
+    for b in table.manifest["unresolved"]:
+        for e in table.manifest["buckets"][b]:
+            e.pop("kind", None)
+        assert table.bucket_entries(b, kind="delta") == []
+    t2, metrics = compact_buckets(table, min_files=0)  # must not raise
     assert metrics == {"compacted_buckets": 0, "minor_compacted_buckets": 0}
     assert t2.version == table.version

@@ -6,7 +6,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from pasar_spark.cdc.lww import lww_reduce, salted_lww_reduce
+from pasar_spark.cdc.lww import lww_reduce
 
 SCHEMA = "lsn bigint, op string, conv_id string, turn_idx int, text string, ts timestamp"
 
@@ -53,14 +53,6 @@ def test_lww_permutation_invariant(spark):
 def test_lww_duplicate_delivery_idempotent(spark):
     dup = _winners(_df(spark, ROWS + ROWS))  # at-least-once feed
     assert dup == _winners(_df(spark, ROWS))
-
-
-def test_salted_equals_unsalted(spark):
-    df = _df(spark, ROWS + ROWS)
-    a = _winners(df)
-    out = salted_lww_reduce(df, n_salts=8, key=["conv_id", "turn_idx"], order=["ts", "lsn"])
-    b = {(r.conv_id, r.turn_idx): (r.lsn, r.op, r.text) for r in out.collect()}
-    assert a == b
 
 
 def test_prefer_non_null_beats_newer_null(spark):

@@ -15,7 +15,7 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from pasar_spark.cdc.lww import lww_reduce, salted_lww_reduce
+from pasar_spark.cdc.lww import lww_reduce
 
 BASE = dt.datetime(2025, 1, 1)
 
@@ -68,13 +68,3 @@ def test_prefer_non_null_equals_reference(spark, data, dup):
     rows = _rows(data, min(dup, len(data)))
     got = _engine(spark, rows, prefer_non_null="text")
     assert got == _reference(rows, prefer_non_null=True)
-
-
-@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(data=logs)
-def test_salted_equals_reference(spark, data):
-    rows = _rows(data, 0)
-    df = spark.createDataFrame(rows, SCHEMA)
-    out = salted_lww_reduce(df, n_salts=4, key=["conv_id"], order=["ts", "lsn"])
-    got = {r.conv_id: (r.ts, r.op, r.text, r.lsn) for r in out.collect()}
-    assert got == _reference(rows)

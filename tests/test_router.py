@@ -145,13 +145,16 @@ def test_unrouted_error_and_ignore(spark, wal, tmp_path):
     assert _state(tables["t1"]) == _oracle_state(wal, ROUTE_DUCK, "t1")
 
 
-def test_combined_fanout_equals_per_table(spark, wal, tmp_path):
+def test_combined_fanout_equals_per_table(spark, wal, tmp_path, monkeypatch):
     """The default combined window (one (route,key) LWW reduce + one
     partitionBy(_route,_bucket) write, driver-side file attach) must be
     state- and metrics-equivalent to N independent merge_batch calls —
     the LWW-associativity argument, checked end to end."""
+    from pasar_spark.cdc import router
+
     combined = _runner(spark, str(tmp_path / "c")).replay(wal)
-    per_table = _runner(spark, str(tmp_path / "p"), fanout="per-table").replay(wal)
+    monkeypatch.setattr(router, "combined_eligible", lambda *a: False)
+    per_table = _runner(spark, str(tmp_path / "p")).replay(wal)
     for name in NAMES:
         assert _state(combined[name]) == _state(per_table[name]), name
         cm, pm = combined[name].metrics, per_table[name].metrics
@@ -284,3 +287,38 @@ def test_cli_etl(spark, wal, tmp_path, capsys):
     snap = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     lsns = {v["last_lsn"] for v in snap["tables"].values()}
     assert lsns == {snap["cut_lsn"]}
+
+
+def test_group_snapshot_refuses_an_expired_cut_version(spark, tmp_path):
+    """A table ahead of the group cut whose version AT the cut was
+    expired cannot be pinned: the walk-back names the missing version."""
+    from pasar_spark.cdc.router import group_snapshot
+
+    base = str(tmp_path / "lake")
+    tables = _runner(spark, base).bootstrap()
+    for n in NAMES:
+        tables[n] = tables[n].commit_append({}, "lsn-0-99", last_lsn=99)
+    at_cut = tables["t1"].version
+    ahead = tables["t1"].commit_append({}, "lsn-100-199", last_lsn=199)
+    ahead.expire_snapshots(keep_last=1, min_age_sec=0)
+    with pytest.raises(LookupError, match=f"version v{at_cut} at group cut lsn 99 was expired"):
+        group_snapshot(spark, base, NAMES)
+
+
+def test_walk_back_below_the_chain_names_its_end(spark, tmp_path):
+    """A cut below every retained version walks to the creation
+    snapshot and reports where the chain ends."""
+    from pasar_spark.cdc.router import _walk_back
+
+    t = _runner(spark, str(tmp_path / "lake")).bootstrap()["t0"]
+    t = t.commit_append({}, "lsn-0-99", last_lsn=99)
+    with pytest.raises(LookupError, match=r"no retained version at group cut lsn -2 \(chain ends at v1, lsn -1\)"):
+        _walk_back(spark, "t0", t, lambda t: t.last_lsn > -2, "group cut lsn -2")
+
+
+def test_unknown_per_table_option_is_refused(spark, tmp_path):
+    with pytest.raises(ValueError, match="n_bucket"):
+        MultiTableReplayRunner(
+            spark, str(tmp_path / "lake"), {"t0": {}, "t1": {"n_bucket": 8}},
+            route_by=ROUTE_SPARK,
+        )

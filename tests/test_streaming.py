@@ -138,7 +138,6 @@ def test_quality_gated_stream_halts_on_bad_epoch(spark, tmp_path):
     ingest = StreamingIngest(
         spark, str(tmp_path / "tbl"), wal,
         checkpoint_path=str(tmp_path / "ckpt"), n_buckets=4,
-        normalizer="none",
         audit_checks=[lambda df: assert_no_nulls(df.where("lsn >= 0"), ["text"])],
     )
     import pytest as _p

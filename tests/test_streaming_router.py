@@ -140,7 +140,7 @@ def test_debezium_wire_routes_by_source_table(spark, tmp_path):
     tables = MultiTableStreamingIngest(
         spark, str(tmp_path / "lake"), NAMES, route_by="_table",
         wal_path=wal_json, checkpoint_path=str(tmp_path / "ckpt"),
-        n_buckets=4, wire_format="debezium-json", normalizer="none",
+        n_buckets=4, wire_format="debezium-json",
     ).run_available_now()
 
     con = duckdb.connect()
@@ -198,7 +198,7 @@ def test_group_snapshot_epochs_heals_split_epoch(spark, tmp_path):
         .drop("_route")
     )
     t0 = drained["t0"]
-    merge_batch(t0, promote_extra(part, t0), "stream-999", normalizer="arrow")
+    merge_batch(t0, promote_extra(part, t0), "stream-999")
 
     snap = group_snapshot_epochs(spark, base, NAMES)
     for n in NAMES:
