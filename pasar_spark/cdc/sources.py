@@ -35,9 +35,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def lsn_file_stats(path: str) -> list[tuple[str, int, int]] | None:
-    """Per-file (path, min_lsn, max_lsn) from parquet footer statistics.
+#: the footer key Spark writes its own schema under; when present, Spark
+#: infers a file's schema from it rather than from the parquet schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
+
+def lsn_file_stats(path: str) -> list[tuple[str, int, int, tuple]] | None:
+    """Per-file (path, min_lsn, max_lsn, schema) from parquet footers.
+
+    ``schema`` is what Spark's schema inference reads from a footer: the
+    parquet schema and the Spark schema in the key-value metadata.
     Returns None when any file lacks lsn stats (callers fall back to a
     full-dir Spark scan). Zero-row-group files (Spark writes these for an
     empty dataset) are skipped, not fatal. O(#files) driver-side metadata
@@ -67,7 +74,8 @@ def lsn_file_stats(path: str) -> list[tuple[str, int, int]] | None:
                 f_max = stats.max if f_max is None else max(f_max, stats.max)
             if f_min is None:
                 continue  # zero row groups — contributes no lsn range
-            out.append((full, int(f_min), int(f_max)))
+            schema = (md.schema, (md.metadata or {}).get(_SPARK_SCHEMA_KEY))
+            out.append((full, int(f_min), int(f_max), schema))
     except (OSError, ValueError):
         # ValueError covers pyarrow.lib.ArrowInvalid (truncated/partial
         # file from a crashed writer) — fall back to the Spark scan
@@ -125,16 +133,26 @@ class ParquetDirSource(FeedSource):
     would otherwise schedule one (empty) scan task per non-matching file.
     Stats are captured once per replay call (the WAL may grow later;
     construct a fresh source per replay, as the runner does).
+
+    When every footer carries the same schema, the Spark schema is
+    inferred once, by the first chunk, and later chunks read with it:
+    Spark infers a multi-file read's schema from one footer (no
+    ``mergeSchema``), so the result is the same, minus a footer job and
+    its planning per window. Differing footers keep per-chunk inference.
     """
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
         self._stats = lsn_file_stats(path)
+        self._one_schema = bool(self._stats) and all(
+            s == self._stats[0][3] for *_, s in self._stats
+        )
+        self._schema = None
 
     def tip(self) -> int | None:
         if self._stats:
-            return max(hi for _, _, hi in self._stats)
+            return max(hi for _, _, hi, _ in self._stats)
         row = (
             self.spark.read.parquet(self.path).agg(F.max("lsn").alias("m")).collect()[0]
         )
@@ -143,11 +161,16 @@ class ParquetDirSource(FeedSource):
     def chunk(self, lo: int, hi: int) -> DataFrame | None:
         if self._stats is not None:
             overlapping = [
-                p for p, f_lo, f_hi in self._stats if f_hi >= lo and f_lo <= hi
+                p for p, f_lo, f_hi, _ in self._stats if f_hi >= lo and f_lo <= hi
             ]
             if not overlapping:
                 return None  # provably empty range — skip without a job
-            src = self.spark.read.parquet(*overlapping)
+            reader = self.spark.read
+            if self._one_schema:
+                if self._schema is None:
+                    self._schema = reader.parquet(overlapping[0]).schema
+                reader = reader.schema(self._schema)
+            src = reader.parquet(*overlapping)
         else:
             src = self.spark.read.parquet(self.path)
         return src.where((F.col("lsn") >= lo) & (F.col("lsn") <= hi))
@@ -159,7 +182,7 @@ class ParquetDirSource(FeedSource):
         # one scheduled-then-empty window, never a missed event)
         if self._stats is None:
             return after  # no stats — fall back to "try it"
-        cands = [max(f_lo, after) for _, f_lo, f_hi in self._stats if f_hi >= after]
+        cands = [max(f_lo, after) for _, f_lo, f_hi, _ in self._stats if f_hi >= after]
         return min(cands) if cands else None
 
 

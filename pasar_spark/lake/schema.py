@@ -18,9 +18,15 @@ feature, so this module implements the Iceberg mechanism in miniature:
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+
+# DDL type string -> DataType. PySpark parses through the JVM, three py4j
+# round trips per call, and every read plans its files' physical struct,
+# so a table's few type strings are parsed once per process.
+_data_type = functools.lru_cache(maxsize=256)(_parse_datatype_string)
 
 # Information-preserving widenings (Iceberg's allowed promotions).
 _WIDENINGS = {
@@ -119,12 +125,12 @@ class TableSchema:
         named f<id> so renames never touch storage."""
         return StructType(
             [
-                StructField(f"f{f.id}", _parse_datatype_string(f.type), True)
+                StructField(f"f{f.id}", _data_type(f.type), True)
                 for f in self.fields
             ]
         )
 
     def logical_struct(self) -> StructType:
         return StructType(
-            [StructField(f.name, _parse_datatype_string(f.type), True) for f in self.fields]
+            [StructField(f.name, _data_type(f.type), True) for f in self.fields]
         )

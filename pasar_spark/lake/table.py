@@ -381,17 +381,25 @@ class LakeTable:
     def bucket_of(self, value) -> int:
         """The bucket a bucket_by value lands in — evaluated through the
         SAME Spark expression as bucket_expr (xxhash64 is not exposed to
-        Python, so a 1-row driver job computes it; no table scan)."""
-        row = (
+        Python). The expression over a literal is constant-folded by the
+        optimizer, so the value is read off the optimized plan: no Spark
+        job runs and no table is scanned."""
+        plan = (
             self.spark.range(1)
             .select(
                 F.pmod(F.xxhash64(F.lit(value)), F.lit(self.manifest["n_buckets"]))
                 .cast("int")
                 .alias("b")
             )
-            .collect()[0]
+            ._jdf.queryExecution().optimizedPlan()
         )
-        return int(row["b"])
+        folded = plan.projectList().apply(0).child()
+        if folded.getClass().getSimpleName() != "Literal":
+            raise RuntimeError(
+                f"bucket_of({value!r}): optimizer left {folded.toString()} "
+                "unfolded; expected a literal"
+            )
+        return int(folded.eval(None))
 
     def read_key(self, **key_values) -> DataFrame:
         """Point lookup: prune to the ONE bucket the bucket_by value

@@ -9,7 +9,18 @@ for local runs:
 - Arrow execution on — every Python-side transform is a vectorized
   pandas_udf batch, never a row-at-a-time UDF;
 - shuffle partitions sized to cores locally; on a real cluster this is
-  2-3x total executor cores (AQE coalesces the excess).
+  2-3x total executor cores (AQE coalesces the excess);
+- PySpark's per-Column call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every Column call also fetches the session and a conf, sets and clears
+  an origin and walks the Python stack: ``F.col("a").cast("int")
+  .alias("b")`` costs 38-40 py4j round trips on and 5 off (PySpark
+  4.1.2), and one 20k-event replay window's ``_merge_rows`` about 1,120
+  on and 340 off (tests/test_driver_round_trips.py budgets it). The
+  trade-off: a DataFrame error no longer names the Python line that
+  built the failing Column; the JVM's query context (the SQL fragment
+  and plan node) is still reported. It is a static conf, so it holds for
+  the session's lifetime.
 """
 
 from __future__ import annotations
@@ -57,6 +68,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("PASAR_DRIVER_MEM", "16g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Session default codec: it governs only the parquet writes that

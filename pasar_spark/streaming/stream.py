@@ -106,7 +106,8 @@ class WalTail:
         # pinned WAL envelope schema (the production path: a stream must
         # be startable BEFORE the first file ships, and must not re-infer
         # its envelope from whatever happens to be in the directory).
-        # None keeps the old infer-from-contents behavior for ad-hoc use.
+        # None infers it from the dir's contents (ad-hoc use), or takes
+        # envelope_schema() while no parquet file has shipped yet.
         self.schema = schema
         self.wire_format = wire_format
         # quarantine for non-row-change lines on the debezium-json path
@@ -178,14 +179,19 @@ class WalTail:
         format decides the source shape. ``debezium-json`` tails JSON
         lines (schema is `value string` by construction, always startable
         against an empty dir); ``parquet`` needs an envelope schema —
-        pinned by the caller (production) or inferred from current
-        contents (ad-hoc)."""
+        pinned by the caller (production), inferred from current contents
+        (ad-hoc), or :func:`envelope_schema` while the dir holds no
+        parquet file yet (Spark cannot infer one from an empty dir)."""
         self.bootstrap()
         parquet = self.wire_format == "parquet"
+        os.makedirs(self.wal_path, exist_ok=True)  # tail-before-first-ship
         schema = self.schema
         if parquet and schema is None:
-            schema = self.spark.read.parquet(self.wal_path).schema
-        os.makedirs(self.wal_path, exist_ok=True)  # tail-before-first-ship
+            shipped = any(f.endswith(".parquet") for f in os.listdir(self.wal_path))
+            schema = (
+                self.spark.read.parquet(self.wal_path).schema if shipped
+                else envelope_schema()
+            )
         reader = self.spark.readStream
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
