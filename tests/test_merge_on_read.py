@@ -39,12 +39,16 @@ def _state(table):
 
 def test_mor_equals_cow(spark, wal):
     root, path = wal
-    cow = ReplayRunner(spark, f"{root}/cow", n_buckets=4, chunk_size=2_000).replay(path)
+    cow = ReplayRunner(
+        spark, f"{root}/cow", n_buckets=4, chunk_size=2_000, merge_mode="cow"
+    ).replay(path)
     mor = ReplayRunner(
         spark, f"{root}/mor", n_buckets=4, chunk_size=2_000,
         merge_mode="mor", compact_min_files=10_000,  # never compact here
     ).replay(path)
     assert _state(mor) == _state(cow)
+    # the cow table really is eager: every bucket fully resolved
+    assert cow.manifest["unresolved"] == []
     # MoR table really is lazy: buckets flagged unresolved, >1 file each
     assert len(mor.manifest["unresolved"]) > 0
     assert max(mor.bucket_file_counts().values()) >= 6

@@ -32,13 +32,16 @@ ORDER BY conv_id, turn_idx
 """
 
 
-@pytest.fixture(scope="module")
-def replayed(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("e2e")
+@pytest.fixture(scope="module", params=["mor", "cow"])
+def replayed(spark, tmp_path_factory, request):
+    root = tmp_path_factory.mktemp(f"e2e-{request.param}")
     log_path = str(root / "wal")
     events = change_events(spark, N_EVENTS, n_convs=300, seed=7)
     write_change_log(events, log_path, n_files=8)
-    runner = ReplayRunner(spark, str(root / "table"), n_buckets=8, chunk_size=6_000)
+    runner = ReplayRunner(
+        spark, str(root / "table"), n_buckets=8, chunk_size=6_000,
+        merge_mode=request.param,
+    )
     table = runner.replay(log_path)
     return log_path, table
 
