@@ -1,4 +1,4 @@
-"""Bucket-pruned copy-on-write MERGE — the engine's upsert primitive.
+"""Bucket-pruned LWW MERGE — the engine's upsert primitive.
 
 Semantics (the Iceberg statement this stands in for on a real cluster):
 
@@ -13,18 +13,23 @@ Replaces the reference's truncate-then-load (etl/pypasar/omop/person.py:
 24-33, measurement.py:91-95) with an incremental O(changes)+O(touched
 buckets) rewrite.
 
+Both modes compute the statement the same way: the chunk is LWW-reduced
+to one delta row per key (a delete becomes a tombstone row), and the
+table's state is the LWW resolve of stored rows ∪ deltas. mor appends
+the delta and leaves the resolve to reads and compaction; cow resolves
+the touched buckets' stored rows ∪ the delta at once and replaces those
+buckets. A stale event loses the resolve to the stored row, and a
+tombstone wins it like any row, so no match/decision logic exists apart
+from the reduce.
+
 Scale notes (100 TB / 1000 executors):
 - the source side is LWW-reduced FIRST (one row per touched key), so the
-  join's streamed side is bounded by distinct keys per chunk, not raw
-  event volume;
-- the target side is pruned to the buckets the chunk actually touches
-  (manifest file-list pruning — Iceberg partition pruning analogue);
-- both sides shuffle-hash-join on the natural key; AQE skew-join splits
-  any still-hot bucket. On real Iceberg, a storage-partitioned join
-  removes the target-side shuffle entirely — the bucket layout here is
-  chosen to make that swap possible;
-- metrics ride the write job via ``DataFrame.observe`` (no extra pass
-  over the data), the Spark-native version of the reference's per-table
+  delta is bounded by distinct keys per chunk, not raw event volume;
+- cow reads only the buckets the delta touches (manifest file-list
+  pruning — Iceberg partition pruning analogue), and its resolve is one
+  aggregate keyed on the natural key over those buckets plus the delta;
+- metrics ride the delta via ``DataFrame.observe`` (no extra pass over
+  the data), the Spark-native version of the reference's per-table
   stats (etl/__main__.py:77-98).
 """
 
@@ -35,7 +40,7 @@ from pyspark.sql import functions as F
 
 from pasar_spark.cdc.lww import lww_reduce
 from pasar_spark.functions.normalize import normalize_text
-from pasar_spark.lake.table import LakeTable
+from pasar_spark.lake.table import LakeTable, _union
 
 ORDER = ["ts", "lsn"]
 
@@ -103,10 +108,13 @@ def merge_batch(
     Idempotent: a batch_id already in the ledger is a no-op (exactly-once
     under replay/crash-retry).
 
-    mode='cow': read+join+rewrite the affected buckets (reads stay cheap,
-    writes cost O(touched buckets) — fine while chunks >> table).
-    mode='mor': append the LWW-reduced chunk as per-bucket delta files —
-    O(chunk) writes regardless of table size, the 10^10-event path; reads
+    Both modes LWW-reduce the chunk to delta rows and count ``applied`` /
+    ``deleted`` over them (upserts / tombstones, per reduce).
+    mode='cow': resolve the touched buckets' stored rows ∪ the delta and
+    replace those buckets (reads stay cheap, writes cost O(touched
+    buckets) — fine while chunks >> table).
+    mode='mor': append the delta as per-bucket delta files — O(chunk)
+    writes regardless of table size, the 10^10-event path; reads
     LWW-resolve deltas until compact_buckets folds them. Both modes are
     equivalent under LWW because the reduce is associative: resolving
     (base ∪ deltas) lazily equals resolving eagerly per batch.
@@ -131,130 +139,62 @@ def merge_batch(
     reduced = reduce_changes(changes, key, order, payload, normalize).withColumn(
         "_bucket", table.bucket_expr()
     )
+    obs = Observation(f"{mode}-{batch_id}")
+    delta_rows = reduced.select(*delta_columns(key, order, payload), F.col("_bucket")).observe(
+        obs,
+        F.sum((~F.col("_tombstone")).cast("long")).alias("applied"),
+        F.sum(F.col("_tombstone").cast("long")).alias("deleted"),
+    )
 
-    if mode == "mor":
-        obs = Observation(f"mor-{batch_id}")
-        final = reduced.select(
-            *delta_columns(key, order, payload), F.col("_bucket")
-        ).observe(
-            obs,
-            F.sum((~F.col("_tombstone")).cast("long")).alias("applied"),
-            F.sum(F.col("_tombstone").cast("long")).alias("deleted"),
-        )
-        commit_id = table.new_commit_id()
-        new_files = table.write_files(final, commit_id)
+    def ledger() -> dict:
+        """The commit's ledger arguments, read once the observed rows
+        have flowed (mor: the delta write; cow: the bucket collect)."""
         m = _obs_get(obs, {"applied": 0, "deleted": 0})
         src_stats = _obs_get(obs_src, {"events_seen": 0, "max_lsn": None})
-        delta = {
-            "applied": int(m["applied"] or 0),
-            "deleted": int(m["deleted"] or 0),
-            "events_seen": int(src_stats["events_seen"] or 0),
-        }
-        if last_lsn is None:
-            last_lsn = (
-                int(src_stats["max_lsn"]) if src_stats["max_lsn"] is not None else None
-            )
-        table = table.commit_append(
-            new_files,
-            batch_id,
-            last_lsn=last_lsn,
-            metrics_delta=delta,
+        lsn = last_lsn if last_lsn is not None else src_stats["max_lsn"]
+        return dict(
+            batch_id=batch_id,
+            last_lsn=None if lsn is None else int(lsn),
+            metrics_delta={
+                "applied": int(m["applied"] or 0),
+                "deleted": int(m["deleted"] or 0),
+                "events_seen": int(src_stats["events_seen"] or 0),
+            },
             partition_offsets=partition_offsets,
             staged_name=stage,
         )
-        return table, delta
 
-    reduced = reduced.persist()
+    if mode == "mor":
+        new_files = table.write_files(delta_rows, table.new_commit_id())
+        commit = ledger()
+        return table.commit_append(new_files, **commit), commit["metrics_delta"]
+
+    delta_rows = delta_rows.persist()
     try:
         affected = sorted(
-            r["_bucket"] for r in reduced.select("_bucket").distinct().collect()
+            r["_bucket"] for r in delta_rows.select("_bucket").distinct().collect()
         )
-        src_stats = obs_src.get
-
-        base = table.read(buckets=affected, include_tombstones=True)
-        change_side = reduced.select(
-            *[F.col(k).alias(f"_ck_{k}") for k in key],
-            *[F.col(c).alias(f"_c_{c}") for c in order + payload + ["op", "_bucket"]],
+        commit = ledger()
+        stored = table._read_files([str(b) for b in affected])
+        logical = [F.col(f.name).cast(f.type).alias(f.name) for f in table.schema.fields]
+        rows = table._resolve(
+            _union([p for p in (stored, delta_rows.select(*logical)) if p is not None])
         )
-        cond = None
-        for k in key:
-            c = base[k] == change_side[f"_ck_{k}"]
-            cond = c if cond is None else (cond & c)
-        joined = base.join(change_side, cond, "full_outer")
-
-        base_exists = F.col(order[-1]).isNotNull()
-        base_live = base_exists & ~F.coalesce(F.col("_tombstone"), F.lit(False))
-        change_exists = F.col(f"_c_{order[-1]}").isNotNull()
-        newer = F.struct(*[F.col(f"_c_{c}") for c in order]) > F.struct(
-            *[F.col(c) for c in order]
-        )
-        take_change = change_exists & (~base_exists | newer)
-        is_delete = F.col("_c_op") == "D"
-        # Deletes are persisted as TOMBSTONES (row kept, payload nulled,
-        # _tombstone=true) so an out-of-order staler event in a later chunk
-        # can never resurrect the key. Tombstone GC past the out-of-order
-        # horizon is a vacuum concern, not a merge concern.
-        decision = (
-            F.when(take_change & ~is_delete, F.lit("apply"))
-            .when(take_change & is_delete & base_live, F.lit("delete"))
-            .when(take_change & is_delete & ~base_live, F.lit("noop_delete"))
-            .when(change_exists & ~take_change, F.lit("stale"))
-            .otherwise(F.lit("keep"))
-        )
-
-        taken = F.col("_dec").isin("apply", "delete", "noop_delete")
-        out_cols = []
-        for k in key:
-            out_cols.append(F.coalesce(F.col(k), F.col(f"_ck_{k}")).alias(k))
-        for c in order:
-            out_cols.append(F.when(taken, F.col(f"_c_{c}")).otherwise(F.col(c)).alias(c))
-        for c in payload:
-            out_cols.append(
-                F.when(F.col("_dec") == "apply", F.col(f"_c_{c}"))
-                .when(taken, F.lit(None))
-                .otherwise(F.col(c))
-                .alias(c)
-            )
-        out_cols.append(
-            F.when(F.col("_dec").isin("delete", "noop_delete"), F.lit(True))
-            .when(F.col("_dec") == "apply", F.lit(False))
-            .otherwise(F.coalesce(F.col("_tombstone"), F.lit(False)))
-            .alias("_tombstone")
-        )
-        merged = joined.withColumn("_dec", decision).select(*out_cols, F.col("_dec"))
-
-        obs_merge = Observation(f"merge-{batch_id}")
-        merged = merged.observe(
-            obs_merge,
-            F.sum((F.col("_dec") == "apply").cast("long")).alias("applied"),
-            F.sum((F.col("_dec") == "delete").cast("long")).alias("deleted"),
-            F.sum((F.col("_dec") == "stale").cast("long")).alias("skipped_stale"),
-        )
-        final = merged.drop("_dec").withColumn("_bucket", table.bucket_expr())
-
-        commit_id = table.new_commit_id()
-        new_files = table.write_files(final, commit_id)
-        m = obs_merge.get if affected else {"applied": 0, "deleted": 0, "skipped_stale": 0}
-        delta = {
-            "applied": int(m["applied"] or 0),
-            "deleted": int(m["deleted"] or 0),
-            "skipped_stale": int(m["skipped_stale"] or 0),
-            "events_seen": int(src_stats["events_seen"] or 0),
-        }
-        if last_lsn is None:
-            last_lsn = int(src_stats["max_lsn"]) if src_stats["max_lsn"] is not None else None
-        table = table.commit_merge(
-            replaced_buckets=affected,
-            new_files=new_files,
-            batch_id=batch_id,
-            last_lsn=last_lsn,
-            metrics_delta=delta,
-            partition_offsets=partition_offsets,
-            staged_name=stage,
-        )
-        return table, delta
+        return _rewrite_buckets(table, rows, affected, **commit), commit["metrics_delta"]
     finally:
-        reduced.unpersist()
+        delta_rows.unpersist()
+
+
+def _rewrite_buckets(
+    table: LakeTable, rows: DataFrame, buckets: list, sort_keys: bool = False, **commit
+) -> LakeTable:
+    """Replace ``buckets``' files with ``rows`` (their fully resolved
+    state, logical columns) in one snapshot — the tail of the cow merge,
+    major compaction and vacuum. ``commit`` goes to ``commit_merge``."""
+    new_files = table.write_files(
+        rows.withColumn("_bucket", table.bucket_expr()), table.new_commit_id(), sort_keys=sort_keys
+    )
+    return table.commit_merge(replaced_buckets=buckets, new_files=new_files, **commit)
 
 
 def compact_buckets(
@@ -323,17 +263,14 @@ def compact_buckets(
         )
 
     if major:
-        data = table.read(buckets=major, include_tombstones=True).withColumn(
-            "_bucket", table.bucket_expr()
-        )
-        commit_id = table.new_commit_id()
         # major compaction rewrites the bucket's long-lived base anyway —
         # the one place key-clustered files are worth their sort (row-group
         # pruning for point lookups; 2.6x too slow on the ingest path)
-        new_files = table.write_files(data, commit_id, sort_keys=True)
-        table = table.commit_merge(
-            replaced_buckets=major,
-            new_files=new_files,
+        table = _rewrite_buckets(
+            table,
+            table.read(buckets=major, include_tombstones=True),
+            major,
+            sort_keys=True,
             batch_id=f"compact-v{table.version}",
             metrics_delta=delta_metrics,
             tag=f"compact-v{table.version}",
@@ -363,7 +300,6 @@ def vacuum_tombstones(
     dispatches unresolved buckets to the per-column resolve for
     conflict='patch' manifests; the rewritten rows keep their winner
     structs (pinned by tests/test_patch_table.py)."""
-    candidates = []
     all_buckets = list(table.manifest["buckets"].keys())
     flags = (
         table.read(buckets=[int(b) for b in all_buckets], include_tombstones=True)
@@ -378,17 +314,14 @@ def vacuum_tombstones(
     candidates = [str(r["_bucket"]) for r in flags]
     if not candidates:
         return table, {"vacuumed_buckets": 0}
-    data = (
-        table.read(buckets=[int(b) for b in candidates], include_tombstones=True)
-        .where(~(F.col("_tombstone") & (F.col("lsn") < horizon_lsn)))
-        .withColumn("_bucket", table.bucket_expr())
+    data = table.read(buckets=[int(b) for b in candidates], include_tombstones=True).where(
+        ~(F.col("_tombstone") & (F.col("lsn") < horizon_lsn))
     )
-    commit_id = table.new_commit_id()
-    new_files = table.write_files(data, commit_id)
     delta = {"vacuumed_buckets": len(candidates)}
-    table = table.commit_merge(
-        replaced_buckets=candidates,
-        new_files=new_files,
+    table = _rewrite_buckets(
+        table,
+        data,
+        candidates,
         batch_id=f"vacuum-v{table.version}",
         metrics_delta=delta,
         tag=f"vacuum-v{table.version}",

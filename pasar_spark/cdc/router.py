@@ -231,8 +231,8 @@ class MultiTableReplayRunner:
     def _fan_out(self, tables, routed, todo, batch_id, counts, chunk_hi=None) -> None:
         """Apply one routed window or streaming epoch to the ``todo``
         targets, replacing their entries in ``tables``. The combined
-        fan-out (:func:`combined_window`) needs mor mode (cow needs a
-        per-table full-outer merge), homogeneous targets, and no
+        fan-out (:func:`combined_window`) needs mor mode (cow resolves
+        each table's touched buckets), homogeneous targets, and no
         schema-evolution step landing in this window — otherwise each
         slice takes the single-table row apply, which owns evolution."""
         if (

@@ -157,8 +157,9 @@ class ReplayRunner:
         chunk_size: int = 1_000_000,
         evolution_plan: EvolutionPlan | None = None,
         # 'mor' (default): O(chunk) delta appends + bounded compaction —
-        # 3x faster than 'cow' at 8 chunks and the gap grows with table
-        # size; 'cow' keeps reads join-free (see cdc/merge.py)
+        # 1.7x faster than 'cow' over 1M events in 4 chunks (16 buckets,
+        # local[4], 4 vCPUs) and the gap grows with table size; 'cow'
+        # keeps every bucket resolved, so reads skip the resolve
         merge_mode: str = "mor",
         compact_min_files: int = 8,
     ):

@@ -91,35 +91,6 @@ def quality_score(col: Column) -> Column:
     return F.round(F.lit(0.5) * length_score + F.lit(0.5) * stopword_ratio(col), 4)
 
 
-def lang_scores(col: Column) -> Column:
-    """map<lang, stopword-hit-ratio> for the supported languages."""
-    return F.map_from_arrays(
-        F.array(*[F.lit(lang) for lang in STOPWORDS]),
-        F.array(*[stopword_ratio(col, lang) for lang in STOPWORDS]),
-    )
-
-
-def lang_id_tokens(toks: Column) -> Column:
-    """Pick the language with the highest stopword hit ratio over a
-    pre-materialized token array; 'und' when nothing matches (e.g. zh
-    with latin-script stopword lists)."""
-    best = None
-    best_score = None
-    for lang in STOPWORDS:
-        s = stopword_ratio_tokens(toks, lang)
-        if best is None:
-            best, best_score = F.lit(lang), s
-        else:
-            cond = s > best_score
-            best = F.when(cond, F.lit(lang)).otherwise(best)
-            best_score = F.when(cond, s).otherwise(best_score)
-    return F.when(best_score > 0, best).otherwise(F.lit("und"))
-
-
-def lang_id(col: Column) -> Column:
-    return lang_id_tokens(tokens(col))
-
-
 # PII masking — the C4/RefinedWeb-class redaction pass every
 # training-data pipeline runs before release. Patterns restricted to the
 # RE2 ∩ Java-regex dialect (no backrefs/lookarounds) so the DuckDB
@@ -156,13 +127,14 @@ def pii_counts(col: Column) -> dict[str, Column]:
 def with_lang_id(df, text_col: str = "text", out_col: str = "pred_lang"):
     """DataFrame-level language ID — the form to use in pipelines.
 
-    ``lang_id_tokens`` builds one nested-CASE Column whose ratio subtrees
-    get duplicated at every comparison (measured ~15x redundant passes
-    over the token array). This version stages the computation through
-    projections instead: tokenize+lower once, one hit-count pass per
-    language, then a CASE over the materialized ratio columns. Ties break
-    in STOPWORDS declaration order (en > de > es > fr), matching the
-    oracle SQL in queries_docs.py.
+    The language with the highest stopword hit ratio wins; 'und' when
+    nothing matches (e.g. zh with latin-script stopword lists). The
+    computation is staged through projections: tokenize+lower once, one
+    hit-count pass per language, then a CASE over the materialized ratio
+    columns. A single nested-CASE Column would duplicate its ratio
+    subtrees at every comparison (measured ~15x redundant passes over
+    the token array). Ties break in STOPWORDS declaration order
+    (en > de > es > fr), matching the oracle SQL in queries_docs.py.
     """
     langs = list(STOPWORDS)
     ratio_cols = [f"_r_{lang}" for lang in langs]
@@ -250,10 +222,6 @@ def minhash_from_shingles(sh: Column, n_hashes: int = 32) -> Column:
             lambda a, b: F.least(a, b),
         ),
     )
-
-
-def minhash_signature(col: Column, n_hashes: int = 32, shingle_n: int = 5) -> Column:
-    return minhash_from_shingles(shingles(col, shingle_n), n_hashes)
 
 
 def winnow_fingerprints(col: Column, shingle_n: int = 5, window: int = 4) -> Column:

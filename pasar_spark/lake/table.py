@@ -214,7 +214,6 @@ class LakeTable:
             "metrics": {
                 "applied": 0,
                 "deleted": 0,
-                "skipped_stale": 0,
                 "skipped_batches": 0,
                 "events_seen": 0,
             },
