@@ -49,7 +49,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pasar_spark.lake.table import LakeTable
+from pasar_spark.lake.table import LakeTable, local_frame
 
 CURRENT = "CURRENT"
 
@@ -100,7 +100,7 @@ def read_export(spark: SparkSession, dest: str, version: int | None = None) -> D
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(m["spark_schema"]))
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, schema)
     return spark.read.parquet(*files)
 
 

@@ -40,6 +40,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pasar_spark.lake.schema import TableSchema
 
@@ -152,6 +153,40 @@ def _entry_may_contain(entry: dict, phys_col: str, value) -> bool:
 
 def _union(parts: list[DataFrame]) -> DataFrame | None:
     return functools.reduce(DataFrame.unionByName, parts) if parts else None
+
+
+def local_frame(spark: SparkSession, struct: StructType, rows=None) -> DataFrame:
+    """A DataFrame over an Arrow table held on the driver (no rows when
+    ``rows`` is None). Spark plans it as a LocalRelation, so a collect
+    the optimizer folds into it runs no job, where an empty
+    ``createDataFrame([], schema)`` parallelizes a Python RDD and runs
+    one.
+
+    The table is cast to the Arrow form of ``struct``: every timestamp,
+    nested ones included, becomes ``timestamp("us", tz="UTC")``, since
+    pyarrow decodes Spark's INT96 timestamps tz-naive and PySpark would
+    read those as session-local wall time. The chunks are combined first:
+    PySpark 4.1.2 drops every row of a table that starts with two or more
+    empty record batches."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(struct)
+    rows = schema.empty_table() if rows is None else rows.combine_chunks().cast(schema)
+    return spark.createDataFrame(rows, struct)
+
+
+def _arrow_pushable(value, sql_type: str) -> bool:
+    """Whether ``col == value`` may go to pyarrow's parquet filter as is:
+    the Python value's type is the column's type (a str on an int column,
+    or an int beyond the column's width, is left to Spark's filter)."""
+    if sql_type == "string":
+        return isinstance(value, str)
+    bits = {"smallint": 16, "int": 32, "bigint": 64}.get(sql_type)
+    return (
+        bits is not None
+        and type(value) is int
+        and -(2 ** (bits - 1)) <= value < 2 ** (bits - 1)
+    )
 
 
 class CommitConflict(Exception):
@@ -331,7 +366,8 @@ class LakeTable:
         ``key_equals`` (logical column -> value) additionally skips files
         whose manifest min/max stats prove the value absent — safe under
         both LWW and patch resolution because a file without the key
-        contributes nothing to that key's winner."""
+        contributes nothing to that key's winner — and reads the
+        surviving files on the driver (see read_key)."""
         cur = self.schema
         wanted = (
             list(self.manifest["buckets"].keys())
@@ -349,11 +385,9 @@ class LakeTable:
             lazy = self._resolve(lazy)
         out = _union([p for p in (plain, lazy) if p is not None])
         if out is None:
-            out = self.spark.createDataFrame([], cur.logical_struct())
+            out = local_frame(self.spark, cur.logical_struct())
         if not include_tombstones and "_tombstone" in cur.names():
-            out = out.where(
-                (F.col("_tombstone").isNull()) | (~F.col("_tombstone"))
-            ).drop("_tombstone")
+            out = out.where("_tombstone IS NULL OR NOT _tombstone").drop("_tombstone")
         return out
 
     def _resolve(self, df: DataFrame) -> DataFrame:
@@ -379,19 +413,19 @@ class LakeTable:
 
     def bucket_of(self, value) -> int:
         """The bucket a bucket_by value lands in — evaluated through the
-        SAME Spark expression as bucket_expr (xxhash64 is not exposed to
-        Python). The expression over a literal is constant-folded by the
-        optimizer, so the value is read off the optimized plan: no Spark
-        job runs and no table is scanned."""
-        plan = (
-            self.spark.range(1)
-            .select(
-                F.pmod(F.xxhash64(F.lit(value)), F.lit(self.manifest["n_buckets"]))
-                .cast("int")
-                .alias("b")
-            )
-            ._jdf.queryExecution().optimizedPlan()
-        )
+        SAME Spark functions as bucket_expr (xxhash64 is not exposed to
+        Python). xxhash64 hashes its input's type, so the value is first
+        cast to the bucket_by column's type: a Python int on a bigint
+        column, or the CLI's string key on an int column, hashes as the
+        stored value does. The expression over a bound parameter is
+        constant-folded by the optimizer, so the value is read off the
+        optimized plan: no Spark job runs and no table is scanned."""
+        col_type = self.schema.field_by_name(self.manifest["bucket_by"]).type
+        plan = self.spark.sql(
+            f"SELECT CAST(pmod(xxhash64(CAST(:v AS {col_type})), "
+            f"{int(self.manifest['n_buckets'])}) AS INT) AS b",
+            args={"v": value},
+        )._jdf.queryExecution().optimizedPlan()
         folded = plan.projectList().apply(0).child()
         if folded.getClass().getSimpleName() != "Literal":
             raise RuntimeError(
@@ -403,21 +437,33 @@ class LakeTable:
     def read_key(self, **key_values) -> DataFrame:
         """Point lookup: prune to the ONE bucket the bucket_by value
         hashes to, skip files inside it whose manifest min/max stats
-        prove the key absent, then filter by the given key equalities —
-        four pruning tiers (the lakehouse analogue of an index seek;
-        Iceberg hidden-partition pruning over ``bucket(B, conv_id)`` plus
-        its per-file column stats). At 100 TB / 1024 buckets a lookup
-        plans tasks for only the stats-surviving files of one bucket,
-        and inside each file the pushed key equality prunes row groups:
-        via min/max stats where rows are key-sorted (bases, after major
-        compaction), and via the key column's parquet bloom filter /
-        complete dictionary where they aren't (unsorted deltas — see
-        write_files). The file-stats tier bites when key values carry
-        ingest-time locality — ULID-style or monotonically assigned ids,
-        where each delta file covers a narrow id range; on uniformly
-        random keys every file's min/max spans the space and the tier is
-        inert (and free — it reads the manifest, not storage) — that
-        regime is exactly what the bloom tier covers."""
+        prove the key absent, then read the surviving files ON THE
+        DRIVER with pyarrow — the key equalities pushed into the parquet
+        reader, which skips row groups whose min/max exclude the key —
+        and filter by the given key equalities (the lakehouse analogue of
+        an index seek; Iceberg hidden-partition pruning over
+        ``bucket(B, conv_id)`` plus its per-file column stats).
+
+        The rows reach Spark as one Arrow table (a LocalRelation), and the
+        field-id projection, the MoR resolve, the tombstone filter and the
+        key filters run on top of it. For a resolved bucket the optimizer
+        folds all of that into the local relation, so the collect runs no
+        Spark job: no scan is planned, no Hadoop conf is broadcast and no
+        code is generated. An unresolved bucket still runs its resolve,
+        over the local rows.
+
+        Row-group min/max bite where rows are key-sorted (bases, after
+        major compaction); the file-stats tier bites when key values carry
+        ingest-time locality (ULID-style or monotonically assigned ids).
+        On uniformly random keys in unsorted deltas neither prunes, and
+        pyarrow 16.1 does not read the parquet bloom filters that
+        write_files puts on the key column, so the driver reads every
+        surviving row group of the bucket's surviving files. That is the
+        scale trade-off: lookup cost grows with one bucket's un-pruned
+        bytes, which stay small while buckets are small and bases
+        compacted. On the 3 x 3.5 MB uniform-key files of
+        tests/test_bloom_pruning.py a lookup measured 0.20-0.26 s against
+        0.27-0.31 s for the Spark scan with blooms (4 vCPUs)."""
         bucket_by = self.manifest["bucket_by"]
         if bucket_by not in key_values:
             raise ValueError(
@@ -427,9 +473,12 @@ class LakeTable:
             buckets=[self.bucket_of(key_values[bucket_by])],
             key_equals=key_values,
         )
-        for k, v in key_values.items():
-            df = df.where(F.col(k) == F.lit(v))
-        return df
+        return df.where(
+            functools.reduce(
+                lambda a, b: a & b,
+                (F.col(k) == F.lit(v) for k, v in key_values.items()),
+            )
+        )
 
     def _read_files(
         self, bucket_ids: list[str], key_equals: dict | None = None
@@ -441,7 +490,7 @@ class LakeTable:
         ]
         if key_equals:
             entries = self._prune_entries(entries, key_equals)
-        return self._read_entries(entries)
+        return self._read_entries(entries, key_equals)
 
     def _prune_entries(self, entries: list[dict], key_equals: dict) -> list[dict]:
         """Drop manifest entries whose per-file key min/max prove they
@@ -461,10 +510,13 @@ class LakeTable:
             if all(_entry_may_contain(e, c, v) for c, v in phys.items())
         ]
 
-    def _read_entries(self, entries: list[dict]) -> DataFrame | None:
+    def _read_entries(
+        self, entries: list[dict], key_equals: dict | None = None
+    ) -> DataFrame | None:
         """Read an explicit manifest-entry subset at the current logical
         schema — the tiered-compaction path reads only a bucket's delta
-        files, never the base."""
+        files, never the base. With ``key_equals`` (a point lookup) each
+        group is read on the driver instead of by a Spark scan."""
         cur = self.schema
         by_schema: dict[int, list[str]] = {}
         for entry in entries:
@@ -475,16 +527,48 @@ class LakeTable:
         for sid, paths in by_schema.items():
             written = self._schema_at(sid)
             written_ids = {f.id for f in written.fields}
-            raw = self.spark.read.schema(written.physical_struct()).parquet(*paths)
-            cols = [
-                (
-                    F.col(f"f{f.id}").cast(f.type) if f.id in written_ids
-                    else F.lit(None).cast(f.type)
-                ).alias(f.name)
+            raw = (
+                self._read_local(written, paths, key_equals)
+                if key_equals
+                else self.spark.read.schema(written.physical_struct()).parquet(*paths)
+            )
+            # one SQL string per column: the same casts and null-fill as
+            # F.col().cast().alias() chains, in a handful of py4j round
+            # trips instead of about five per column
+            parts.append(raw.selectExpr(*(
+                f"CAST({f'f{f.id}' if f.id in written_ids else 'NULL'} AS {f.type})"
+                f" AS `{f.name.replace('`', '``')}`"
                 for f in cur.fields
-            ]
-            parts.append(raw.select(*cols))
+            )))
         return _union(parts)
+
+    def _read_local(
+        self, written: TableSchema, paths: list[str], key_equals: dict
+    ) -> DataFrame:
+        """One written-schema group of files read with pyarrow, as a
+        local relation of ``written``'s physical struct. Key equalities
+        whose Python type matches the column's type in this group are
+        pushed into the reader (row-group min/max skipping plus a row
+        filter); the caller's Spark key filter keeps the result exact."""
+        import pyarrow.parquet as pq
+
+        cur = self.schema
+        names = set(cur.names())
+        by_id = {f.id: f for f in written.fields}
+        filters = []
+        for k, v in key_equals.items():
+            fid = cur.field_by_name(k).id if k in names else None
+            if fid in by_id and _arrow_pushable(v, by_id[fid].type):
+                filters.append((f"f{fid}", "==", v))
+        struct = written.physical_struct()
+        rows = pq.read_table(
+            paths,
+            columns=struct.names,
+            filters=filters or None,
+            partitioning=None,
+            coerce_int96_timestamp_unit="us",
+        )
+        return local_frame(self.spark, struct, rows)
 
     # ---------------------------------------------------------------- write
     def write_files(
@@ -527,17 +611,15 @@ class LakeTable:
         # (measured on the transcript payload), and a four-arm codec x
         # bloom A/B of a 2M-event replay on 4 vCPUs was flat (6.87-7.56 s),
         # so neither is a tuning knob.
-        # Parquet bloom filter on the bucketing key — the pruning tier the
-        # manifest min/max stats CAN'T provide: on uniformly random keys
-        # every file's min/max spans the key space (stats inert), but a
-        # bloom answers "is this exact key in this row group" regardless
-        # of distribution. Built JVM-side by parquet-java 1.16 in the
-        # writer tasks (adaptive sizing, ~0.25 MB per 35 MB file, no
-        # measurable write-time cost); consumed automatically by Spark's
-        # row-group filtering when a key equality is pushed down, so
-        # read_key point lookups skip unsorted DELTA row groups that
-        # min/max and sort-order can't rule out (sorted bases already
-        # have tight stats).
+        # Parquet bloom filter on the bucketing key: on uniformly random
+        # keys every file's min/max spans the key space, but a bloom
+        # answers "is this exact key in this row group" regardless of
+        # distribution. Built JVM-side by parquet-java 1.16 in the writer
+        # tasks (adaptive sizing, ~0.25 MB per 35 MB file, no measurable
+        # write-time cost). Only Spark-side readers consume it (row-group
+        # filtering on a pushed key equality). read_key reads on the
+        # driver with pyarrow 16.1, which prunes by manifest stats and
+        # row-group min/max but does not read parquet blooms.
         writer = configure_parquet_writer(
             out.write.mode("errorifexists"), cur, self.manifest
         )
@@ -851,7 +933,7 @@ class LakeTable:
         def _state(entries: list[dict], buckets_read, manifest: dict) -> DataFrame:
             df = to._read_entries(entries)
             if df is None:
-                df = self.spark.createDataFrame([], cur.logical_struct())
+                df = local_frame(self.spark, cur.logical_struct())
             # resolved-bucket fast path: a bucket leaves 'unresolved' only
             # through a commit_merge of a fully resolved rewrite, so it
             # already holds exactly one row per key and the reduce is the

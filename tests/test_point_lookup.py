@@ -85,3 +85,23 @@ def test_cli_lookup(table, capsys):
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["rows"] and all(r["conv_id"] == conv for r in out["rows"])
+
+
+def test_cli_lookup_on_int_bucketed_table(spark, tmp_path, capsys):
+    # --key arrives as a string; the bucket must be the int column's
+    from pasar_spark.cli import main
+    from pasar_spark.lake.table import LakeTable
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), [("k", "int"), ("v", "string")], key=["k"],
+        n_buckets=8, bucket_by="k",
+    )
+    df = spark.createDataFrame([(k, f"v{k}") for k in range(20)], "k int, v string")
+    t.commit_merge(
+        [], t.write_files(df.withColumn("_bucket", t.bucket_expr()), t.new_commit_id()),
+        batch_id="b0",
+    )
+    for k in range(20):
+        assert main(["lookup", "--table", t.path, "--key", str(k)]) == 0
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert out["rows"] == [{"k": k, "v": f"v{k}"}]
