@@ -34,11 +34,12 @@ Scale design (the part that matters at 10^10 events):
   ``groupBy`` over the cached rows; empty slices never launch a merge.
 - **Combined fan-out (default when targets are homogeneous).** The
   naive per-table window costs N reduce+write Spark jobs. The combined
-  path runs ONE LWW reduce keyed by ``(_route, key)`` and ONE
-  ``partitionBy(_route, _bucket)`` write into a staging dir (per-route
+  path runs ONE LWW reduce keyed by ``(_route, key)`` and ONE routed
+  write (``LakeTable.write_routed``: the same physical write as
+  ``write_files``, partitioned by ``(_route, _bucket)``; per-route
   applied/deleted metrics ride the write job as observe() aggregates),
-  then attaches each table's files with driver-side renames + a
-  metadata commit — per-window Spark cost is INDEPENDENT of table
+  which hands each table its own data dir, then one metadata commit per
+  table — per-window Spark cost is INDEPENDENT of table
   count. Measured at 8M events, local[32], best-of-2 same-window:
   3-table combined 22.2 s ≈ single-table 24.3 s (the invariance
   claim), per-table fan-out 31.0 s; at 10 tables combined 21.9 s vs
@@ -60,7 +61,6 @@ the single-table runner.
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -129,7 +129,6 @@ class MultiTableReplayRunner:
         if bad:
             raise ValueError(f"table names must be plain dir names, got {bad}")
         self.spark = spark
-        self.base_dir = base_dir
         self.route_by = route_by
         self.chunk_size = chunk_size
         self.evolution_plan = evolution_plan or EvolutionPlan()
@@ -154,10 +153,6 @@ class MultiTableReplayRunner:
 
     # ------------------------------------------------------------------
     def bootstrap(self) -> dict[str, LakeTable]:
-        # a crashed combined window or epoch leaves its staging dir
-        # behind; batch replay and a long-lived streaming tail over the
-        # same base_dir both reclaim it on start
-        sweep_stale_staging(self.base_dir)
         return {name: r.bootstrap() for name, r in self._runners.items()}
 
     # ------------------------------------------------------------------
@@ -183,7 +178,26 @@ class MultiTableReplayRunner:
         return tables
 
     def _apply_window(self, tables, chunk, batch_id, chunk_hi) -> int:
-        with self._routed(chunk, batch_id) as (routed, counts, n_unrouted):
+        """Apply one LSN window, or one streaming epoch (``chunk_hi``
+        None: no window bound), to every target not yet carrying
+        ``batch_id``. The events are tagged with their target in
+        ``_route``, persisted for the whole fan-out and counted per route
+        with one ``groupBy``; under ``on_unrouted='error'`` unrouted
+        events raise before any commit. Returns the routable count."""
+        e = self.route_by
+        routed = chunk.withColumn("_route", F.expr(e) if isinstance(e, str) else e).persist()
+        try:
+            counts = {
+                r["_route"]: r["count"] for r in routed.groupBy("_route").count().collect()
+            }
+            unrouted = {k: v for k, v in counts.items() if k not in self._runners}
+            n_unrouted = sum(unrouted.values())
+            if n_unrouted and self.on_unrouted == "error":
+                raise UnroutedEvents(
+                    f"{batch_id}: {n_unrouted} events route to unconfigured "
+                    f"targets {sorted(map(repr, unrouted))[:5]} — add them to "
+                    "`tables` or pass on_unrouted='ignore'"
+                )
             self.unrouted_events += n_unrouted
             # metadata-only position advance for empty slices: keeps the
             # lockstep invariant without a Spark job
@@ -200,35 +214,12 @@ class MultiTableReplayRunner:
                     todo.append(name)
             if todo:
                 self._fan_out(tables, routed, todo, batch_id, counts, chunk_hi)
+        finally:
+            routed.unpersist()
         # zero routable events sends the window loop to probe the gap
         return sum(counts.get(n, 0) for n in tables)
 
-    # ------------------------------------------------------------------
-    @contextlib.contextmanager
-    def _routed(self, events: DataFrame, batch_id: str):
-        """Tag a window's (or epoch's) events with their target in
-        ``_route``, persisted for the whole fan-out, and count them per
-        route with one ``groupBy``. Yields ``(routed, counts, n_unrouted)``;
-        under ``on_unrouted='error'`` unrouted events raise first."""
-        e = self.route_by
-        routed = events.withColumn("_route", F.expr(e) if isinstance(e, str) else e).persist()
-        try:
-            counts = {
-                r["_route"]: r["count"] for r in routed.groupBy("_route").count().collect()
-            }
-            unrouted = {k: v for k, v in counts.items() if k not in self._runners}
-            n_unrouted = sum(unrouted.values())
-            if n_unrouted and self.on_unrouted == "error":
-                raise UnroutedEvents(
-                    f"{batch_id}: {n_unrouted} events route to unconfigured "
-                    f"targets {sorted(map(repr, unrouted))[:5]} — add them to "
-                    "`tables` or pass on_unrouted='ignore'"
-                )
-            yield routed, counts, n_unrouted
-        finally:
-            routed.unpersist()
-
-    def _fan_out(self, tables, routed, todo, batch_id, counts, chunk_hi=None) -> None:
+    def _fan_out(self, tables, routed, todo, batch_id, counts, chunk_hi) -> None:
         """Apply one routed window or streaming epoch to the ``todo``
         targets, replacing their entries in ``tables``. The combined
         fan-out (:func:`combined_window`) needs mor mode (cow resolves
@@ -241,7 +232,7 @@ class MultiTableReplayRunner:
             and not self.evolution_plan.pending(routed, [tables[n] for n in todo])
         ):
             combined_window(
-                self.base_dir, tables, routed, todo, batch_id, counts,
+                tables, routed, todo, batch_id, counts,
                 chunk_hi=chunk_hi, compact_min_files=self.compact_min_files,
             )
             return
@@ -304,29 +295,6 @@ def group_snapshot(
     return out
 
 
-def sweep_stale_staging(base_dir: str, min_age_sec: float = 3600.0) -> None:
-    """Reclaim staging dirs a crashed combined-window run left behind
-    (batch replay AND streaming epochs stage under the same root).
-    Age-guarded so a concurrent group runner's IN-FLIGHT staging is
-    never touched (a window runs minutes, not hours); files already
-    moved into table dirs but never committed are plain orphans —
-    fsck reports them and expire reclaims them."""
-    import shutil
-    import time
-
-    root = os.path.join(base_dir, ".etl_staging")
-    if not os.path.isdir(root):
-        return
-    now = time.time()
-    for d in os.listdir(root):
-        full = os.path.join(root, d)
-        try:
-            if now - os.path.getmtime(full) > min_age_sec:
-                shutil.rmtree(full, ignore_errors=True)
-        except OSError:
-            pass
-
-
 def _max_stream_epoch(t: LakeTable) -> int | None:
     """Largest streaming-epoch id in a version's ledger (None if the
     version predates any streaming commit)."""
@@ -354,9 +322,12 @@ def group_snapshot_epochs(
     Cut epoch = the global max epoch K across the group if every target
     that ever streams carries K (no split), else K-1. Each table pins at
     its newest version whose ledger's max stream-epoch ≤ the cut — a
-    metadata walk, never data. A target with no streaming commits at
-    all (cold: every slice so far was empty) pins at its head, which IS
-    its state at any epoch by construction.
+    metadata walk, never data. Every epoch commits on every target (an
+    empty slice takes the router's metadata-only position commit), so
+    after a drain the cut equals the heads. A target with no streaming
+    commits at all can only come from a history written before those
+    empty-slice commits (cold: every slice so far was empty); it pins
+    at its head, which IS its state at any epoch by construction.
 
     Use :func:`group_snapshot` for batch-router (lockstep LSN-window)
     histories; this one for groups fed by MultiTableStreamingIngest."""
@@ -418,7 +389,6 @@ def combined_eligible(tables: dict, todo: list[str]) -> bool:
 
 
 def combined_window(
-    base_dir: str,
     tables: dict,
     routed,
     todo: list[str],
@@ -431,33 +401,26 @@ def combined_window(
     a single LWW reduce keyed by ``(_route, key)`` (reducing each
     route's slice separately or all routes together is the same set
     of winners — route is part of the key, LWW is associative), one
-    ``partitionBy(_route, _bucket)`` write into a staging dir under
-    ``base_dir``, then per-table driver-side ``os.replace`` moves +
-    metadata commits. Physical files are byte-compatible with
-    ``LakeTable.write_files`` output (field-id column names, codec,
-    bloom filters, footer key stats) because the projection below
-    mirrors it; a crash after some moves leaves orphans that fsck
-    reports and the ledger-deduped rerun supersedes.
+    ``LakeTable.write_routed`` whose files ARE ``write_files`` output
+    (one physical write site), then per-table metadata commits. A crash
+    before a table's commit leaves orphans that fsck reports and the
+    ledger-deduped rerun supersedes.
 
     ``chunk_hi`` is the authoritative window end for LSN-window replay;
     ``None`` (the streaming-epoch case, where no window bound exists)
     records each table's observed per-route max LSN instead. Mutates
     ``tables`` in place to the committed+compacted versions."""
-    import shutil
-    import urllib.parse
     import uuid
 
     from pyspark.sql import Observation
 
     from pasar_spark.cdc.merge import ORDER, delta_columns, reduce_changes
-    from pasar_spark.lake.table import bucket_dir_entries, configure_parquet_writer
 
     t0 = tables[todo[0]]
     key = t0.manifest["key"]
     order = t0.manifest.get("resolve_order", ORDER)
-    schema_cols = t0.schema.names()
     payload = [
-        c for c in schema_cols if c not in set(key) | set(order) | {"_tombstone"}
+        c for c in t0.schema.names() if c not in set(key) | set(order) | {"_tombstone"}
     ]
 
     src = promote_extra(routed.where(F.col("_route").isin(list(todo))), t0)
@@ -485,13 +448,6 @@ def combined_window(
         *delta_columns(key, order, payload),
         t0.bucket_expr().alias("_bucket"),
     )
-    staging = os.path.join(
-        base_dir, ".etl_staging", f"{batch_id}-{uuid.uuid4().hex[:8]}"
-    )
-    phys = [
-        F.col(f.name).cast(f.type).alias(f"f{f.id}")
-        for f in t0.schema.fields
-    ]
     # per-route applied/deleted ride the WRITE job as observe()
     # aggregates — no persist, no second pass over the reduce
     obs = Observation(f"router-{batch_id}-{uuid.uuid4().hex[:8]}")
@@ -502,70 +458,23 @@ def combined_window(
         m = (hit == F.lit(name)).cast("long")
         obs_aggs.append(F.sum(m * (1 - tomb)).alias(f"a{i}"))
         obs_aggs.append(F.sum(m * tomb).alias(f"d{i}"))
-    out = (
-        final.observe(obs, *obs_aggs)
-        .select(F.col("_route"), *phys, F.col("_bucket"))
-        .repartition(t0.manifest["n_buckets"], F.col("_bucket"))
+    files = t0.write_routed(
+        final.observe(obs, *obs_aggs), {name: tables[name] for name in todo}
     )
-    writer = configure_parquet_writer(
-        out.write.mode("errorifexists"), t0.schema, t0.manifest
-    )
-    writer.partitionBy("_route", "_bucket").parquet(staging)
     m = dict(obs.get)
-    applied_deleted = {
-        name: (int(m.get(f"a{i}") or 0), int(m.get(f"d{i}") or 0))
-        for i, name in enumerate(todo)
-    }
-    route_lsn = {}
-    if obs_lsn is not None:
-        ml = dict(obs_lsn.get)
-        route_lsn = {name: ml.get(f"l{i}") for i, name in enumerate(todo)}
-
-    route_dirs = {
-        urllib.parse.unquote(d[len("_route=") :]): os.path.join(staging, d)
-        for d in os.listdir(staging)
-        if d.startswith("_route=")
-    }
-    stat_cols = {
-        f"f{t0.schema.field_by_name(k).id}" for k in key if k in set(schema_cols)
-    }
-    for name in todo:
-        t = tables[name]
-        commit_id = t.new_commit_id()
-        new_files: dict[str, list[dict]] = {}
-        rdir = route_dirs.get(name)
-        if rdir:
-            for bd in sorted(os.listdir(rdir)):
-                if not bd.startswith("_bucket="):
-                    continue
-                b = str(int(bd.split("=")[1]))
-                dest_rel = os.path.join("data", commit_id, bd)
-                dest = os.path.join(t.path, dest_rel)
-                os.makedirs(dest, exist_ok=True)
-                for f in sorted(os.listdir(os.path.join(rdir, bd))):
-                    if f.endswith(".parquet"):
-                        # same-filesystem rename: staging lives under
-                        # base_dir next to the tables
-                        os.replace(os.path.join(rdir, bd, f), os.path.join(dest, f))
-                entries = bucket_dir_entries(
-                    dest, dest_rel, t.schema.schema_id, stat_cols
-                )
-                if entries:
-                    new_files[b] = entries
-        applied, deleted = applied_deleted.get(name, (0, 0))
-        last = chunk_hi if chunk_hi is not None else route_lsn.get(name)
-        last = int(last) if last is not None else None
-        tables[name] = t.commit_append(
-            new_files,
+    route_lsn = dict(obs_lsn.get) if obs_lsn is not None else {}
+    for i, name in enumerate(todo):
+        last = chunk_hi if chunk_hi is not None else route_lsn.get(f"l{i}")
+        tables[name] = tables[name].commit_append(
+            files.get(name, {}),
             batch_id,
-            last_lsn=last,
+            last_lsn=int(last) if last is not None else None,
             metrics_delta={
-                "applied": applied,
-                "deleted": deleted,
+                "applied": int(m.get(f"a{i}") or 0),
+                "deleted": int(m.get(f"d{i}") or 0),
                 "events_seen": int(counts.get(name, 0)),
             },
         )
         tables[name], _ = compact_buckets(
             tables[name], min_files=compact_min_files
         )
-    shutil.rmtree(staging, ignore_errors=True)

@@ -323,7 +323,7 @@ def cmd_etl(args) -> int:
             on_unrouted=args.on_unrouted,
         )
         tables = _run_live(ingest, args) if args.live else ingest.run_available_now()
-        runner = ingest
+        runner = ingest.runner
     else:
         runner = MultiTableReplayRunner(
             spark,

@@ -47,30 +47,13 @@ from pasar_spark.lake.schema import TableSchema
 CURRENT = "CURRENT"
 
 
-def configure_parquet_writer(writer, schema, manifest: dict):
-    """Codec + bloom-filter options shared by every physical write path
-    (LakeTable.write_files and the router's combined fan-out) — ONE
-    definition, so routed tables' files can never drift from
-    single-table ones. See write_files for the rationale of each."""
-    writer = writer.option("compression", "snappy")
-    bucket_by = manifest.get("bucket_by")
-    if bucket_by in set(schema.names()):
-        key_phys = f"f{schema.field_by_name(bucket_by).id}"
-        writer = (
-            writer.option(f"parquet.bloom.filter.enabled#{key_phys}", "true")
-            .option("parquet.bloom.filter.adaptive.enabled", "true")
-            .option("parquet.bloom.filter.max.bytes", str(256 * 1024))
-        )
-    return writer
-
-
 def bucket_dir_entries(
     src_dir: str, dest_rel: str, schema_id: int, stat_cols: set
 ) -> list[dict]:
     """Manifest entries (path / schema_id / footer row count / key
     min-max stats) for every parquet file in a written bucket dir —
-    footer reads only; shared by write_files and the combined fan-out's
-    file attach."""
+    footer reads only; every physical write (write_files, write_routed)
+    ends here."""
     import pyarrow.parquet as pq
 
     entries = []
@@ -590,27 +573,76 @@ class LakeTable:
         for major compaction, which rewrites the long-lived base files
         anyway: the LSM discipline (unsorted fresh deltas, sorted bases).
         """
+        rel = os.path.join("data", commit_id)
+        self._write_parquet(df, rel, ("_bucket",), sort_keys, n_buckets)
+        return self._bucket_entries(rel)
+
+    def write_routed(
+        self, df: DataFrame, routes: dict[str, "LakeTable"]
+    ) -> dict[str, dict[str, list[dict]]]:
+        """Physically write ``df`` (logical columns + ``_route`` +
+        ``_bucket``) for several tables in ONE Spark job: the rows of
+        ``_route = name`` become ``routes[name]``'s files, laid out,
+        encoded and entered exactly as :meth:`write_files` does. Returns
+        ``{name: {bucket: entries}}`` for each route's own commit (a
+        route with no rows is absent). Does NOT commit.
+
+        Every route shares this table's schema, key and bucket layout
+        (cdc/router.py ``combined_eligible``) and its filesystem. The
+        write stages inside this table's data/<commit_id>/; each
+        ``_route=<name>`` dir is then renamed whole to its table's
+        data/<new commit id>, and the leftover removed. A crash leaves
+        only orphans inside table dirs: fsck reports them and
+        expire_snapshots reclaims them."""
+        import shutil
+        import urllib.parse
+
+        rel = os.path.join("data", self.new_commit_id())
+        staging = os.path.join(self.path, rel)
+        self._write_parquet(df, rel, ("_route", "_bucket"))
+        out: dict[str, dict[str, list[dict]]] = {}
+        for d in sorted(os.listdir(staging)):
+            if not d.startswith("_route="):
+                continue
+            name = urllib.parse.unquote(d[len("_route=") :])
+            t = routes[name]
+            t_rel = os.path.join("data", t.new_commit_id())
+            os.makedirs(os.path.join(t.path, "data"), exist_ok=True)
+            os.replace(os.path.join(staging, d), os.path.join(t.path, t_rel))
+            out[name] = t._bucket_entries(t_rel)
+        shutil.rmtree(staging, ignore_errors=True)
+        return out
+
+    def _write_parquet(
+        self,
+        df: DataFrame,
+        rel: str,
+        partition_by: tuple[str, ...],
+        sort_keys: bool = False,
+        n_buckets: int | None = None,
+    ) -> None:
+        """The one physical write: field-id projection, bucket
+        repartition, writer options, ``partitionBy(...).parquet`` under
+        ``<path>/<rel>``. ``partition_by`` ends with ``_bucket``."""
         cur = self.schema
         phys = [F.col(f.name).cast(f.type).alias(f"f{f.id}") for f in cur.fields]
-        rel = os.path.join("data", commit_id)
-        out_dir = os.path.join(self.path, rel)
         # Cluster rows by bucket before the dynamic-partition write: without
         # this every shuffle partition spills a file into every bucket dir
         # (shuffle_partitions x n_buckets tiny files per commit) and the
         # NEXT merge's base scan drowns in file overhead. One shuffle here
         # keeps the table at ~1 file per bucket per commit.
-        out = df.select(*phys, F.col("_bucket")).repartition(
+        *route, bucket = partition_by
+        out = df.select(*route, *phys, bucket).repartition(
             n_buckets or self.manifest["n_buckets"], F.col("_bucket")
         )
         if sort_keys:
-            key_phys = [
-                f"f{self.schema.field_by_name(k).id}" for k in self.manifest["key"]
-            ]
+            key_phys = [f"f{cur.field_by_name(k).id}" for k in self.manifest["key"]]
             out = out.sortWithinPartitions("_bucket", *key_phys)
         # Every lake data file is snappy: it encodes ~2x faster than zstd
         # (measured on the transcript payload), and a four-arm codec x
         # bloom A/B of a 2M-event replay on 4 vCPUs was flat (6.87-7.56 s),
         # so neither is a tuning knob.
+        writer = out.write.mode("errorifexists").option("compression", "snappy")
         # Parquet bloom filter on the bucketing key: on uniformly random
         # keys every file's min/max spans the key space, but a bloom
         # answers "is this exact key in this row group" regardless of
@@ -620,21 +652,31 @@ class LakeTable:
         # filtering on a pushed key equality). read_key reads on the
         # driver with pyarrow 16.1, which prunes by manifest stats and
         # row-group min/max but does not read parquet blooms.
-        writer = configure_parquet_writer(
-            out.write.mode("errorifexists"), cur, self.manifest
-        )
-        writer.partitionBy("_bucket").parquet(out_dir)
+        bucket_by = self.manifest.get("bucket_by")
+        if bucket_by in set(cur.names()):
+            key_phys = f"f{cur.field_by_name(bucket_by).id}"
+            writer = (
+                writer.option(f"parquet.bloom.filter.enabled#{key_phys}", "true")
+                .option("parquet.bloom.filter.adaptive.enabled", "true")
+                .option("parquet.bloom.filter.max.bytes", str(256 * 1024))
+            )
+        writer.partitionBy(*partition_by).parquet(os.path.join(self.path, rel))
 
-        # key-column physical names: min/max per FILE ride the manifest so
-        # point lookups skip whole files before any scan task is planned
-        # (Iceberg column-stats pruning; see read_key). Field ids make the
-        # stats rename-safe. Row counts come from the parquet footers:
-        # free per-partition lineage (north rule) without a counting job.
+    def _bucket_entries(self, rel: str) -> dict[str, list[dict]]:
+        """bucket -> manifest entries of the ``_bucket=<b>`` dirs under
+        ``<path>/<rel>``. Key-column physical names: min/max per FILE
+        ride the manifest so point lookups skip whole files before any
+        scan task is planned (Iceberg column-stats pruning; see
+        read_key). Field ids make the stats rename-safe. Row counts come
+        from the parquet footers: free per-partition lineage (north
+        rule) without a counting job."""
+        cur = self.schema
         stat_cols = {
             f"f{cur.field_by_name(k).id}"
             for k in self.manifest.get("key", [])
             if k in set(cur.names())
         }
+        out_dir = os.path.join(self.path, rel)
         new_files: dict[str, list[dict]] = {}
         for d in os.listdir(out_dir):
             if not d.startswith("_bucket="):

@@ -74,7 +74,7 @@ def get_spark(
         # Session default codec: it governs only the parquet writes that
         # set none of their own — export files (lake/export.py) and
         # auxiliary outputs. Lake data files are always snappy
-        # (lake/table.py configure_parquet_writer).
+        # (lake/table.py LakeTable._write_parquet, the one lake write).
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
     if master:

@@ -275,18 +275,19 @@ class StreamingIngest(WalTail):
 class MultiTableStreamingIngest(WalTail):
     """Streaming demux: ONE WAL tail feeding N lake tables — the live
     form of cdc/router.py MultiTableReplayRunner (the reference's
-    `python . etl <tables>` shape on a continuous feed), whose
-    constructor checks, routing and combined-or-per-table fan-out it
-    reuses.
+    `python . etl <tables>` shape on a continuous feed). An epoch is the
+    router's window: it takes the router's window apply whole (routing,
+    the ``unrouted_events`` count, combined-or-per-table fan-out), with
+    no window bound, so each target records its observed max lsn.
 
-    The streaming epoch replaces the router's LSN window: the epoch id
-    is the batch id on EVERY target's ledger, so at-least-once epoch
-    redelivery dedupes per table — a crash between two tables' commits
-    inside one epoch heals on redelivery (committed tables no-op via
-    ``has_batch``, laggards apply). No lockstep position commits are
-    needed here: the streaming checkpoint is the single group-position
-    authority, so a table whose epoch slice is empty simply skips (its
-    recomputed slice is empty again on any redelivery).
+    The epoch id is the batch id on EVERY target's ledger, and a target
+    whose epoch slice is empty gets the router's metadata-only position
+    commit, so the group stays in lockstep per epoch: a redelivered
+    fully applied epoch is caught by the tail's all-``has_batch`` check
+    before any Spark job, a crash between two tables' commits inside
+    one epoch heals on redelivery (committed tables no-op via
+    ``has_batch``, laggards apply), and after a drain every target
+    carries the newest epoch (cdc/router.py ``group_snapshot_epochs``).
 
     The epoch is persisted once and sliced per table — one decode/scan
     per epoch regardless of table count, same single-pass argument as
@@ -324,23 +325,6 @@ class MultiTableStreamingIngest(WalTail):
             wal_path, checkpoint_path, max_files_per_trigger, schema,
             wire_format, dlq_path, followers,
         )
-        self.unrouted_events = 0
 
     def _apply(self, tables, batch_df, batch_id) -> None:
-        with self.runner._routed(batch_df, batch_id) as (routed, counts, n_unrouted):
-            live = [n for n in sorted(tables) if counts.get(n, 0)]
-            todo = [n for n in live if not tables[n].has_batch(batch_id)]
-            if n_unrouted and (todo or len(todo) == len(live)):
-                # counted on first delivery: when work remains (todo), or
-                # when NO routed target has applied this epoch — which
-                # covers an epoch whose events are ALL unrouted (nothing
-                # ever records the batch id). A redelivered fully-applied
-                # epoch (some target has the batch, nothing todo) doesn't
-                # double the count; partial redeliveries and all-unrouted
-                # epochs recount — at-least-once under crash-redelivery,
-                # same contract as the batch router's per-window counter.
-                self.unrouted_events += n_unrouted
-            if todo:
-                # the epoch is the window; with no window bound, each
-                # target records its observed max lsn
-                self.runner._fan_out(tables, routed, todo, batch_id, counts)
+        self.runner._apply_window(tables, batch_df, batch_id, None)

@@ -67,7 +67,7 @@ def test_all_unrouted_epoch_is_counted(spark, tmp_path):
     feed = spark.read.parquet(wal)
     n = feed.count()
     ingest._apply_epoch(feed, 0)
-    assert ingest.unrouted_events == n  # previously 0: todo was empty
+    assert ingest.runner.unrouted_events == n  # previously 0: todo was empty
 
 
 def test_redelivered_applied_epoch_does_not_double_count(spark, tmp_path):
@@ -86,9 +86,9 @@ def test_redelivered_applied_epoch_does_not_double_count(spark, tmp_path):
     unrouted = feed.where(F.expr(route3) == "t2").count()
     assert unrouted > 0
     ingest._apply_epoch(feed, 1)
-    assert ingest.unrouted_events == unrouted
+    assert ingest.runner.unrouted_events == unrouted
     ingest._apply_epoch(feed, 1)  # full redelivery: every target has_batch
-    assert ingest.unrouted_events == unrouted
+    assert ingest.runner.unrouted_events == unrouted
 
 
 @pytest.mark.parametrize("bad", ["..", ".", "a/b", " "])

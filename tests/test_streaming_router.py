@@ -8,6 +8,9 @@ Invariants:
 - appended WAL files flow through the same checkpoint incrementally;
 - a redelivered epoch is a per-table no-op (ledger dedup — the
   crash-between-targets healing path);
+- an epoch commits on every target, an empty slice as a metadata-only
+  position commit: a redelivered fully applied epoch runs no Spark job,
+  and the epoch cut of a drained group is its heads;
 - unrouted traffic fails the epoch by default.
 """
 
@@ -15,8 +18,11 @@ from __future__ import annotations
 
 import pytest
 
+from test_driver_round_trips import _jobs_run
+
 from pasar_spark.cdc.router import MultiTableReplayRunner, UnroutedEvents
 from pasar_spark.datagen import change_events, write_change_log
+from pasar_spark.lake.table import LakeTable
 from pasar_spark.streaming.stream import MultiTableStreamingIngest
 
 ROUTE = "concat('t', cast(substring(conv_id, -1, 1) as int) % 3)"
@@ -215,3 +221,52 @@ def test_unrouted_fails_epoch(spark, tmp_path):
     ingest.bootstrap()
     with pytest.raises(UnroutedEvents):
         ingest._apply_epoch(spark.read.parquet(wal), 0)
+
+
+ROUTE2 = "concat('t', cast(substring(conv_id, -1, 1) as int) % 2)"
+
+
+def _two_target_tail(spark, tmp_path):
+    """A 2-target tail after epoch 0 (both targets) and epoch 1, which
+    routes nothing to t1. Returns (ingest, epoch-1 batch, heads)."""
+    from pyspark.sql import functions as F
+
+    wal = str(tmp_path / "wal")
+    write_change_log(change_events(spark, 1_000, n_convs=30, seed=17), wal, n_files=1)
+    base = str(tmp_path / "lake")
+    ingest = MultiTableStreamingIngest(
+        spark, base, ["t0", "t1"], route_by=ROUTE2,
+        wal_path=wal, checkpoint_path=str(tmp_path / "ckpt"), n_buckets=2,
+    )
+    ingest.bootstrap()
+    feed = spark.read.parquet(wal)
+    ingest._apply_epoch(feed.where("lsn < 500"), 0)
+    only_t0 = feed.where("lsn >= 500").where(F.expr(ROUTE2) == "t0")
+    ingest._apply_epoch(only_t0, 1)
+    heads = {n: LakeTable.load(spark, f"{base}/{n}") for n in ("t0", "t1")}
+    return ingest, only_t0, heads
+
+
+def test_epoch_cut_of_a_quiesced_group_is_its_heads(spark, tmp_path):
+    """An epoch with an empty slice for t1 is not a split epoch: t1
+    records it too, so the cut pins every target at its head."""
+    from pasar_spark.cdc.router import group_snapshot_epochs
+
+    _, _, heads = _two_target_tail(spark, tmp_path)
+    snap = group_snapshot_epochs(spark, str(tmp_path / "lake"), ["t0", "t1"])
+    assert {n: t.version for n, t in snap.items()} == {
+        n: t.version for n, t in heads.items()
+    }
+    assert all(t.has_batch("stream-1") for t in heads.values())
+
+
+def test_redelivered_epoch_with_an_empty_slice_runs_no_job(spark, tmp_path):
+    ingest, only_t0, heads = _two_target_tail(spark, tmp_path)
+    _, jobs = _jobs_run(spark, lambda: ingest._apply_epoch(only_t0, 1))
+    assert jobs == 0
+    from pasar_spark.cdc.router import group_snapshot_epochs
+
+    want = {n: t.version for n, t in heads.items()}
+    assert {n: t.version for n, t in ingest.heads().items()} == want
+    snap = group_snapshot_epochs(spark, str(tmp_path / "lake"), ["t0", "t1"])
+    assert {n: t.version for n, t in snap.items()} == want
