@@ -39,7 +39,6 @@ from pasar_spark.cdc.merge import _obs_get, compact_buckets
 from pasar_spark.cdc.runner import replay_windows
 from pasar_spark.cdc.sources import as_source
 from pasar_spark.lake.table import LakeTable
-from pasar_spark.streaming.stream import WalTail
 
 KEY = ["conv_id", "turn_idx"]
 ORDER = ["ts", "lsn"]
@@ -143,8 +142,7 @@ def merge_patch_chunk(
 ) -> LakeTable:
     """Apply one chunk of PARTIAL change events to a patch table:
     reduce to stored form, bucket, write, commit with the ledger —
-    idempotent under batch-id redelivery, shared by batch replay and
-    the streaming tail."""
+    idempotent under batch-id redelivery."""
     if table.has_batch(batch_id):
         return table
     key = table.manifest["key"]
@@ -221,48 +219,13 @@ class PatchReplayRunner:
         )
         return tables[self.table_path]
 
-    def _apply_window(self, tables, chunk, batch_id, chunk_hi=None) -> int:
-        """One LSN window or streaming epoch (``chunk_hi=None``); returns
-        its observed event count, so an empty window probes the gap.
-        compact_buckets folds patch tables with :func:`resolve_stored`."""
+    def _apply_window(self, tables, chunk, batch_id, chunk_hi) -> int:
+        """One LSN window; returns its observed event count, so an empty
+        window probes the gap. compact_buckets folds patch tables with
+        :func:`resolve_stored`."""
         (path, table), = tables.items()
         obs = Observation(f"patch-src-{batch_id}")
         chunk = chunk.observe(obs, F.count(F.lit(1)).alias("events_seen"))
         table = merge_patch_chunk(table, chunk, batch_id, last_lsn=chunk_hi)
         tables[path], _ = compact_buckets(table, min_files=self.compact_min_files)
         return int(_obs_get(obs, {"events_seen": 0})["events_seen"] or 0)
-
-
-class PatchStreamingIngest(WalTail):
-    """Structured Streaming tail into a patch table — the shared WAL tail
-    of streaming/stream.py with the patch apply: the file source
-    discovers appended WAL files, the epoch id becomes the batch id
-    (``patch-stream-<epoch>``), and the snapshot-embedded ledger turns
-    at-least-once epoch redelivery into exactly-once.
-
-    ``followers`` are downstream incremental consumers with a
-    ``.refresh()`` keyed on consumed source versions (cdc/derived.py
-    works unchanged over a patch source — its materialized view gives
-    the same pre/post images). ``schema`` pins the WAL envelope (patch
-    feeds carry feed-specific payload columns, so the pin comes from the
-    caller's feed registry); None infers it from current WAL contents,
-    which requires at least one file to exist before start."""
-
-    batch_prefix = "patch-stream-"
-
-    def __init__(
-        self,
-        runner: PatchReplayRunner,
-        wal_path: str,
-        checkpoint_path: str,
-        max_files_per_trigger: int | None = None,
-        schema=None,
-        followers: list | None = None,
-    ):
-        super().__init__(
-            runner, {runner.table_path: runner.table_path}, wal_path, checkpoint_path,
-            max_files_per_trigger, schema, followers=followers,
-        )
-
-    def _apply(self, tables, batch_df, batch_id) -> None:
-        self.runner._apply_window(tables, batch_df, batch_id)

@@ -20,8 +20,8 @@ That loop exists once, :func:`replay_windows`; the row, per-partition,
 router (cdc/router.py) and patch (cdc/patch.py) modes supply only the
 per-window apply. Its batch-id prefixes are durable ledger format —
 ``lsn-`` (row and router), ``p<part>-lsn-`` (partitioned) and
-``patch-lsn-`` (patch) — as are the streaming tail's ``stream-`` and
-``patch-stream-`` epoch ids (streaming/stream.py).
+``patch-lsn-`` (patch) — as is the streaming tail's ``stream-`` epoch
+id (streaming/stream.py).
 """
 
 from __future__ import annotations

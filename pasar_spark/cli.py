@@ -285,14 +285,14 @@ def cmd_rebucket(args) -> int:
 
 
 def cmd_export(args) -> int:
-    from pasar_spark.lake.export import expire_exports, export_snapshot
+    from pasar_spark.lake.export import exp_dirs_glob, expire_exports, export_snapshot
 
     spark = _spark(args)
     t = _load_table(spark, args.table)
     s = export_snapshot(t, args.dest, incremental=not args.full)
     if args.keep is not None:
         s["expired_versions"] = expire_exports(args.dest, keep=args.keep)
-    s["glob"] = f"{s['path']}/*/*.parquet"
+    s["glob"] = exp_dirs_glob(args.dest, s["source_version"])
     print(json.dumps({"table": args.table, **s}))
     return 0
 

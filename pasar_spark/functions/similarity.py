@@ -403,23 +403,6 @@ def ivf_topk(
     )
 
 
-def embedding_near_dups(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All pairs (a < b) with cosine >= threshold (embedding near-dup)."""
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", cosine(F.col("_va"), F.col("_vb")))
-        .where(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
-    )
-
-
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 6,

@@ -91,39 +91,6 @@ def quality_score(col: Column) -> Column:
     return F.round(F.lit(0.5) * length_score + F.lit(0.5) * stopword_ratio(col), 4)
 
 
-# PII masking — the C4/RefinedWeb-class redaction pass every
-# training-data pipeline runs before release. Patterns restricted to the
-# RE2 ∩ Java-regex dialect (no backrefs/lookarounds) so the DuckDB
-# oracle evaluates the IDENTICAL expressions; applied in list order
-# (emails first — their local parts can contain digit runs that the
-# later numeric patterns would otherwise chew on).
-PII_PATTERNS: list[tuple[str, str, str]] = [
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    ("ip", r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
-    ("ssn", r"\b\d{3}-\d{2}-\d{4}\b", "<SSN>"),
-    ("phone", r"\b\d{3}[-.]\d{3}[-.]\d{4}\b", "<PHONE>"),
-]
-
-
-def scrub_pii(col: Column) -> Column:
-    """Mask emails/IPs/SSNs/phone numbers with typed placeholder tokens.
-    Pure Catalyst (chained regexp_replace, whole-stage-codegen'd) — at
-    100 TB this runs in the scan stage, no Python anywhere."""
-    out = col
-    for _, pat, token in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, token)
-    return out
-
-
-def pii_counts(col: Column) -> dict[str, Column]:
-    """Per-category match counts over the ORIGINAL text (audit trail for
-    the scrub: how much PII a corpus slice carried)."""
-    return {
-        name: F.regexp_count(col, F.lit(pat)).cast("long")
-        for name, pat, _ in PII_PATTERNS
-    }
-
-
 def with_lang_id(df, text_col: str = "text", out_col: str = "pred_lang"):
     """DataFrame-level language ID — the form to use in pipelines.
 

@@ -26,13 +26,6 @@ from pasar_spark.operators.eras import merge_eras, session_stats
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
-
-# Oracle-gated queries NOT exported to the driver (its correctness gate
-# records at most 50 entries — r2 silently dropped the last two
-# registered). Retired entries are redundant small-scale twins whose
-# coverage a registered query subsumes; they stay oracle-checked in
-# pytest (tests/test_retired_oracles.py) so the evidence never lapses.
-_RETIRED: dict[str, tuple[QueryFn, str | None]] = {}
 # csv-roundtrip session temp dirs already scheduled for atexit cleanup
 _CSV_TMP_CLEANUPS: set[str] = set()
 
@@ -43,18 +36,6 @@ def register(name: str, sql: str | None):
         return fn
 
     return deco
-
-
-def register_retired(name: str, sql: str | None):
-    def deco(fn: QueryFn):
-        _RETIRED[name] = (fn, sql)
-        return fn
-
-    return deco
-
-
-def retired_queries() -> dict[str, tuple[QueryFn, str | None]]:
-    return dict(_RETIRED)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -311,28 +292,6 @@ def cdc_debezium_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.col("ts").cast("timestamp_ntz").alias("ts"),
         "lsn",
-    )
-
-
-@register_retired(  # r4: driver seat given to cdc_debezium_replay (50-cap);
-    # a plain groupBy-count whose aggregate coverage q1_lineitem_agg and
-    # doc_fingerprint_stats subsume — still oracle-checked every pytest
-    # run by tests/test_retired_oracles.py
-    "cdc_op_mix",
-    f"""
-    WITH feed AS ({_FEED_SQL})
-    SELECT op, count(*) AS n_events,
-           count(DISTINCT conv_id || '#' || CAST(turn_idx AS VARCHAR)) AS n_keys
-    FROM feed GROUP BY op
-    """,
-)
-def cdc_op_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feed = _as_change_feed(load(spark, sf_dir, "events"))
-    return feed.groupBy("op").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct(
-            F.concat(F.col("conv_id"), F.lit("#"), F.col("turn_idx").cast("string"))
-        ).alias("n_keys"),
     )
 
 
@@ -1048,55 +1007,6 @@ def cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_retired(  # driver gate caps at 50 seats; oracle-gated every
-    # pytest run via tests/test_retired_oracles.py instead
-    "cdc_export_snapshot",
-    f"""
-    WITH feed AS ({_FEED_SQL}),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY conv_id, turn_idx
-                                   ORDER BY ts DESC, lsn DESC) AS rn
-      FROM feed)
-    SELECT conv_id, turn_idx,
-           nfc_normalize(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS text,
-           lsn
-    FROM ranked WHERE rn = 1 AND op <> 'D'
-    """,
-)
-def cdc_export_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """External-engine snapshot export (lake/export.py): the replayed
-    table's resolved live state is published as plain parquet (logical
-    names, MoR resolved, tombstones gone, versioned dir + atomic CURRENT
-    flip) and read BACK from the exported files — equality with the raw-
-    feed LWW oracle proves the publish surface any DuckDB/Trino/pandas
-    consumer reads is exactly the table's state. Incremental republish
-    (changed-buckets-only + hardlinked reuse) is covered in
-    tests/test_export.py; this seat gates the end-to-end export→read
-    path. Session-keyed dest with atexit cleanup (same policy as
-    q_csv_roundtrip)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from pasar_spark.lake.export import export_snapshot, read_export
-    from pasar_spark.lake.table import LakeTable
-
-    tbl_path, _ = _two_snapshot_table(spark, sf_dir)
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "pasar_export_seat",
-        sf_dir.strip("/").replace("/", "_")
-        + "-"
-        + spark.sparkContext.applicationId,
-    )
-    if dest not in _CSV_TMP_CLEANUPS:
-        _CSV_TMP_CLEANUPS.add(dest)
-        atexit.register(shutil.rmtree, dest, ignore_errors=True)
-    export_snapshot(LakeTable.load(spark, tbl_path), dest)
-    return read_export(spark, dest).select("conv_id", "turn_idx", "text", "lsn")
-
-
 def _derived_stats_table(spark: SparkSession, sf_dir: str) -> str:
     """Build the IVM fixture through the REAL incremental path: replay
     the feed's first half (lsn <= max/2) into a fresh source table,
@@ -1686,29 +1596,6 @@ def q_or_join_unpivoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return c.join(F.broadcast(counts), c.c_custkey == counts.k).select(
         "c_custkey", "n_events"
-    )
-
-
-@register_retired(  # r5: driver seat given to cdc_multi_table (50-cap);
-    # A5 mode stays driver-gated via cdc_mode_event_type, and this W6
-    # rank-by-frequency window is still oracle-checked every pytest run
-    # by tests/test_retired_oracles.py
-    "q_mode_brand",
-    """
-    SELECT p_type, p_brand AS top_brand FROM (
-      SELECT p_type, p_brand,
-             row_number() OVER (PARTITION BY p_type ORDER BY count(*) DESC, p_brand) AS rn
-      FROM part GROUP BY p_type, p_brand) t WHERE rn = 1
-    """,
-)
-def q_mode_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    counts = p.groupBy("p_type", "p_brand").count()
-    w = Window.partitionBy("p_type").orderBy(F.desc("count"), F.asc("p_brand"))
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .select("p_type", F.col("p_brand").alias("top_brand"))
     )
 
 

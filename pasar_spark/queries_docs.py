@@ -18,12 +18,11 @@ from pasar_spark.functions import text as T
 from pasar_spark.functions.similarity import (
     _plane_weights,
     brute_force_topk,
-    cosine,
     lsh_topk,
     minhash_lsh_pairs,
     simhash_pairs,
 )
-from pasar_spark.queries import load, register, register_retired, spread
+from pasar_spark.queries import load, register, spread
 
 # Committed parquet fixtures (scripts/make_fixtures.py) that make the
 # approximate / engine-defined queries oracle-gated: the DuckDB side reads
@@ -189,8 +188,8 @@ _COPIES_SQL = """
   UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM documents
 """
 
-# Bigram shingle sets: word-soup cross-pairs have jaccard << 0.9, so at
-# threshold 0.9 the ONLY pairs are original<->copy — a closed-form oracle.
+# Bigram shingle sets: word-soup cross-pairs have jaccard << 0.95, so at
+# threshold 0.95 the ONLY pairs are original<->copy — a closed-form oracle.
 # Degenerate docs must match Spark's shingles(col, 2) exactly: a 1-token
 # doc yields [tok] (slice pads nothing) and an empty doc yields [''] —
 # the naive toks[i] || ' ' || toks[i+1] produces [NULL] for both, which
@@ -200,47 +199,6 @@ _BIGRAMS = (
     " i -> CASE WHEN len(toks) >= i + 1 THEN toks[i] || ' ' || toks[i + 1]"
     "           WHEN len(toks) >= i THEN toks[i] ELSE '' END))"
 )
-
-
-@register_retired(
-    "dedup_ngram_jaccard",
-    f"""
-    WITH c AS ({_COPIES_SQL}),
-    sh AS (SELECT doc_id, {_BIGRAMS} AS sh
-           FROM (SELECT doc_id, {_TOKS} AS toks FROM c) t)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / len(list_distinct(list_concat(a.sh, b.sh))), 6) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-          / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.9
-    """,
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram (bigram) Jaccard near-dup pairs at threshold 0.9.
-
-    NOTE: the all-pairs formulation here is the small-scale oracle twin;
-    the scale path is dedup_minhash_lsh below (candidate generation via
-    band-bucket equi-join, no cross join anywhere).
-
-    RETIRED from the driver registry in r3 (the driver gate records at
-    most 50 entries; dedup_minhash_lsh subsumes this coverage — same
-    shingle/jaccard semantics, scale-safe candidate generation). Still
-    oracle-checked every run by tests/test_retired_oracles.py."""
-    c = _with_copies(load(spark, sf_dir, "documents"))
-    sh = c.select(
-        "doc_id", F.array_distinct(T.shingles(F.col("text"), 2)).alias("sh")
-    )
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sha"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("shb"))
-    inter = F.size(F.array_intersect("sha", "shb")).cast("double")
-    union = F.size(F.array_union("sha", "shb")).cast("double")
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("jacc_raw", inter / union)
-        .where(F.col("jacc_raw") >= 0.9)
-        .select("id_a", "id_b", F.round("jacc_raw", 6).alias("jaccard"))
-    )
 
 
 @register(
@@ -399,36 +357,6 @@ def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(q, emb, k=3)
 
 
-@register_retired(  # r4: driver seat given to cdc_derived_stats (50-cap);
-    # stays oracle-checked every run in tests/test_retired_oracles.py.
-    # Coverage subsumed by knn_cosine_topk (same dot/cosine fold) +
-    # dedup_embedding_cosine (same label-restricted all-pairs shape).
-    "emb_label_cohesion",
-    f"""
-    SELECT a.label, count(*) AS n_pairs,
-           round(avg({_dot_sql('a.embedding', 'b.embedding')}
-                 / ({_norm_sql('a.embedding')} * {_norm_sql('b.embedding')})), 4) AS avg_cos
-    FROM (SELECT * FROM embeddings WHERE vec_id < 300) a
-    JOIN (SELECT * FROM embeddings WHERE vec_id < 300) b
-      ON a.label = b.label AND a.vec_id < b.vec_id
-    GROUP BY a.label
-    """,
-)
-def emb_label_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-label average cosine — embedding-space clustering sanity."""
-    emb = spread(load(spark, sf_dir, "embeddings").where("vec_id < 300"))
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("label"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("ib"), F.col("label").alias("lb"), F.col("embedding").alias("vb"))
-    return (
-        a.join(b, (F.col("label") == F.col("lb")) & (F.col("ia") < F.col("ib")))
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.round(F.avg(cosine(F.col("va"), F.col("vb"))), 4).alias("avg_cos"),
-        )
-    )
-
-
 def _lsh_bucket_sql(col: str, n_planes: int = 6, dim: int = 64, seed: int = 7) -> str:
     """ANSI-SQL replica of similarity.hyperplane_bucket: the +/-1 plane
     weights are deterministic driver-side constants, so the oracle embeds
@@ -522,35 +450,6 @@ def knn_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum(F.coalesce(F.col("_hit"), F.lit(0))).cast("double") / n_exact, 4).alias(
             "recall"
         ),
-    )
-
-
-@register_retired(
-    "dedup_embedding_cosine",
-    f"""
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round({_dot_sql('a.embedding', 'b.embedding')}
-                 / ({_norm_sql('a.embedding')} * {_norm_sql('b.embedding')}), 6) AS cos_sim
-    FROM (SELECT * FROM embeddings WHERE vec_id < 300) a
-    JOIN (SELECT * FROM embeddings WHERE vec_id < 300) b ON a.vec_id < b.vec_id
-    WHERE {_dot_sql('a.embedding', 'b.embedding')}
-          / ({_norm_sql('a.embedding')} * {_norm_sql('b.embedding')}) >= 0.4
-    """,
-)
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (threshold 0.4 — the synthetic embeddings are near-orthogonal random vectors, max pairwise cosine ~0.46, so 0.4 yields a small deterministic pair set) — the exact
-    all-pairs small-scale twin; the scale path is the hyperplane-LSH
-    bucketing of knn_lsh_topk (no cross join at 10^9 vectors).
-
-    RETIRED from the driver registry in r3 (driver gate caps at 50
-    entries; knn_cosine_topk + knn_lsh_topk cover the embedding-cosine
-    operator surface). Still oracle-checked every run by
-    tests/test_retired_oracles.py."""
-    from pasar_spark.functions.similarity import embedding_near_dups
-
-    emb = spread(load(spark, sf_dir, "embeddings").where("vec_id < 300"))
-    return embedding_near_dups(emb, threshold=0.4).select(
-        F.col("id_a").cast("long"), F.col("id_b").cast("long"), "cos_sim"
     )
 
 
@@ -677,64 +576,4 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "media_id", "kind", "width", "height",
         F.col("payload_ref").isNotNull().alias("has_ref"),
-    )
-
-
-
-# ---------------------------------------------------------------------
-# PII scrubbing — the C4/RefinedWeb-class redaction pass (pytest-oracled
-# in the retired pool: the 50-seat driver registry is full, and
-# tests/test_retired_oracles.py runs this against DuckDB every suite).
-# PII is INJECTED deterministically from doc_id in the IDENTICAL
-# expression on both engines, so every row exercises every pattern
-# regardless of the synthetic corpus content.
-# ---------------------------------------------------------------------
-
-_PII_SRC_SQL = (
-    "text || ' contact user' || CAST(doc_id AS VARCHAR) || "
-    "'@example.com, tel 555-123-4567, host 10.0.' || "
-    "CAST(doc_id % 256 AS VARCHAR) || '.7' || "
-    "CASE WHEN doc_id % 3 = 0 THEN ', ssn 123-45-6789' ELSE '' END"
-)
-
-
-def _pii_scrub_sql() -> str:
-    src = f"({_PII_SRC_SQL})"
-    scrubbed = src
-    for _, pat, token in T.PII_PATTERNS:
-        scrubbed = f"regexp_replace({scrubbed}, '{pat}', '{token}', 'g')"
-    counts = ", ".join(
-        f"CAST(len(regexp_extract_all({src}, '{pat}')) AS BIGINT) AS n_{name}"
-        for name, pat, _ in T.PII_PATTERNS
-    )
-    return f"""
-    SELECT doc_id, {scrubbed} AS text_scrubbed, {counts}
-    FROM documents
-    """
-
-
-@register_retired("text_pii_scrub", _pii_scrub_sql())
-def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII masking (emails/IPs/SSNs/phones → typed placeholders) with a
-    per-category audit count — pure Catalyst chained regexp_replace in
-    the scan stage (functions/text.py scrub_pii), patterns restricted to
-    the RE2 ∩ Java dialect so Spark and the DuckDB oracle evaluate the
-    identical expressions."""
-    d = spread(load(spark, sf_dir, "documents"))
-    src = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com, tel 555-123-4567, host 10.0."),
-        (F.col("doc_id") % 256).cast("string"),
-        F.lit(".7"),
-        F.when(F.col("doc_id") % 3 == 0, F.lit(", ssn 123-45-6789")).otherwise(
-            F.lit("")
-        ),
-    )
-    counts = T.pii_counts(src)
-    return d.select(
-        "doc_id",
-        T.scrub_pii(src).alias("text_scrubbed"),
-        *[counts[name].alias(f"n_{name}") for name, _, _ in T.PII_PATTERNS],
     )

@@ -66,15 +66,13 @@ def envelope_schema() -> StructType:
 
 
 class WalTail:
-    """The Structured Streaming tail of the row, multi-table and patch
-    (cdc/patch.py) ingests: it owns the readStream, the per-epoch
-    Debezium decode with its DLQ, both triggers and the followers. A
-    subclass supplies ``runner`` (whose ``bootstrap()`` creates the
-    targets), the target ``paths`` ``{name: table path}`` and the
-    per-epoch ``_apply(tables, batch_df, batch_id)``, which commits
-    epoch ``e`` as batch ``<batch_prefix><e>``."""
+    """The Structured Streaming tail of the row and multi-table ingests:
+    it owns the readStream, the per-epoch Debezium decode with its DLQ,
+    both triggers and the followers. A subclass supplies ``runner``
+    (whose ``bootstrap()`` creates the targets), the target ``paths``
+    ``{name: table path}`` and the per-epoch ``_apply(tables, batch_df,
+    batch_id)``, which commits epoch ``e`` as batch ``stream-<e>``."""
 
-    batch_prefix = "stream-"
     #: a multi-table tail decodes Debezium's ``source.table`` as ``_table``
     #: (the canonical routing key) and returns every head from a drain
     multi_table = False
@@ -135,7 +133,7 @@ class WalTail:
         return {n: LakeTable.load(self.spark, p) for n, p in self._paths.items()}
 
     def _apply_epoch(self, batch_df, epoch_id: int) -> None:
-        batch_id = f"{self.batch_prefix}{epoch_id}"
+        batch_id = f"stream-{epoch_id}"
         tables = self.heads()
         if all(t.has_batch(batch_id) for t in tables.values()):
             # redelivered epoch after a checkpoint/commit race: the source

@@ -10,10 +10,25 @@ interval inside the running max must not open a new era), and the
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 from pasar_spark.operators.eras import merge_eras
 
 DAY = 86400
+SF_DIR = "/root/testdata/sf0.001"
+
+
+def _norm_cell(v):
+    if isinstance(v, float):
+        return "nan" if math.isnan(v) else round(v, 9)
+    if hasattr(v, "to_pydatetime"):
+        v = v.to_pydatetime()
+    return v
+
+
+def _norm_rows(cols, rows):
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted(tuple(_norm_cell(r[i]) for i in order) for r in rows)
 
 
 def _ts(d: int, h: int = 0):
@@ -91,7 +106,6 @@ def test_duration_eras_matches_oracle_at_sf01(spark):
     import pytest
 
     import pasar_spark.queries as q
-    from test_retired_oracles import SF_DIR, _norm_rows
 
     sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
     if not os.path.isdir(sf_dir):

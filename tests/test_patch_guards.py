@@ -18,6 +18,7 @@ from pasar_spark.cdc.merge import compact_buckets, merge_batch, vacuum_tombstone
 from pasar_spark.cdc.patch import PatchReplayRunner, merge_patch_chunk
 from pasar_spark.cdc.runner import ReplayRunner, bootstrap_table
 from pasar_spark.lake.table import LakeTable
+from pasar_spark.streaming.stream import StreamingIngest
 
 
 def _feed(spark, rows):
@@ -86,12 +87,19 @@ def test_changes_as_debezium_refuses_patch_table(spark, patch_table):
         changes_as_debezium(table, 0)
 
 
-def test_row_bootstrap_refuses_patch_table(spark, patch_table):
+def test_row_bootstrap_refuses_patch_table(spark, patch_table, tmp_path):
     runner, table = patch_table
     with pytest.raises(ValueError, match="PatchReplayRunner"):
         bootstrap_table(spark, table.path, n_buckets=1)
     with pytest.raises(ValueError, match="PatchReplayRunner"):
         ReplayRunner(spark, table.path).bootstrap()
+    # the row-mode streaming tail refuses before its first epoch runs
+    stream = StreamingIngest(
+        spark, table.path, str(tmp_path / "wal"), str(tmp_path / "ckpt")
+    )
+    with pytest.raises(ValueError, match="PatchReplayRunner"):
+        stream.run_available_now()
+    assert LakeTable.load(spark, table.path).version == table.version
 
 
 def test_patch_bootstrap_refuses_row_table(spark, tmp_path):

@@ -169,20 +169,3 @@ def test_patch_changes_feed_classifies(spark, partial_wal, tmp_path):
     # spot-check an update against the materialized views
     n_upd = ch.where("_change_type = 'update'").count()
     assert n_upd > 0
-
-
-def test_patch_streaming_tail_matches_oracle(spark, partial_wal, tmp_path):
-    """Structured Streaming tail into a patch table: availableNow drain
-    over the WAL equals the per-column oracle; a second drain (no new
-    files) commits nothing."""
-    from pasar_spark.cdc.patch import PatchStreamingIngest
-
-    r = PatchReplayRunner(spark, str(tmp_path / "t"), n_buckets=4)
-    stream = PatchStreamingIngest(
-        r, partial_wal, str(tmp_path / "ckpt"), max_files_per_trigger=2
-    )
-    t = stream.run_available_now()
-    assert _read(r) == _oracle(spark, partial_wal)
-    v = t.version
-    t2 = stream.run_available_now()
-    assert t2.version == v

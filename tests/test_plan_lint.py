@@ -2,8 +2,8 @@
 
 The correctness gate proves the answers right at sf0.01; this gate proves
 the PLANS survive 100x — no cartesian/broadcast-nested-loop candidate
-generation except in the explicitly documented small-scale oracle twins
-(whose scale paths are separate, benched queries), and no accidental
+generation except in the explicitly documented exact-baseline and
+quality-gate queries (whose all-pairs join is bounded), and no accidental
 regression from an equi-join to a theta join when someone edits a query.
 
 Planning only (sparkPlan), no execution — the whole sweep is seconds.
@@ -18,17 +18,11 @@ import pasar_spark.queries_docs  # noqa: F401  (registers doc/embedding queries)
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# Documented all-pairs SMALL-SCALE ORACLE TWINS and exact-baseline/quality
-# gates — each one's docstring names its bucketed scale path:
-#   dedup_ngram_jaccard      -> dedup_minhash_lsh
-#   dedup_embedding_cosine   -> knn_lsh_topk buckets
-#   emb_label_cohesion       -> (diagnostic, label-restricted)
+# Documented exact-baseline / quality gates whose all-pairs join is
+# bounded by design:
 #   knn_cosine_topk          -> exact baseline (broadcast query side, bounded)
 #   knn_recall_eval          -> quality gate; exact ground truth IS the point
 ALL_PAIRS_TWINS = {
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "emb_label_cohesion",
     "knn_cosine_topk",
     "knn_recall_eval",
 }

@@ -113,57 +113,6 @@ def test_redelivered_epoch_heals_stale_follower(spark, tmp_path):
     assert der.source_offset(_SRC) == t2.version
 
 
-def test_follower_over_patch_streaming_tail(spark, tmp_path):
-    """The follower seam composes with the PATCH-mode streaming tail too
-    (cdc/patch.py PatchStreamingIngest): per-column winners land in the
-    source, and the follower's fold rides the materialized CDF images —
-    same contract, different table type."""
-    from pasar_spark.cdc.patch import PatchReplayRunner, PatchStreamingIngest
-    from pasar_spark.datagen import change_events
-
-    ev = (
-        change_events(spark, 4_000, n_convs=60, seed=94, delete_fraction=0.1)
-        .withColumn(
-            "text",
-            F.when(F.col("lsn") % 3 == 0, F.lit(None)).otherwise(F.col("text")),
-        )
-        .select("conv_id", "turn_idx", "op", "ts", "lsn", "role", "text", "tool")
-    )
-    wal = str(tmp_path / "pwal")
-    write_change_log(ev.where("lsn < 2000"), wal, n_files=2)
-
-    runner = PatchReplayRunner(spark, str(tmp_path / "src"), n_buckets=4)
-    stats = DerivedConvStats(
-        spark, str(tmp_path / "src"), str(tmp_path / "derived"), n_buckets=4
-    )
-    stream = PatchStreamingIngest(
-        runner, wal, str(tmp_path / "ckpt"), followers=[stats]
-    )
-
-    def patch_oracle():
-        return sorted(
-            (r["conv_id"], r["n_turns"], r["total_chars"])
-            for r in runner.read()
-            .groupBy("conv_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_turns"),
-                F.coalesce(
-                    F.sum(F.length("text").cast("long")), F.lit(0)
-                ).alias("total_chars"),
-            )
-            .collect()
-        )
-
-    stream.run_available_now()
-    assert _state(stats) == patch_oracle()
-
-    ev.where("lsn >= 2000").repartition(2).write.mode("append").parquet(wal)
-    t2 = stream.run_available_now()
-    assert _state(stats) == patch_oracle()
-    der = LakeTable.load(spark, str(tmp_path / "derived"))
-    assert der.source_offset(_SRC) == t2.version
-
-
 def test_cli_stream_derived_honors_buckets(spark, tmp_path, capsys):
     """Regression: the CLI stream path passed --buckets to the source
     table but let the --derived follower fall back to the default 16, so
