@@ -71,52 +71,43 @@ def reduce_events(
     payload: list[str],
     op_col: str = "op",
 ) -> DataFrame:
-    """Raw change events -> stored form (one row per key).
+    """Raw change events -> stored form (one row per key): each event
+    projected to a one-event stored row, then :func:`resolve_stored`.
 
-    Per column: ``max`` over candidates — non-null sets carry their
-    value, deletes carry NULL — keyed by (ts, lsn) inside the struct.
-    Row term: whole-row LWW of (ts, lsn, op) for version + tombstone.
+    Per column: the candidate is ``(ts, lsn, value)`` — non-null sets
+    carry their value, deletes carry NULL, other events none. Row term:
+    the event's (ts, lsn) and ``op = 'D'`` as its tombstone.
     """
-    aggs = [
-        F.max(F.struct(*[F.col(o) for o in order_cols()],
-                       (F.col(op_col) == "D").alias("_t"))).alias("_row")
-    ]
-    for c in payload:
-        is_del = F.col(op_col) == "D"
-        value = F.when(is_del, F.lit(None)).otherwise(F.col(c))
-        aggs.append(
-            F.max(
-                F.when(
-                    F.col(c).isNotNull() | is_del,
-                    F.struct(
-                        *[F.col(o) for o in order_cols()], value.alias("v")
-                    ),
-                )
-            ).alias(f"_pv_{c}")
-        )
-    g = events.groupBy(*key).agg(*aggs)
-    return g.select(
+    is_del = F.col(op_col) == "D"
+    stored = events.select(
         *key,
-        *[F.col(f"_row.{o}").alias(o) for o in order_cols()],
-        *[F.col(f"_pv_{c}") for c in payload],
-        F.col("_row._t").alias("_tombstone"),
+        *ORDER,
+        *[
+            F.when(
+                F.col(c).isNotNull() | is_del,
+                F.struct(
+                    *ORDER, F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias("v")
+                ),
+            ).alias(f"_pv_{c}")
+            for c in payload
+        ],
+        is_del.alias("_tombstone"),
     )
+    return resolve_stored(stored, key, payload)
 
 
 def resolve_stored(df: DataFrame, key: list[str], payload: list[str]) -> DataFrame:
     """Fold N stored rows per key into one — the associative reduce used
-    by MoR reads, compaction, and the changes() diff."""
+    by MoR reads, compaction, the changes() diff and the event reduce."""
     aggs = [
-        F.max(
-            F.struct(*[F.col(o) for o in order_cols()], F.col("_tombstone").alias("_t"))
-        ).alias("_row")
+        F.max(F.struct(*ORDER, F.col("_tombstone").alias("_t"))).alias("_row")
     ]
     for c in payload:
         aggs.append(F.max(F.col(f"_pv_{c}")).alias(f"_pv_{c}"))
     g = df.groupBy(*key).agg(*aggs)
     return g.select(
         *key,
-        *[F.col(f"_row.{o}").alias(o) for o in order_cols()],
+        *[F.col(f"_row.{o}").alias(o) for o in ORDER],
         *[F.col(f"_pv_{c}") for c in payload],
         F.col("_row._t").alias("_tombstone"),
     )
@@ -128,10 +119,6 @@ def materialize(df: DataFrame, payload: list[str]) -> DataFrame:
     live = df.where((F.col("_tombstone").isNull()) | (~F.col("_tombstone")))
     keep = [c for c in df.columns if not c.startswith("_pv_") and c != "_tombstone"]
     return live.select(*keep, *[F.col(f"_pv_{c}.v").alias(c) for c in payload])
-
-
-def order_cols() -> list[str]:
-    return list(ORDER)
 
 
 def merge_patch_chunk(

@@ -438,15 +438,13 @@ class LakeTable:
         Row-group min/max bite where rows are key-sorted (bases, after
         major compaction); the file-stats tier bites when key values carry
         ingest-time locality (ULID-style or monotonically assigned ids).
-        On uniformly random keys in unsorted deltas neither prunes, and
-        pyarrow 16.1 does not read the parquet bloom filters that
-        write_files puts on the key column, so the driver reads every
-        surviving row group of the bucket's surviving files. That is the
-        scale trade-off: lookup cost grows with one bucket's un-pruned
-        bytes, which stay small while buckets are small and bases
-        compacted. On the 3 x 3.5 MB uniform-key files of
-        tests/test_bloom_pruning.py a lookup measured 0.20-0.26 s against
-        0.27-0.31 s for the Spark scan with blooms (4 vCPUs)."""
+        On uniformly random keys in unsorted deltas neither prunes, so the
+        driver reads every surviving row group of the bucket's surviving
+        files. That is the scale trade-off: lookup cost grows with one
+        bucket's un-pruned bytes, which stay small while buckets are small
+        and bases compacted. On 3 x 3.5 MB uniform-key files a lookup
+        measured 0.20-0.26 s on the driver against 0.27-0.31 s for a Spark
+        scan with key blooms (4 vCPUs)."""
         bucket_by = self.manifest["bucket_by"]
         if bucket_by not in key_values:
             raise ValueError(
@@ -622,7 +620,7 @@ class LakeTable:
         n_buckets: int | None = None,
     ) -> None:
         """The one physical write: field-id projection, bucket
-        repartition, writer options, ``partitionBy(...).parquet`` under
+        repartition, snappy codec, ``partitionBy(...).parquet`` under
         ``<path>/<rel>``. ``partition_by`` ends with ``_bucket``."""
         cur = self.schema
         phys = [F.col(f.name).cast(f.type).alias(f"f{f.id}") for f in cur.fields]
@@ -640,27 +638,12 @@ class LakeTable:
             out = out.sortWithinPartitions("_bucket", *key_phys)
         # Every lake data file is snappy: it encodes ~2x faster than zstd
         # (measured on the transcript payload), and a four-arm codec x
-        # bloom A/B of a 2M-event replay on 4 vCPUs was flat (6.87-7.56 s),
-        # so neither is a tuning knob.
-        writer = out.write.mode("errorifexists").option("compression", "snappy")
-        # Parquet bloom filter on the bucketing key: on uniformly random
-        # keys every file's min/max spans the key space, but a bloom
-        # answers "is this exact key in this row group" regardless of
-        # distribution. Built JVM-side by parquet-java 1.16 in the writer
-        # tasks (adaptive sizing, ~0.25 MB per 35 MB file, no measurable
-        # write-time cost). Only Spark-side readers consume it (row-group
-        # filtering on a pushed key equality). read_key reads on the
-        # driver with pyarrow 16.1, which prunes by manifest stats and
-        # row-group min/max but does not read parquet blooms.
-        bucket_by = self.manifest.get("bucket_by")
-        if bucket_by in set(cur.names()):
-            key_phys = f"f{cur.field_by_name(bucket_by).id}"
-            writer = (
-                writer.option(f"parquet.bloom.filter.enabled#{key_phys}", "true")
-                .option("parquet.bloom.filter.adaptive.enabled", "true")
-                .option("parquet.bloom.filter.max.bytes", str(256 * 1024))
-            )
-        writer.partitionBy(*partition_by).parquet(os.path.join(self.path, rel))
+        # bloom A/B of a 2M-event replay on 4 vCPUs was flat (6.87-7.56 s).
+        # No key bloom is written: no engine read would consume it
+        # (read_key reads with pyarrow, and no scan pushes a key equality).
+        out.write.mode("errorifexists").option("compression", "snappy").partitionBy(
+            *partition_by
+        ).parquet(os.path.join(self.path, rel))
 
     def _bucket_entries(self, rel: str) -> dict[str, list[dict]]:
         """bucket -> manifest entries of the ``_bucket=<b>`` dirs under

@@ -15,12 +15,23 @@ Determinism rules applied throughout (both sides!):
 
 from __future__ import annotations
 
+import errno
+import hashlib
+import inspect
+import json
+import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pasar_spark.cdc.lww import lww_reduce
+from pasar_spark.cdc.merge import compact_buckets
+from pasar_spark.cdc.runner import ReplayRunner
+from pasar_spark.lake.table import LakeTable
 from pasar_spark.operators.eras import merge_eras, session_stats
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -96,7 +107,6 @@ def spread(df: DataFrame, *keys: str, min_bytes: int = 0) -> DataFrame:
     # parquet is splittable: a single LARGE file still scans as many
     # partitions, so estimate splits the way FilePartition planning
     # does (size / maxPartitionBytes) instead of counting files
-    import os as _os
     import re as _re
 
     raw = df.sparkSession.conf.get(
@@ -113,7 +123,7 @@ def spread(df: DataFrame, *keys: str, min_bytes: int = 0) -> DataFrame:
     for uri in files:
         p = uri.removeprefix("file:")
         try:
-            size = _os.path.getsize(p)
+            size = os.path.getsize(p)
         except OSError:
             # unknown size: count one split, and stop trusting the byte
             # total — it would undercount and skip a needed fan-out
@@ -534,11 +544,6 @@ def _cache_root(kind: str, sf_dir: str, *token_parts) -> str:
     new directory, so a stale cached table can never be served to the
     oracle across code changes. Callables in ``token_parts`` contribute
     their source text; everything else its repr."""
-    import hashlib
-    import inspect
-    import os
-    import tempfile
-
     parts = [inspect.getsource(_as_change_feed)]
     for p in token_parts:
         parts.append(inspect.getsource(p) if callable(p) else repr(p))
@@ -550,55 +555,83 @@ def _cache_root(kind: str, sf_dir: str, *token_parts) -> str:
     )
 
 
+def _seat(
+    kind: str, sf_dir: str, build: Callable[[str], dict], *token_parts
+) -> tuple[str, dict]:
+    """The one host-wide seat of an engine-built table fixture: returns
+    ``(cache_dir, info)``, safe for any number of concurrent processes.
+
+    ``cache_dir`` is ``_cache_root(kind, sf_dir, build, *token_parts)``,
+    so the build's own source text is part of the token. A warm seat
+    costs one stat and one read of ``<cache>/MARKER.json``. A cold one
+    runs ``build(path)`` into a private sibling ``<cache>.build-<uuid>``;
+    the dict it returns is written to ``MARKER.json`` last, and then the
+    build dir is renamed onto ``<cache>``. The rename is the commit, so
+    ``<cache>`` never exists without its complete tables and marker.
+    When two processes race, the later rename fails (Linux: ENOTEMPTY
+    or EEXIST, the winner is in place); the loser discards its build and
+    reads the winner's. A build that raises leaves neither ``<cache>``
+    nor a build dir behind. Only the caller's own build dir is ever
+    removed, never a path another process may be reading or building.
+
+    A built table survives the rename because manifest entry paths are
+    relative to the table dir (``data/<commit>/...``); ``build`` must
+    write no absolute path of its own, and readers open the final path.
+    """
+    cache = _cache_root(kind, sf_dir, build, *token_parts)
+    marker = os.path.join(cache, "MARKER.json")
+    if not os.path.exists(marker):
+        tmp = f"{cache}.build-{uuid.uuid4().hex}"
+        os.makedirs(tmp)
+        try:
+            info = build(tmp)
+            with open(os.path.join(tmp, "MARKER.json"), "w") as fh:
+                json.dump(info, fh)
+            try:
+                os.rename(tmp, cache)
+            except OSError as e:
+                if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                    raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    with open(marker) as fh:
+        return cache, json.load(fh)
+
+
+def _transcript_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The shared feed mapping plus the two transcript columns the table
+    schema carries that the events mapping doesn't (not compared by the
+    oracles; the diff/state logic must still work around them)."""
+    return _as_change_feed(load(spark, sf_dir, "events")).withColumns(
+        {"role": F.col("op"), "tool": F.lit(None).cast("string")}
+    )
+
+
 def _two_snapshot_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Replay the events-derived change feed through the ACTUAL engine in
-    two halves (lsn <= max/2, then the rest), cached per sf_dir — the
-    deterministic two-snapshot fixture shared by the change-data-feed and
-    time-travel queries. Returns (table_path, version_of_first_half)."""
-    import json as _json
-    import os
-    import shutil
+    two halves (lsn <= max/2, then the rest) — the deterministic
+    two-snapshot fixture shared by the change-data-feed and time-travel
+    queries. Returns (table_path, version_of_first_half)."""
 
-    from pasar_spark.cdc.runner import ReplayRunner
-    from pasar_spark.lake.table import LakeTable
-
-    # the shared feed mapping + the two transcript columns the table
-    # schema carries that the events mapping doesn't (not compared by
-    # the oracles; the diff/state logic must still work around them)
-    feed = _as_change_feed(load(spark, sf_dir, "events")).withColumns(
-        {
-            "role": F.col("op"),
-            "tool": F.lit(None).cast("string"),
-        }
-    )
-    cache = _cache_root("changes_feed", sf_dir, _two_snapshot_table, 16, 1 << 40)
-    marker = os.path.join(cache, "MARKER.json")
-    tbl_path = os.path.join(cache, "tbl")
-    if not (os.path.exists(marker) and LakeTable.exists(tbl_path)):
-        shutil.rmtree(cache, ignore_errors=True)
-        os.makedirs(cache, exist_ok=True)
+    def build(path: str) -> dict:
+        feed = _transcript_feed(spark, sf_dir)
+        tbl = os.path.join(path, "tbl")
         cut = feed.agg(F.max("lsn").alias("m")).collect()[0]["m"] // 2
         one_chunk = 1 << 40  # single chunk per half: 2 data commits total
-        t1 = ReplayRunner(
-            spark, tbl_path, n_buckets=16, chunk_size=one_chunk
-        ).replay(feed, max_events=cut + 1)
+        t1 = ReplayRunner(spark, tbl, n_buckets=16, chunk_size=one_chunk).replay(
+            feed, max_events=cut + 1
+        )
         # compact the first-half snapshot (engine maintenance; state
         # provably unchanged — compaction reuses the associative reduce):
         # the pinned v1 is then a RESOLVED snapshot, so the time-travel
         # read and the changes() A-side skip the identity MoR fold (one
         # exchange + aggregate each, every query call)
-        from pasar_spark.cdc.merge import compact_buckets
-
         t1, _ = compact_buckets(t1, min_files=1, policy="full")
-        v1 = t1.version
-        ReplayRunner(
-            spark, tbl_path, n_buckets=16, chunk_size=one_chunk
-        ).replay(feed)
-        with open(marker, "w") as fh:
-            _json.dump({"v1": v1}, fh)
-    with open(marker) as fh:
-        v1 = _json.load(fh)["v1"]
-    return tbl_path, v1
+        ReplayRunner(spark, tbl, n_buckets=16, chunk_size=one_chunk).replay(feed)
+        return {"v1": t1.version}
+
+    cache, info = _seat("changes_feed", sf_dir, build, _transcript_feed)
+    return os.path.join(cache, "tbl"), info["v1"]
 
 
 @register(
@@ -645,8 +678,6 @@ def cdc_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     content), so warmup and measured runs agree; the changes() read
     itself — manifest diff, bucket-pruned two-sided state read,
     full-outer join — runs live every call."""
-    from pasar_spark.lake.table import LakeTable
-
     tbl_path, v1 = _two_snapshot_table(spark, sf_dir)
     table = LakeTable.load(spark, tbl_path)
     return table.changes(v1).select(
@@ -681,37 +712,26 @@ def cdc_partitioned_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Final state must equal the single-feed LWW oracle: partition order
     and interleaving are invisible under LWW. Table build cached per
     sf_dir (deterministic); the read runs live."""
-    import os
-    import shutil
 
-    from pasar_spark.cdc.runner import ReplayRunner
-    from pasar_spark.lake.table import LakeTable
-
-    feed = _as_change_feed(load(spark, sf_dir, "events")).withColumns(
-        {"role": F.col("op"), "tool": F.lit(None).cast("string")}
-    )
-    cache = _cache_root("partitioned_feed", sf_dir, cdc_partitioned_feed, 3, 16, 1 << 40)
-    tbl_path = os.path.join(cache, "tbl")
-    if not LakeTable.exists(tbl_path):
-        shutil.rmtree(cache, ignore_errors=True)
-        os.makedirs(cache, exist_ok=True)
+    def build(path: str) -> dict:
+        feed = _transcript_feed(spark, sf_dir)
+        tbl = os.path.join(path, "tbl")
         parts = {
             p: feed.where(F.pmod(F.xxhash64("conv_id"), F.lit(3)) == p)
             for p in range(3)
         }
         ReplayRunner(
-            spark, tbl_path, n_buckets=16, chunk_size=1 << 40
+            spark, tbl, n_buckets=16, chunk_size=1 << 40
         ).replay_partitions(parts)
         # post-ingest compaction (same rationale as _routed_lake): the
         # read below then scans resolved buckets instead of LWW-folding
         # the per-partition delta files on every call
-        from pasar_spark.cdc.merge import compact_buckets
+        compact_buckets(LakeTable.load(spark, tbl), min_files=1, policy="full")
+        return {}
 
-        compact_buckets(
-            LakeTable.load(spark, tbl_path), min_files=1, policy="full"
-        )
+    cache, _ = _seat("partitioned_feed", sf_dir, build, _transcript_feed)
     return (
-        LakeTable.load(spark, tbl_path)
+        LakeTable.load(spark, os.path.join(cache, "tbl"))
         .read()
         .select("conv_id", "turn_idx", "text", "lsn")
     )
@@ -728,31 +748,14 @@ _MT_NAMES = ["t0", "t1", "t2"]
 def _routed_lake(spark: SparkSession, sf_dir: str) -> str:
     """Demux the events-derived feed into three lake tables through the
     ACTUAL multi-table router (cdc/router.py MultiTableReplayRunner —
-    the reference's `python . etl <tables>` shape), cached per sf_dir.
-    Four LSN windows so the lockstep/position machinery really iterates;
-    one scan per window regardless of table count."""
-    import json as _json
-    import os
-    import shutil
-
+    the reference's `python . etl <tables>` shape). Four LSN windows so
+    the lockstep/position machinery really iterates; one scan per window
+    regardless of table count. Returns the lake's base dir."""
     from pasar_spark.cdc.router import MultiTableReplayRunner
-    from pasar_spark.lake.table import LakeTable
 
-    feed = _as_change_feed(load(spark, sf_dir, "events")).withColumns(
-        {"role": F.col("op"), "tool": F.lit(None).cast("string")}
-    )
-    cache = _cache_root(
-        "multi_table", sf_dir, _routed_lake, MultiTableReplayRunner.replay,
-        _MT_ROUTE_SPARK, 8, 4,
-    )
-    marker = os.path.join(cache, "MARKER.json")
-    base = os.path.join(cache, "lake")
-    if not (
-        os.path.exists(marker)
-        and all(LakeTable.exists(os.path.join(base, n)) for n in _MT_NAMES)
-    ):
-        shutil.rmtree(cache, ignore_errors=True)
-        os.makedirs(cache, exist_ok=True)
+    def build(path: str) -> dict:
+        feed = _transcript_feed(spark, sf_dir)
+        base = os.path.join(path, "lake")
         tip = feed.agg(F.max("lsn").alias("m")).collect()[0]["m"]
         MultiTableReplayRunner(
             spark, base, _MT_NAMES, route_by=_MT_ROUTE_SPARK,
@@ -765,17 +768,19 @@ def _routed_lake(spark: SparkSession, sf_dir: str) -> str:
         # LWW-folding ~4 delta files per bucket per query (guide §6:
         # fewer, larger files; state is provably unchanged — compaction
         # reuses the same associative reduce, property-tested).
-        from pasar_spark.cdc.merge import compact_buckets
-
         for n in _MT_NAMES:
             compact_buckets(
                 LakeTable.load(spark, os.path.join(base, n)),
                 min_files=1,
                 policy="full",
             )
-        with open(marker, "w") as fh:
-            _json.dump({"tip": tip}, fh)
-    return base
+        return {"tip": tip}
+
+    cache, _ = _seat(
+        "multi_table", sf_dir, build, _transcript_feed,
+        MultiTableReplayRunner.replay, _MT_ROUTE_SPARK,
+    )
+    return os.path.join(cache, "lake")
 
 
 @register(
@@ -803,10 +808,6 @@ def cdc_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     and derives each row's route directly — equality proves the demux
     partitioned the key space losslessly AND each table's merge applied
     exactly its slice. Table build cached per sf_dir; reads run live."""
-    import os
-
-    from pasar_spark.lake.table import LakeTable
-
     base = _routed_lake(spark, sf_dir)
     out = None
     for n in _MT_NAMES:
@@ -944,35 +945,33 @@ def cdc_patch_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     winners from the raw feed; matching it proves no fold or compaction
     lost a column winner across chunk boundaries. Table build cached per
     sf_dir; the resolved read runs live."""
-    import os
-    import shutil
-
     from pasar_spark.cdc.patch import PatchReplayRunner
-    from pasar_spark.lake.table import LakeTable
 
-    feed = _as_change_feed(load(spark, sf_dir, "events")).select(
-        "conv_id",
-        "turn_idx",
-        "op",
-        "ts",
-        "lsn",
-        F.when(F.col("lsn") % 3 == 0, F.lit(None)).otherwise(F.col("text")).alias("text"),
+    def build(path: str) -> dict:
+        feed = _as_change_feed(load(spark, sf_dir, "events")).select(
+            "conv_id",
+            "turn_idx",
+            "op",
+            "ts",
+            "lsn",
+            F.when(F.col("lsn") % 3 == 0, F.lit(None)).otherwise(F.col("text")).alias("text"),
+        )
+        PatchReplayRunner(
+            spark,
+            os.path.join(path, "tbl"),
+            payload=[("text", "string")],
+            n_buckets=16,
+            chunk_size=50_000,
+            compact_min_files=4,
+        ).replay(feed)
+        return {}
+
+    cache, _ = _seat("patch_table", sf_dir, build)
+    return (
+        PatchReplayRunner(spark, os.path.join(cache, "tbl"))
+        .read()
+        .select("conv_id", "turn_idx", "lsn", "text")
     )
-    cache = _cache_root("patch_table", sf_dir, cdc_patch_table, "text", 16, 50_000, 4)
-    tbl_path = os.path.join(cache, "tbl")
-    runner = PatchReplayRunner(
-        spark,
-        tbl_path,
-        payload=[("text", "string")],
-        n_buckets=16,
-        chunk_size=50_000,
-        compact_min_files=4,
-    )
-    if not LakeTable.exists(tbl_path):
-        shutil.rmtree(cache, ignore_errors=True)
-        os.makedirs(cache, exist_ok=True)
-        runner.replay(feed)
-    return runner.read().select("conv_id", "turn_idx", "lsn", "text")
 
 
 @register(
@@ -997,8 +996,6 @@ def cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the oracle must recompute it from the raw feed with a window
     over the first half. Proves snapshots are immutable: the second
     half's commits (and any compaction) must not leak into v_half."""
-    from pasar_spark.lake.table import LakeTable
-
     tbl_path, v1 = _two_snapshot_table(spark, sf_dir)
     return (
         LakeTable.load(spark, tbl_path, version=v1)
@@ -1015,46 +1012,33 @@ def _derived_stats_table(spark: SparkSession, sf_dir: str) -> str:
     deltas, touched buckets only — cdc/derived.py). The cached derived
     state is therefore full-refresh ∘ incremental-refresh, and the
     oracle's from-scratch recompute over the raw feed gates the IVM
-    equivalence claim. Cached per sf_dir + builder/refresh source text
-    (any code edit rebuilds). Returns the derived table path."""
-    import json as _json
-    import os
-    import shutil
-
+    equivalence claim. The derived table's ledger records the source
+    VERSION it consumed, not the source path. Returns the derived table
+    path."""
     from pasar_spark.cdc.derived import DerivedConvStats
-    from pasar_spark.cdc.runner import ReplayRunner
-    from pasar_spark.lake.table import LakeTable
 
-    feed = _as_change_feed(load(spark, sf_dir, "events")).withColumns(
-        {"role": F.col("op"), "tool": F.lit(None).cast("string")}
-    )
-    cache = _cache_root(
-        "derived_stats", sf_dir, _derived_stats_table,
-        DerivedConvStats.refresh, 16, 1 << 40,
-    )
-    marker = os.path.join(cache, "MARKER.json")
-    src_path = os.path.join(cache, "src")
-    der_path = os.path.join(cache, "der")
-    if not (os.path.exists(marker) and LakeTable.exists(der_path)):
-        shutil.rmtree(cache, ignore_errors=True)
-        os.makedirs(cache, exist_ok=True)
+    def build(path: str) -> dict:
+        feed = _transcript_feed(spark, sf_dir)
+        src, der = os.path.join(path, "src"), os.path.join(path, "der")
         cut = feed.agg(F.max("lsn").alias("m")).collect()[0]["m"] // 2
         one_chunk = 1 << 40
-        ReplayRunner(spark, src_path, n_buckets=16, chunk_size=one_chunk).replay(
+        ReplayRunner(spark, src, n_buckets=16, chunk_size=one_chunk).replay(
             feed, max_events=cut + 1
         )
-        stats = DerivedConvStats(spark, src_path, der_path, n_buckets=16)
+        stats = DerivedConvStats(spark, src, der, n_buckets=16)
         _, info1 = stats.refresh()
-        ReplayRunner(spark, src_path, n_buckets=16, chunk_size=one_chunk).replay(feed)
+        ReplayRunner(spark, src, n_buckets=16, chunk_size=one_chunk).replay(feed)
         _, info2 = stats.refresh()
         if info1.get("mode") != "full" or info2.get("mode") != "incremental":
-            shutil.rmtree(cache, ignore_errors=True)
             raise RuntimeError(
                 f"IVM fixture took an unexpected path: {info1} / {info2}"
             )
-        with open(marker, "w") as fh:
-            _json.dump({"modes": [info1["mode"], info2["mode"]]}, fh)
-    return der_path
+        return {"modes": [info1["mode"], info2["mode"]]}
+
+    cache, _ = _seat(
+        "derived_stats", sf_dir, build, _transcript_feed, DerivedConvStats.refresh
+    )
+    return os.path.join(cache, "der")
 
 
 @register(
@@ -1084,8 +1068,6 @@ def cdc_derived_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch GROUP BY over the raw feed's final live state. That
     equality IS the IVM correctness claim: O(changes) maintenance
     converges to the O(table) recompute."""
-    from pasar_spark.lake.table import LakeTable
-
     der_path = _derived_stats_table(spark, sf_dir)
     return (
         LakeTable.load(spark, der_path)
@@ -1427,9 +1409,6 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema (never inferred), aggregate. The oracle computes the
     same aggregate from parquet — equality proves the round-trip is
     lossless."""
-    import os
-    import tempfile
-
     n = load(spark, sf_dir, "nation")
     # stable path keyed by sf_dir AND Spark application id: repeated
     # runs in ONE session reuse the dir (no mkdtemp leak per call), and
@@ -1444,7 +1423,6 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if session_root not in _CSV_TMP_CLEANUPS:
         import atexit
-        import shutil
 
         _CSV_TMP_CLEANUPS.add(session_root)
         atexit.register(shutil.rmtree, session_root, ignore_errors=True)

@@ -3,6 +3,8 @@ entry on Spark and its oracle_sql() on DuckDB over the same sf dir, then
 compare row count, column names, and order-insensitive values.
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+
+Names not in the registry are refused (exit 2) before Spark starts.
 """
 
 from __future__ import annotations
@@ -42,6 +44,11 @@ def norm_rows(cols, rows):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
+    qs = entry_mod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print("unknown query names:", unknown, file=sys.stderr)
+        sys.exit(2)
     spark = get_spark(
         "oracle-check",
         master="local[8]",
@@ -53,7 +60,6 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():

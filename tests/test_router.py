@@ -163,78 +163,36 @@ def test_combined_fanout_equals_per_table(spark, wal, tmp_path, monkeypatch):
     # oracle gate on the combined output specifically
     for name in NAMES:
         assert _state(combined[name]) == _oracle_state(wal, ROUTE_DUCK, name)
-    # routed files are single-table files: same physical layout, codec,
-    # bloom and manifest entries as write_files output
+    # routed files are single-table files: same physical layout, codec
+    # and manifest entries as write_files output
     for name in NAMES:
-        assert _file_shape(spark, combined[name]) == _file_shape(spark, per_table[name]), name
+        assert _file_shape(combined[name]) == _file_shape(per_table[name]), name
 
 
-def _file_shape(spark, table):
+def _file_shape(table):
     """What a table's data files and manifest entries look like, minus
-    their contents: parquet (column, physical type) pairs, codecs and
-    bloom columns across files, and the entry key sets. Also checks each
-    entry's path sits under data/<commit>/_bucket=<its bucket>/."""
+    their contents: parquet (column, physical type) pairs, codecs across
+    files, and the entry key sets. Also checks each entry's path sits
+    under data/<commit>/_bucket=<its bucket>/."""
     import re
 
     import pyarrow.parquet as pq
-    from test_bloom_pruning import _footer_blooms
 
-    columns, codecs, blooms, keys = set(), set(), set(), set()
+    columns, codecs, keys = set(), set(), set()
     for b, entries in table.manifest["buckets"].items():
         for e in entries:
             assert re.fullmatch(rf"data/[^/]+/_bucket={b}/[^/]+\.parquet", e["path"]), e
             keys.add(tuple(sorted(e)))
-            full = os.path.join(table.path, e["path"])
-            md = pq.ParquetFile(full).metadata
+            md = pq.ParquetFile(os.path.join(table.path, e["path"])).metadata
             columns.add(tuple((c.name, c.physical_type) for c in md.schema))
             codecs.update(
                 md.row_group(rg).column(ci).compression
                 for rg in range(md.num_row_groups)
                 for ci in range(md.num_columns)
             )
-            offs = _footer_blooms(spark, full)
-            blooms.add(tuple(sorted(c for c, off in offs.items() if off >= 0)))
-    bucket_by = f"f{table.schema.field_by_name(table.manifest['bucket_by']).id}"
     assert codecs == {"SNAPPY"}
-    # a fully dictionary-encoded key column gets no bloom (parquet-java;
-    # see test_bloom_pruning.py), so small files may carry none
-    assert blooms <= {(), (bucket_by,)}
     assert keys == {("batch", "kind", "path", "rows", "schema_id", "stats")}
-    return columns, codecs, blooms, keys
-
-
-def test_routed_write_blooms_the_bucket_key_only(spark, tmp_path):
-    """At a key cardinality that defeats the dictionary, every routed
-    file carries the bucket_by bloom and no other, as write_files'
-    files do (test_bloom_pruning.py)."""
-    from pyspark.sql import functions as F
-    from test_bloom_pruning import _data_files, _footer_blooms, _uniform_chunk
-
-    from pasar_spark.cdc.runner import BASE_COLUMNS, KEY
-    from pasar_spark.lake.table import LakeTable
-
-    routes = {
-        n: LakeTable.create(
-            spark, str(tmp_path / n), columns=BASE_COLUMNS, key=KEY,
-            n_buckets=1, bucket_by="conv_id",
-        )
-        for n in ("a", "b")
-    }
-    t = routes["a"]
-    df = _uniform_chunk(spark, 0).select(
-        "*",
-        F.when(F.col("turn_idx") == 0, "a").otherwise("b").alias("_route"),
-        t.bucket_expr().alias("_bucket"),
-    )
-    files = t.write_routed(df, routes)
-    conv_phys = f"f{t.schema.field_by_name('conv_id').id}"
-    for n, table in routes.items():
-        table = table.commit_append(files[n], "routed")
-        paths = _data_files(table)
-        assert paths, n
-        for f in paths:
-            offs = _footer_blooms(spark, f)
-            assert [c for c, off in offs.items() if off >= 0] == [conv_phys], f
+    return columns, codecs, keys
 
 
 def test_crash_after_the_routed_write_leaves_only_table_orphans(

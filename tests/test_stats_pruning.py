@@ -178,3 +178,53 @@ def test_pruning_survives_rename(spark, table):
     assert 0 < len(kept) < len(entries)
     got = t2.read_key(conversation_id="conv03_01", turn_idx=0).collect()
     assert len(got) == 1 and got[0].text == "text c3 j1 t0"
+
+
+UNIFORM_CONVS = 2_000
+
+
+def _uniform_conv(j: int) -> str:
+    import hashlib
+
+    return f"conv-{j:08d}-" + hashlib.sha256(str(j).encode()).hexdigest()[:12]
+
+
+@pytest.fixture(scope="module")
+def uniform_table(spark, tmp_path_factory):
+    """Three chunks that each span the SAME key range, so the min/max
+    tier cannot tell their files apart."""
+    path = str(tmp_path_factory.mktemp("uniformkeys") / "tbl")
+    t = LakeTable.create(
+        spark, path, columns=BASE_COLUMNS, key=KEY, n_buckets=1, bucket_by="conv_id"
+    )
+    j = F.col("id") % UNIFORM_CONVS
+    for i in range(3):
+        df = spark.range(UNIFORM_CONVS * 2).select(
+            F.concat(
+                F.lit("conv-"),
+                F.lpad(j.cast("string"), 8, "0"),
+                F.lit("-"),
+                F.sha2(j.cast("string"), 256).substr(1, 12),
+            ).alias("conv_id"),
+            (i * 10 + (F.col("id") >= UNIFORM_CONVS).cast("int")).alias("turn_idx"),
+            F.lit("user").alias("role"),
+            F.concat(F.lit(f"text c{i} j"), F.col("id").cast("string")).alias("text"),
+            F.lit(None).cast("string").alias("tool"),
+            (F.lit(T0) + F.make_interval(secs=i * 1000 + F.col("id"))).alias("ts"),
+            (i * 1_000_000 + F.col("id")).alias("lsn"),
+            F.lit(False).alias("_tombstone"),
+        ).withColumn("_bucket", t.bucket_expr())
+        files = t.write_files(df, t.new_commit_id())
+        t = t.commit_append(files, batch_id=f"chunk-{i}", last_lsn=i * 1000 + 999)
+    return t
+
+
+def test_min_max_stats_are_inert_but_lookup_is_exact(uniform_table):
+    table = uniform_table
+    # uniform key range: the min/max tier keeps every file ...
+    entries = _entries(table)
+    assert table._prune_entries(entries, {"conv_id": _uniform_conv(7)}) == entries
+    # ... yet the lookup, reading every row group, is exact
+    got = table.read_key(conv_id=_uniform_conv(7), turn_idx=21).collect()
+    assert len(got) == 1 and got[0].text == f"text c2 j{UNIFORM_CONVS + 7}"
+    assert table.read_key(conv_id="conv-not-there-xyz", turn_idx=0).count() == 0
