@@ -12,7 +12,7 @@ re-expressed Spark-first:
   reference's ``ROW_NUMBER() ... = 1`` prioritized-pick pattern
   (etl/pypasar/db/sql/postgres/person/stg__person.sql:26-40);
 - an Iceberg-style snapshot lake table (atomic manifest commits, snapshot
-  tags, bucket-pruned copy-on-write) implemented over Parquet because this
+  tags, bucket-pruned merge-on-read) implemented over Parquet because this
   sandbox ships no Iceberg runtime jar — the MERGE surface is shaped so it
   drops onto ``MERGE INTO`` + ``IcebergSparkSessionExtensions`` unchanged
   on a real cluster;

@@ -389,12 +389,7 @@ def changes_as_debezium(
         )
     ch = table.changes(from_version, to_version, pre_images=True)
     key = list(table.manifest["key"])
-    order = list(table.manifest.get("resolve_order", ["ts", "lsn"]))
-    payload = [
-        c
-        for c in table.schema.names()
-        if c not in set(key) | set(order) | {"_tombstone"}
-    ]
+    payload = table.payload
     # Evolution-promoted columns are NOT in the fixed wire row image —
     # they ride the ``extra`` JSON (exactly how they arrived pre-
     # promotion), with the emitted schema_ver telling a consumer running

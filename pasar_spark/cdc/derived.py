@@ -82,11 +82,9 @@ class DerivedConvStats:
         materialize; row tables read directly. The INCREMENTAL path needs
         no such branch: changes() already materializes both images."""
         if src.manifest.get("conflict") == "patch":
-            from pasar_spark.cdc.patch import materialize, payload_names
+            from pasar_spark.cdc.patch import materialize
 
-            return materialize(
-                src.read(include_tombstones=True), payload_names(src)
-            )
+            return materialize(src.read(include_tombstones=True), src.payload)
         return src.read()
 
     def _full_aggregate(self, src: LakeTable) -> DataFrame:

@@ -10,24 +10,24 @@ Semantics (the Iceberg statement this stands in for on a real cluster):
     WHEN NOT MATCHED AND s.op <> 'D'                              THEN INSERT *
 
 Replaces the reference's truncate-then-load (etl/pypasar/omop/person.py:
-24-33, measurement.py:91-95) with an incremental O(changes)+O(touched
-buckets) rewrite.
+24-33, measurement.py:91-95) with an incremental O(changes) append.
 
-Both modes compute the statement the same way: the chunk is LWW-reduced
-to one delta row per key (a delete becomes a tombstone row), and the
-table's state is the LWW resolve of stored rows ∪ deltas. mor appends
-the delta and leaves the resolve to reads and compaction; cow resolves
-the touched buckets' stored rows ∪ the delta at once and replaces those
-buckets. A stale event loses the resolve to the stored row, and a
-tombstone wins it like any row, so no match/decision logic exists apart
-from the reduce.
+The merge is merge-on-read, and only that: the chunk is LWW-reduced to
+one delta row per key (a delete becomes a tombstone row) and appended
+as per-bucket delta files. The table's state is the LWW resolve of
+stored rows ∪ deltas, which reads and compaction compute. A stale event
+loses the resolve to the stored row, and a tombstone wins it like any
+row, so no match/decision logic exists apart from the reduce. Because
+the reduce is associative, resolving lazily equals resolving eagerly
+per batch; ``compact_buckets`` folds the deltas to bound read cost, and
+``compact_buckets(policy="full")`` resolves every bucket it touches.
 
 Scale notes (100 TB / 1000 executors):
 - the source side is LWW-reduced FIRST (one row per touched key), so the
   delta is bounded by distinct keys per chunk, not raw event volume;
-- cow reads only the buckets the delta touches (manifest file-list
-  pruning — Iceberg partition pruning analogue), and its resolve is one
-  aggregate keyed on the natural key over those buckets plus the delta;
+- a commit writes O(chunk) regardless of table size; compaction rewrites
+  only the buckets whose deltas piled up (manifest file-list pruning —
+  the Iceberg partition pruning analogue);
 - metrics ride the delta via ``DataFrame.observe`` (no extra pass over
   the data), the Spark-native version of the reference's per-table
   stats (etl/__main__.py:77-98).
@@ -40,9 +40,7 @@ from pyspark.sql import functions as F
 
 from pasar_spark.cdc.lww import lww_reduce
 from pasar_spark.functions.normalize import normalize_text
-from pasar_spark.lake.table import LakeTable, _union
-
-ORDER = ["ts", "lsn"]
+from pasar_spark.lake.table import LakeTable
 
 
 def _require_row_mode(table: LakeTable, op: str) -> None:
@@ -99,7 +97,6 @@ def merge_batch(
     batch_id: str,
     last_lsn: int | None = None,
     normalize: bool = True,  # False: stored text is already the lake's
-    mode: str = "cow",  # 'cow' (eager merge) | 'mor' (append deltas)
     partition_offsets: dict | None = None,
     stage: str | None = None,  # WAP: commit as staged snapshot <stage>
 ) -> tuple[LakeTable, dict]:
@@ -108,28 +105,17 @@ def merge_batch(
     Idempotent: a batch_id already in the ledger is a no-op (exactly-once
     under replay/crash-retry).
 
-    Both modes LWW-reduce the chunk to delta rows and count ``applied`` /
-    ``deleted`` over them (upserts / tombstones, per reduce).
-    mode='cow': resolve the touched buckets' stored rows ∪ the delta and
-    replace those buckets (reads stay cheap, writes cost O(touched
-    buckets) — fine while chunks >> table).
-    mode='mor': append the delta as per-bucket delta files — O(chunk)
-    writes regardless of table size, the 10^10-event path; reads
-    LWW-resolve deltas until compact_buckets folds them. Both modes are
-    equivalent under LWW because the reduce is associative: resolving
-    (base ∪ deltas) lazily equals resolving eagerly per batch.
+    The chunk is LWW-reduced to delta rows, ``applied`` / ``deleted`` are
+    counted over them (upserts / tombstones, per reduce), and the delta
+    is appended as per-bucket delta files: O(chunk) writes regardless of
+    table size. The touched buckets stay unresolved until
+    :func:`compact_buckets` folds them; reads resolve them meanwhile.
     """
-    if mode not in ("mor", "cow"):
-        raise ValueError(f"merge_batch: mode must be 'mor'|'cow', got {mode!r}")
     _require_row_mode(table, "merge_batch")
     if table.has_batch(batch_id):
         return table, {"skipped_batches": 1}
 
-    key = table.manifest["key"]
-    order = table.manifest.get("resolve_order", ORDER)
-    schema_cols = table.schema.names()
-    payload = [c for c in schema_cols if c not in set(key) | set(order) | {"_tombstone"}]
-
+    key, order, payload = table.manifest["key"], table.resolve_order, table.payload
     lsn_col = order[-1]  # the monotone component of the resolve order
     obs_src = Observation(f"src-{batch_id}")
     changes = changes.observe(
@@ -139,58 +125,39 @@ def merge_batch(
     reduced = reduce_changes(changes, key, order, payload, normalize).withColumn(
         "_bucket", table.bucket_expr()
     )
-    obs = Observation(f"{mode}-{batch_id}")
+    obs = Observation(f"mor-{batch_id}")
     delta_rows = reduced.select(*delta_columns(key, order, payload), F.col("_bucket")).observe(
         obs,
         F.sum((~F.col("_tombstone")).cast("long")).alias("applied"),
         F.sum(F.col("_tombstone").cast("long")).alias("deleted"),
     )
-
-    def ledger() -> dict:
-        """The commit's ledger arguments, read once the observed rows
-        have flowed (mor: the delta write; cow: the bucket collect)."""
-        m = _obs_get(obs, {"applied": 0, "deleted": 0})
-        src_stats = _obs_get(obs_src, {"events_seen": 0, "max_lsn": None})
-        lsn = last_lsn if last_lsn is not None else src_stats["max_lsn"]
-        return dict(
-            batch_id=batch_id,
-            last_lsn=None if lsn is None else int(lsn),
-            metrics_delta={
-                "applied": int(m["applied"] or 0),
-                "deleted": int(m["deleted"] or 0),
-                "events_seen": int(src_stats["events_seen"] or 0),
-            },
-            partition_offsets=partition_offsets,
-            staged_name=stage,
-        )
-
-    if mode == "mor":
-        new_files = table.write_files(delta_rows, table.new_commit_id())
-        commit = ledger()
-        return table.commit_append(new_files, **commit), commit["metrics_delta"]
-
-    delta_rows = delta_rows.persist()
-    try:
-        affected = sorted(
-            r["_bucket"] for r in delta_rows.select("_bucket").distinct().collect()
-        )
-        commit = ledger()
-        stored = table._read_files([str(b) for b in affected])
-        logical = [F.col(f.name).cast(f.type).alias(f.name) for f in table.schema.fields]
-        rows = table._resolve(
-            _union([p for p in (stored, delta_rows.select(*logical)) if p is not None])
-        )
-        return _rewrite_buckets(table, rows, affected, **commit), commit["metrics_delta"]
-    finally:
-        delta_rows.unpersist()
+    new_files = table.write_files(delta_rows, table.new_commit_id())
+    # the observed rows have flowed through the write: read the metrics
+    m = _obs_get(obs, {"applied": 0, "deleted": 0})
+    src_stats = _obs_get(obs_src, {"events_seen": 0, "max_lsn": None})
+    lsn = last_lsn if last_lsn is not None else src_stats["max_lsn"]
+    metrics_delta = {
+        "applied": int(m["applied"] or 0),
+        "deleted": int(m["deleted"] or 0),
+        "events_seen": int(src_stats["events_seen"] or 0),
+    }
+    table = table.commit_append(
+        new_files,
+        batch_id,
+        last_lsn=None if lsn is None else int(lsn),
+        metrics_delta=metrics_delta,
+        partition_offsets=partition_offsets,
+        staged_name=stage,
+    )
+    return table, metrics_delta
 
 
 def _rewrite_buckets(
     table: LakeTable, rows: DataFrame, buckets: list, sort_keys: bool = False, **commit
 ) -> LakeTable:
     """Replace ``buckets``' files with ``rows`` (their fully resolved
-    state, logical columns) in one snapshot — the tail of the cow merge,
-    major compaction and vacuum. ``commit`` goes to ``commit_merge``."""
+    state, logical columns) in one snapshot — the tail of major
+    compaction and vacuum. ``commit`` goes to ``commit_merge``."""
     new_files = table.write_files(
         rows.withColumn("_bucket", table.bucket_expr()), table.new_commit_id(), sort_keys=sort_keys
     )

@@ -61,10 +61,6 @@ def stored_columns(
     ]
 
 
-def payload_names(table: LakeTable) -> list[str]:
-    return [c[len("_pv_") :] for c in table.schema.names() if c.startswith("_pv_")]
-
-
 def reduce_events(
     events: DataFrame,
     key: list[str],
@@ -133,8 +129,7 @@ def merge_patch_chunk(
     if table.has_batch(batch_id):
         return table
     key = table.manifest["key"]
-    names = payload_names(table)
-    stored = reduce_events(events, key, names).withColumn(
+    stored = reduce_events(events, key, table.payload).withColumn(
         "_bucket", table.bucket_expr()
     )
     files = table.write_files(stored, table.new_commit_id())
@@ -195,7 +190,7 @@ class PatchReplayRunner:
         """Resolved, materialized user view of the patch table
         (``table.read`` already resolves it per column)."""
         table = table or LakeTable.load(self.spark, self.table_path)
-        return materialize(table.read(include_tombstones=True), payload_names(table))
+        return materialize(table.read(include_tombstones=True), table.payload)
 
     # ------------------------------------------------------------------
     def replay(self, events, max_events: int | None = None) -> LakeTable:

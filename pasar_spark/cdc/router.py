@@ -45,9 +45,9 @@ Scale design (the part that matters at 10^10 events):
   claim), per-table fan-out 31.0 s; at 10 tables combined 21.9 s vs
   per-table 53.7 s (2.45×) — the gap grows with table count, which is
   the reference's ~22-target shape. Falls back to per-table merges
-  when targets diverge (different schema/buckets/key), when a
-  schema-evolution step lands mid-window, or in cow mode — a choice
-  made from that observed state each window, never set by the caller.
+  when targets diverge (different schema/buckets/key) or when a
+  schema-evolution step lands mid-window — a choice made from that
+  observed state each window, never set by the caller.
   Equivalence is the same LWW-associativity argument as merge-on-read
   itself: reducing each route's slice separately or all routes together
   keyed by (route, key) yields identical winners.
@@ -102,7 +102,6 @@ class MultiTableReplayRunner:
         n_buckets: int = 16,
         chunk_size: int = 1_000_000,
         evolution_plan: EvolutionPlan | None = None,
-        merge_mode: str = "mor",
         compact_min_files: int = 8,
         on_unrouted: str = "error",
     ):
@@ -132,7 +131,6 @@ class MultiTableReplayRunner:
         self.route_by = route_by
         self.chunk_size = chunk_size
         self.evolution_plan = evolution_plan or EvolutionPlan()
-        self.merge_mode = merge_mode
         self.compact_min_files = compact_min_files
         self.on_unrouted = on_unrouted
         # one single-table runner per target: its bootstrap and its
@@ -140,7 +138,7 @@ class MultiTableReplayRunner:
         self._runners = {
             n: ReplayRunner(
                 spark, os.path.join(base_dir, n), o.get("n_buckets", n_buckets),
-                chunk_size, self.evolution_plan, merge_mode, compact_min_files,
+                chunk_size, self.evolution_plan, compact_min_files,
             )
             for n, o in table_opts.items()
         }
@@ -222,14 +220,11 @@ class MultiTableReplayRunner:
     def _fan_out(self, tables, routed, todo, batch_id, counts, chunk_hi) -> None:
         """Apply one routed window or streaming epoch to the ``todo``
         targets, replacing their entries in ``tables``. The combined
-        fan-out (:func:`combined_window`) needs mor mode (cow resolves
-        each table's touched buckets), homogeneous targets, and no
-        schema-evolution step landing in this window — otherwise each
+        fan-out (:func:`combined_window`) needs homogeneous targets and
+        no schema-evolution step landing in this window — otherwise each
         slice takes the single-table row apply, which owns evolution."""
-        if (
-            self.merge_mode == "mor"
-            and combined_eligible(tables, todo)
-            and not self.evolution_plan.pending(routed, [tables[n] for n in todo])
+        if combined_eligible(tables, todo) and not self.evolution_plan.pending(
+            routed, [tables[n] for n in todo]
         ):
             combined_window(
                 tables, routed, todo, batch_id, counts,
@@ -381,7 +376,7 @@ def combined_eligible(tables: dict, todo: list[str]) -> bool:
             m["n_buckets"],
             m.get("bucket_by"),
             tuple(m["key"]),
-            tuple(m.get("resolve_order", [])),
+            tuple(t.resolve_order),
             _json.dumps(t.schema.to_json(), sort_keys=True),
         )
 
@@ -414,14 +409,10 @@ def combined_window(
 
     from pyspark.sql import Observation
 
-    from pasar_spark.cdc.merge import ORDER, delta_columns, reduce_changes
+    from pasar_spark.cdc.merge import delta_columns, reduce_changes
 
     t0 = tables[todo[0]]
-    key = t0.manifest["key"]
-    order = t0.manifest.get("resolve_order", ORDER)
-    payload = [
-        c for c in t0.schema.names() if c not in set(key) | set(order) | {"_tombstone"}
-    ]
+    key, order, payload = t0.manifest["key"], t0.resolve_order, t0.payload
 
     src = promote_extra(routed.where(F.col("_route").isin(list(todo))), t0)
     lsn_col = order[-1]  # the monotone component of the resolve order

@@ -18,7 +18,9 @@ id counter) with LSN-range chunking:
 
 That loop exists once, :func:`replay_windows`; the row, per-partition,
 router (cdc/router.py) and patch (cdc/patch.py) modes supply only the
-per-window apply. Its batch-id prefixes are durable ledger format —
+per-window apply; a row-mode apply (``ReplayRunner._merge_rows``) is a
+merge-on-read append followed by tiered compaction. Its batch-id
+prefixes are durable ledger format —
 ``lsn-`` (row and router), ``p<part>-lsn-`` (partitioned) and
 ``patch-lsn-`` (patch) — as is the streaming tail's ``stream-`` epoch
 id (streaming/stream.py).
@@ -156,11 +158,6 @@ class ReplayRunner:
         n_buckets: int = 16,
         chunk_size: int = 1_000_000,
         evolution_plan: EvolutionPlan | None = None,
-        # 'mor' (default): O(chunk) delta appends + bounded compaction —
-        # 1.7x faster than 'cow' over 1M events in 4 chunks (16 buckets,
-        # local[4], 4 vCPUs) and the gap grows with table size; 'cow'
-        # keeps every bucket resolved, so reads skip the resolve
-        merge_mode: str = "mor",
         compact_min_files: int = 8,
     ):
         self.spark = spark
@@ -168,7 +165,6 @@ class ReplayRunner:
         self.n_buckets = n_buckets
         self.chunk_size = chunk_size
         self.evolution_plan = evolution_plan or EvolutionPlan()
-        self.merge_mode = merge_mode
         self.compact_min_files = compact_min_files
 
     # ------------------------------------------------------------------
@@ -258,19 +254,18 @@ class ReplayRunner:
         audit_checks=None,
     ) -> tuple[LakeTable, dict]:
         """The row-mode apply of batch windows, router slices and streaming
-        epochs: schema evolution, ``extra`` promotion, LWW merge (or WAP
-        under ``audit_checks``), MoR compaction."""
+        epochs: schema evolution, ``extra`` promotion, merge-on-read
+        append (or WAP under ``audit_checks``), then compaction."""
         ver = self.evolution_plan.pending(chunk, [table])
         if ver:
             table = self.evolution_plan.apply_up_to(table, ver)
         chunk = promote_extra(chunk, table)
-        kw = dict(last_lsn=last_lsn, mode=self.merge_mode, partition_offsets=partition_offsets)
+        kw = dict(last_lsn=last_lsn, partition_offsets=partition_offsets)
         if audit_checks is None:
             table, delta = merge_batch(table, chunk, batch_id, **kw)
         else:
             table, delta, _ = write_audit_publish(
                 table, chunk, batch_id, checks=audit_checks, **kw
             )
-        if self.merge_mode == "mor":
-            table, _ = compact_buckets(table, min_files=self.compact_min_files)
+        table, _ = compact_buckets(table, min_files=self.compact_min_files)
         return table, delta

@@ -83,9 +83,7 @@ def promote_extra(events: DataFrame, table: LakeTable) -> DataFrame:
     would get a NULL key and the LWW reduce would corrupt the table);
     (2) materialize genuinely new columns from the ``extra`` JSON.
     JSON access + cast is pure Catalyst (get_json_object) — no Python."""
-    key_and_order = set(table.manifest["key"]) | set(
-        table.manifest.get("resolve_order", [])
-    )
+    key_and_order = set(table.manifest["key"]) | set(table.resolve_order)
     aliases = table.manifest.get("feed_aliases", {})
     for old, new in aliases.items():
         if old in events.columns and new not in events.columns:

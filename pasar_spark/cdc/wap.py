@@ -38,11 +38,11 @@ def write_audit_publish(
 ) -> tuple[LakeTable, dict, str]:
     """Stage one chunk, audit it, publish or discard.
 
-    ``checks`` are callables over the STAGED table state (e.g. the
-    cdc/quality.py assertions) that raise ``QualityError`` to veto.
-    Returns (table, metrics_delta, outcome) with outcome in
-    {'published', 'skipped'}; a vetoed chunk discards the stage and
-    re-raises the QualityError with main history untouched.
+    ``checks`` are callables over the STAGED table state's DataFrame
+    that raise to veto. Returns (table, metrics_delta, outcome) with
+    outcome in {'published', 'skipped'}; a vetoed chunk discards the
+    stage and re-raises the check's exception with main history
+    untouched.
 
     Concurrent-writer safe: if another commit publishes between this
     chunk's stage and its publish, the stale stage is discarded and the
@@ -68,8 +68,8 @@ def write_audit_publish(
             for check in checks:
                 check(view)
         except Exception:
-            # QualityError is the designed veto, but ANY failure here
-            # (a crashing check, a read error) must not leak the stage:
+            # a raising check is the designed veto, and no failure here
+            # (a crashing check, a read error) may leak the stage:
             # a leftover STAGED pointer pins its whole parent chain
             # against expire_snapshots indefinitely. Discard, then
             # re-raise — the chunk can be re-staged exactly-once.

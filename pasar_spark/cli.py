@@ -91,9 +91,8 @@ def _load_evolution_plan(path: str | None):
 def cmd_ingest(args) -> int:
     from pasar_spark.cdc.runner import ReplayRunner
 
-    if args.conflict == "patch" and (args.mode == "cow" or args.evolution_plan):
-        print("error: ingest --conflict patch takes neither --mode cow nor "
-              "--evolution-plan", file=sys.stderr)
+    if args.conflict == "patch" and args.evolution_plan:
+        print("error: ingest --conflict patch takes no --evolution-plan", file=sys.stderr)
         return 2
     spark = _spark(args)
     if bool(args.wal) == bool(args.jdbc_url):
@@ -130,7 +129,6 @@ def cmd_ingest(args) -> int:
         args.table,
         n_buckets=args.buckets,
         chunk_size=args.chunk_size,
-        merge_mode=args.mode,
         compact_min_files=args.compact_min_files,
         evolution_plan=_load_evolution_plan(args.evolution_plan),
     )
@@ -186,7 +184,6 @@ def cmd_stream(args) -> int:
         args.wal,
         checkpoint_path=args.checkpoint,
         n_buckets=args.buckets,
-        merge_mode=args.mode,
         wire_format=args.wire_format,
         dlq_path=args.dlq,
         followers=followers,
@@ -319,7 +316,6 @@ def cmd_etl(args) -> int:
             wal_path=args.wal,
             checkpoint_path=args.checkpoint,
             n_buckets=args.buckets,
-            merge_mode=args.mode,
             on_unrouted=args.on_unrouted,
         )
         tables = _run_live(ingest, args) if args.live else ingest.run_available_now()
@@ -332,7 +328,6 @@ def cmd_etl(args) -> int:
             route_by=args.route_by,
             n_buckets=args.buckets,
             chunk_size=args.chunk_size,
-            merge_mode=args.mode,
             on_unrouted=args.on_unrouted,
         )
         tables = runner.replay(args.wal, max_events=args.max_events)
@@ -478,7 +473,6 @@ def build_parser() -> argparse.ArgumentParser:
     i.add_argument("--buckets", type=int, default=16)
     i.add_argument("--chunk-size", type=int, default=1_000_000)
     i.add_argument("--max-events", type=int, default=None)
-    i.add_argument("--mode", choices=["mor", "cow"], default="mor")
     i.add_argument(
         "--conflict",
         choices=["row", "patch"],
@@ -501,7 +495,6 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("--wal", required=True)
     s.add_argument("--checkpoint", required=True)
     s.add_argument("--buckets", type=int, default=16)
-    s.add_argument("--mode", choices=["mor", "cow"], default="mor")
     s.add_argument("--live", action="store_true", help="processingTime trigger instead of availableNow")
     s.add_argument("--trigger-interval", default="1 second")
     s.add_argument("--duration", type=int, default=0, help="seconds to tail with --live (0 = forever)")
@@ -614,7 +607,6 @@ def build_parser() -> argparse.ArgumentParser:
     et.add_argument("--buckets", type=int, default=16)
     et.add_argument("--chunk-size", type=int, default=1_000_000)
     et.add_argument("--max-events", type=int, default=None)
-    et.add_argument("--mode", choices=["mor", "cow"], default="mor")
     et.add_argument("--on-unrouted", choices=["error", "ignore"], default="error")
     et.add_argument("--stream", action="store_true", help="tail the WAL via Structured Streaming instead of batch LSN windows")
     et.add_argument("--checkpoint", default=None, help="streaming checkpoint dir (required with --stream)")

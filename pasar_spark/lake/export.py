@@ -255,11 +255,7 @@ def _export_snapshot_locked(
     # retention (vacuumed tombstones are gone here too — the same
     # snapshot+log-retention contract as any CDC bootstrap).
     is_row = table.manifest.get("conflict", "row") == "row"
-    del_cols = list(
-        dict.fromkeys(
-            table.manifest["key"] + table.manifest.get("resolve_order", ["ts", "lsn"])
-        )
-    )
+    del_cols = list(dict.fromkeys(table.manifest["key"] + table.resolve_order))
     bucket_files: dict[str, dict] = {}
 
     def _collect(root: str, b: str, prefix: str) -> list[str]:
@@ -341,7 +337,7 @@ def _export_snapshot_locked(
         # replica table and resume the WAL from this snapshot's position
         "key": table.manifest["key"],
         "bucket_by": table.manifest["bucket_by"],
-        "resolve_order": table.manifest.get("resolve_order", ["ts", "lsn"]),
+        "resolve_order": table.resolve_order,
         "conflict": table.manifest.get("conflict", "row"),
         "column_pairs": [
             [f.name, f.type] for f in table.schema.fields if f.name in set(cols)
@@ -439,7 +435,6 @@ def import_snapshot(
         batch_id=f"import-v{m['source_version']}",
         last_lsn=m["last_lsn"],
         normalize=False,  # an import must not rewrite the primary's text
-        mode="mor",
     )
     return t
 

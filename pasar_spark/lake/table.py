@@ -11,10 +11,10 @@ nothing else:
   file set; a crashed writer leaves only invisible orphan data files.
 - **bucket layout**: rows are hash-bucketed by ``xxhash64(conv_id) % B``
   (Iceberg's ``bucket(B, conv_id)`` transform). The manifest maps bucket ->
-  data files, so a MERGE that touches k buckets reads and rewrites exactly
-  those k — copy-on-write with file-level pruning. At 100 TB with B=4096,
-  a typical replay chunk touches a bounded fraction of the table instead
-  of all of it.
+  data files, so a MERGE that touches k buckets appends deltas to exactly
+  those k, and compaction rewrites only the buckets whose deltas piled
+  up — file-level pruning. At 100 TB with B=4096, a typical replay chunk
+  touches a bounded fraction of the table instead of all of it.
 - **snapshot tags + embedded ledger**: the offset ledger (last applied
   LSN, recent batch ids, cumulative metrics) is a field OF the manifest,
   so data + checkpoint commit in one atomic action — the exactly-once
@@ -24,7 +24,7 @@ nothing else:
 
 Why not mimic the reference's truncate-then-load (person.py:24-33)?
 Because at 10^10 events a full rewrite per batch is O(table) not
-O(changes); copy-on-write of affected buckets is the scalable analogue.
+O(changes); appending per-bucket deltas is the scalable analogue.
 
 On a real cluster this class is replaced by an Iceberg catalog; the merge
 and replay layers (cdc/) only touch the narrow read/commit API below.
@@ -277,6 +277,22 @@ class LakeTable:
             self.manifest["schemas"][str(self.manifest["current_schema_id"])]
         )
 
+    @property
+    def resolve_order(self) -> list[str]:
+        """The LWW comparator columns, most significant first."""
+        return list(self.manifest.get("resolve_order", ["ts", "lsn"]))
+
+    @property
+    def payload(self) -> list[str]:
+        """The logical payload columns: every column but the key, the
+        resolve order and ``_tombstone``. A patch table stores payload
+        column ``c`` as its winner struct ``_pv_<c>`` (cdc/patch.py)."""
+        names = self.schema.names()
+        if self.manifest.get("conflict") == "patch":
+            return [c[len("_pv_"):] for c in names if c.startswith("_pv_")]
+        skip = set(self.manifest["key"]) | set(self.resolve_order) | {"_tombstone"}
+        return [c for c in names if c not in skip]
+
     def _schema_at(self, schema_id: int) -> TableSchema:
         return TableSchema.from_json(self.manifest["schemas"][str(schema_id)])
 
@@ -344,7 +360,7 @@ class LakeTable:
         Merge-on-read: buckets listed in manifest['unresolved'] may hold
         several versions of a key across delta files; they are LWW-
         resolved here (max over (ts, lsn)) before tombstone filtering.
-        Resolved (copy-on-write/compacted) buckets skip that reduce.
+        Resolved (compacted) buckets skip that reduce.
 
         ``key_equals`` (logical column -> value) additionally skips files
         whose manifest min/max stats prove the value absent — safe under
@@ -383,15 +399,14 @@ class LakeTable:
         names = self.schema.names()
         key = self.manifest["key"]
         if self.manifest.get("conflict") == "patch":
-            from pasar_spark.cdc.patch import payload_names, resolve_stored
+            from pasar_spark.cdc.patch import resolve_stored
 
-            out = resolve_stored(df, key, payload_names(self))
+            out = resolve_stored(df, key, self.payload)
         else:
             from pasar_spark.cdc.lww import lww_reduce  # lazy: avoids cycle
 
-            order = self.manifest.get("resolve_order", ["ts", "lsn"])
-            payload = [c for c in names if c not in set(key) | set(order)]
-            out = lww_reduce(df, key=key, order=order, payload=payload)
+            tomb = ["_tombstone"] if "_tombstone" in names else []
+            out = lww_reduce(df, key=key, order=self.resolve_order, payload=self.payload + tomb)
         return out.select(*names)
 
     def bucket_of(self, value) -> int:
@@ -942,18 +957,9 @@ class LakeTable:
 
         cur = to.schema
         key = to.manifest["key"]
-        order = to.manifest.get("resolve_order", ["ts", "lsn"])
+        order = to.resolve_order
         is_patch = to.manifest.get("conflict") == "patch"
-        pv_names = [c[len("_pv_"):] for c in cur.names() if c.startswith("_pv_")]
-        payload = (
-            pv_names
-            if is_patch
-            else [
-                c
-                for c in cur.names()
-                if c not in set(key) | set(order) | {"_tombstone"}
-            ]
-        )
+        payload = to.payload
 
         def _state(entries: list[dict], buckets_read, manifest: dict) -> DataFrame:
             df = to._read_entries(entries)
@@ -981,7 +987,7 @@ class LakeTable:
         # pre-image payload source: materialized winner values on patch
         # tables, plain columns in row mode
         pre_cols = (
-            [F.col(f"_pv_{c}.v").alias(f"_a_{c}") for c in pv_names]
+            [F.col(f"_pv_{c}.v").alias(f"_a_{c}") for c in payload]
             if is_patch
             else [F.col(c).alias(f"_a_{c}") for c in payload]
         ) if pre_images else []
@@ -991,7 +997,7 @@ class LakeTable:
             *pre_cols,
             # patch tables diff by COLUMN winners (below), which needs the
             # pre-image structs on the A side
-            *[F.col(f"_pv_{c}").alias(f"_apv_{c}") for c in (pv_names if is_patch else [])],
+            *[F.col(f"_pv_{c}").alias(f"_apv_{c}") for c in (payload if is_patch else [])],
             (F.col("_tombstone").isNull() | ~F.col("_tombstone")).alias("a_live"),
         )
         if is_patch:
@@ -1000,8 +1006,8 @@ class LakeTable:
             b = b.select(
                 *key,
                 *order,
-                *[F.col(f"_pv_{c}.v").alias(c) for c in pv_names],
-                *[F.col(f"_pv_{c}").alias(f"_bpv_{c}") for c in pv_names],
+                *[F.col(f"_pv_{c}.v").alias(c) for c in payload],
+                *[F.col(f"_pv_{c}").alias(f"_bpv_{c}") for c in payload],
                 (F.col("_tombstone").isNull() | ~F.col("_tombstone")).alias("b_live"),
             )
         else:
@@ -1026,7 +1032,7 @@ class LakeTable:
             # column set wins that column WITHOUT advancing the row's max
             # (ts, lsn) — the exact scenario patch mode exists for. A real
             # state change is "any per-column winner struct differs".
-            for c in pv_names:
+            for c in payload:
                 e = F.col(f"_bpv_{c}").eqNullSafe(F.col(f"_apv_{c}"))
                 same_version = e if same_version is None else same_version & e
         else:
@@ -1602,7 +1608,9 @@ class LakeTable:
                 fcntl.flock(lock, fcntl.LOCK_UN)
 
     def history(self) -> list[dict]:
-        manifests = (self._read_manifest(self.path, v) for v in self._versions(self.path))
+        """This version's lineage, oldest first: the parent chain only,
+        never a discarded stage, a lost-race fork or a later version."""
+        chain = reversed(list(self._ancestors(self.path, self.version)))
         return [
             {
                 "version": m["version"],
@@ -1610,5 +1618,5 @@ class LakeTable:
                 "last_lsn": m["ledger"]["last_lsn"],
                 "metrics": m["metrics"],
             }
-            for m in manifests
+            for _, m in chain
         ]

@@ -240,7 +240,6 @@ class StreamingIngest(WalTail):
         n_buckets: int = 16,
         evolution_plan: EvolutionPlan | None = None,
         max_files_per_trigger: int | None = None,
-        merge_mode: str = "mor",
         compact_min_files: int = 8,
         audit_checks=None,
         schema: StructType | None = None,
@@ -250,7 +249,7 @@ class StreamingIngest(WalTail):
     ):
         runner = ReplayRunner(
             spark, table_path, n_buckets, evolution_plan=evolution_plan,
-            merge_mode=merge_mode, compact_min_files=compact_min_files,
+            compact_min_files=compact_min_files,
         )
         super().__init__(
             runner, {table_path: table_path}, wal_path, checkpoint_path,
@@ -305,7 +304,6 @@ class MultiTableStreamingIngest(WalTail):
         checkpoint_path: str,
         n_buckets: int = 16,
         max_files_per_trigger: int | None = None,
-        merge_mode: str = "mor",
         compact_min_files: int = 8,
         schema: StructType | None = None,
         wire_format: str = "parquet",
@@ -315,8 +313,7 @@ class MultiTableStreamingIngest(WalTail):
     ):
         router = MultiTableReplayRunner(
             spark, base_dir, tables, route_by, n_buckets=n_buckets,
-            merge_mode=merge_mode, compact_min_files=compact_min_files,
-            on_unrouted=on_unrouted,
+            compact_min_files=compact_min_files, on_unrouted=on_unrouted,
         )
         super().__init__(
             router, {n: os.path.join(base_dir, n) for n in sorted(tables)},

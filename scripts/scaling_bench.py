@@ -49,7 +49,6 @@ if master.startswith("local-cluster"):
     z = shutil.make_archive(tempfile.mktemp(prefix="pasar_pyz"), "zip",
                             root_dir={repo!r}, base_dir="pasar_spark")
     spark.sparkContext.addPyFile(z)
-mode = os.environ.get("PASAR_SCALING_MODE", "mor")
 reps = int(os.environ.get("PASAR_SCALING_REPS", "2"))
 # Box-ceiling calibration: an embarrassingly parallel, codegen'd,
 # zero-IO aggregation. Whatever speedup THIS gets from N->4N is the most
@@ -71,16 +70,14 @@ for _ in range(3):
 # Then best-of-R measured passes (box-noise guard; same policy both
 # parallelism levels, so the efficiency ratio is noise-robust).
 import shutil as _sh
-ReplayRunner(spark, table_path + ".warmup", n_buckets=64, chunk_size=chunk,
-             merge_mode=mode).replay(wal)
+ReplayRunner(spark, table_path + ".warmup", n_buckets=64, chunk_size=chunk).replay(wal)
 _sh.rmtree(table_path + ".warmup", ignore_errors=True)
 elapsed = None
 table = None
 for rep in range(reps):
     tp = f"{{table_path}}.r{{rep}}"
     t0 = time.time()
-    table = ReplayRunner(spark, tp, n_buckets=64, chunk_size=chunk,
-                         merge_mode=mode).replay(wal)
+    table = ReplayRunner(spark, tp, n_buckets=64, chunk_size=chunk).replay(wal)
     dt = time.time() - t0
     elapsed = dt if elapsed is None else min(elapsed, dt)
     if rep < reps - 1:

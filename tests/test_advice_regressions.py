@@ -95,7 +95,7 @@ def test_compact_explicit_bucket_without_kind_field(spark, tmp_path):
     write_change_log(change_events(spark, 400, n_convs=8, seed=3), wal, n_files=2)
     runner = ReplayRunner(
         spark, str(tmp_path / "t"), n_buckets=2, chunk_size=200,
-        merge_mode="mor", compact_min_files=100,  # keep deltas unfolded
+        compact_min_files=100,  # keep deltas unfolded
     )
     table = runner.replay(wal)
     assert table.manifest.get("unresolved")

@@ -82,6 +82,27 @@ def _crashed_main_manifest(t: LakeTable, version: int, batch_id: str) -> None:
     LakeTable._write_manifest(t.path, version, m)
 
 
+def test_history_lists_only_the_parent_chain(spark, base_table):
+    """history() is this version's lineage: a discarded stage (still on
+    disk until expire reclaims it) with a higher last_lsn is no part of
+    it, and last_lsn never runs backwards along it."""
+    t = base_table
+    staged, _ = merge_batch(
+        t, _wap_chunk(spark, "conv-staged", 900_900), "wap-h", last_lsn=900_900, stage="h"
+    )
+    t.discard_staged("h")
+    main = t.commit_append(
+        _one_row(t, "conv-main", 900_100, "main write"), "batch-main", last_lsn=900_100
+    )
+    assert os.path.exists(LakeTable._manifest_path(t.path, staged.version))
+    hist = main.history()
+    versions = [h["version"] for h in hist]
+    assert staged.version not in versions
+    assert versions[-1] == main.version and versions == sorted(versions)
+    lsns = [h["last_lsn"] for h in hist]
+    assert lsns == sorted(lsns)
+
+
 def test_repair_rolls_past_staged_onto_crashed_main_commit(spark, base_table):
     """ADVICE r3 (high): staged manifest at CURRENT+1, crashed main
     commit at CURRENT+2 whose parent IS CURRENT. A new writer's repair

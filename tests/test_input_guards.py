@@ -7,16 +7,8 @@ import os
 
 import pytest
 
-from pasar_spark.cdc.merge import compact_buckets, merge_batch
+from pasar_spark.cdc.merge import compact_buckets
 from pasar_spark.cdc.runner import bootstrap_table
-from pasar_spark.datagen import change_events
-
-
-def test_merge_batch_refuses_unknown_mode(spark, tmp_path):
-    table = bootstrap_table(spark, str(tmp_path / "t"), 2)
-    changes = change_events(spark, 10, n_convs=2, seed=1)
-    with pytest.raises(ValueError, match="'mor'\\|'cow', got 'mro'"):
-        merge_batch(table, changes, "b0", mode="mro")
 
 
 def test_compact_buckets_refuses_unknown_policy(spark, tmp_path):
@@ -25,7 +17,7 @@ def test_compact_buckets_refuses_unknown_policy(spark, tmp_path):
         compact_buckets(table, policy="major")
 
 
-@pytest.mark.parametrize("flags", [["--mode", "cow"], ["--evolution-plan", "plan.json"]])
+@pytest.mark.parametrize("flags", [["--evolution-plan", "plan.json"]])
 def test_cli_patch_ingest_refuses_row_only_flags(tmp_path, capsys, flags):
     from pasar_spark.cli import main
 

@@ -1,9 +1,10 @@
-"""Merge-on-read mode: equivalence with copy-on-write, compaction, vacuum.
+"""Merge-on-read: compaction and vacuum keep the visible state.
 
 MoR appends LWW-reduced delta files (O(chunk) per commit) and resolves on
-read; because LWW is associative, lazy resolution must be bit-equal to
-the eager CoW merge. Compaction folds deltas, vacuum drops tombstones
-past the out-of-order horizon — neither may change the visible state.
+read. Compaction folds deltas, vacuum drops tombstones past the
+out-of-order horizon — neither may change the visible state. (The golden
+DuckDB replay, tests/test_replay_e2e.py, pins the state itself, both
+unresolved and fully compacted.)
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ N = 12_000
 
 @pytest.fixture(scope="module")
 def wal(spark, tmp_path_factory):
+    """The WAL and an uncompacted MoR replay of it at ``{root}/mor``."""
     root = tmp_path_factory.mktemp("mor")
     path = str(root / "wal")
     write_change_log(
@@ -27,6 +29,13 @@ def wal(spark, tmp_path_factory):
         path,
         n_files=6,
     )
+    mor = ReplayRunner(
+        spark, f"{root}/mor", n_buckets=4, chunk_size=2_000,
+        compact_min_files=10_000,  # never compact here
+    ).replay(path)
+    # the table really is lazy: buckets flagged unresolved, >1 file each
+    assert len(mor.manifest["unresolved"]) > 0
+    assert max(mor.bucket_file_counts().values()) >= 6
     return str(root), path
 
 
@@ -35,23 +44,6 @@ def _state(table):
         (r.conv_id, r.turn_idx, r.role, r.text, r.tool, r.ts, r.lsn)
         for r in table.read().collect()
     )
-
-
-def test_mor_equals_cow(spark, wal):
-    root, path = wal
-    cow = ReplayRunner(
-        spark, f"{root}/cow", n_buckets=4, chunk_size=2_000, merge_mode="cow"
-    ).replay(path)
-    mor = ReplayRunner(
-        spark, f"{root}/mor", n_buckets=4, chunk_size=2_000,
-        merge_mode="mor", compact_min_files=10_000,  # never compact here
-    ).replay(path)
-    assert _state(mor) == _state(cow)
-    # the cow table really is eager: every bucket fully resolved
-    assert cow.manifest["unresolved"] == []
-    # MoR table really is lazy: buckets flagged unresolved, >1 file each
-    assert len(mor.manifest["unresolved"]) > 0
-    assert max(mor.bucket_file_counts().values()) >= 6
 
 
 def test_compaction_preserves_state_and_bounds_files(spark, wal):
@@ -69,16 +61,15 @@ def test_inline_compaction_during_replay(spark, wal):
     root, path = wal
     t = ReplayRunner(
         spark, f"{root}/mor_inline", n_buckets=4, chunk_size=2_000,
-        merge_mode="mor", compact_min_files=3,
+        compact_min_files=3,
     ).replay(path)
-    cow = LakeTable.load(spark, f"{root}/cow")
-    assert _state(t) == _state(cow)
+    assert _state(t) == _state(LakeTable.load(spark, f"{root}/mor"))
     assert max(t.bucket_file_counts().values()) <= 4  # compaction kept bound
 
 
 def test_vacuum_drops_only_dead_tombstones(spark, wal):
     root, path = wal
-    t = LakeTable.load(spark, f"{root}/cow")
+    t = LakeTable.load(spark, f"{root}/mor")
     live = _state(t)
     n_tomb_before = (
         t.read(include_tombstones=True).where("_tombstone").count()

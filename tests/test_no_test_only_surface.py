@@ -22,17 +22,6 @@ PACKAGE = os.path.join(ROOT, "pasar_spark")
 CALLER_DIRS = ("pasar_spark", "scripts", "perfbench")
 CALLER_FILES = ("bench.py", "__spark_entry__.py")
 
-# Library surface with no in-repo caller yet, kept on purpose.
-ALLOWED = {
-    # cdc/quality.py: the audit-check library that callers pass to
-    # write_audit_publish(checks=) and StreamingIngest(audit_checks=);
-    # write-audit-publish has no CLI path yet
-    "assert_unique_key",
-    "assert_no_nulls",
-    "assert_lsn_monotone_vs_ledger",
-    "quality_report",
-}
-
 
 def _files(top: str, suffixes=(".py",)):
     for dirpath, dirnames, filenames in os.walk(top):
@@ -91,9 +80,7 @@ def test_every_definition_has_a_non_test_caller():
         if w in defs:
             uses[w] = uses.get(w, 0) + 1
     uncalled = sorted(n for n, k in defs.items() if uses.get(n, 0) <= k)
-    assert sorted(set(uncalled) - ALLOWED) == [], (
+    assert uncalled == [], (
         "no caller outside tests/: wire each into the CLI, the registry or "
         "perfbench, or delete it with its tests"
     )
-    # an allowlisted name that gained a caller (or is gone) leaves the list
-    assert sorted(ALLOWED - set(uncalled)) == []

@@ -13,6 +13,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from pasar_spark.cdc.merge import compact_buckets
 from pasar_spark.cdc.runner import ReplayRunner
 from pasar_spark.datagen import change_events, write_change_log
 
@@ -32,17 +33,21 @@ ORDER BY conv_id, turn_idx
 """
 
 
-@pytest.fixture(scope="module", params=["mor", "cow"])
+@pytest.fixture(scope="module", params=["mor", "compacted"])
 def replayed(spark, tmp_path_factory, request):
+    """``mor``: the replayed table as the runner left it, deltas still
+    unresolved. ``compacted``: then every bucket resolved by a full
+    compaction, so the golden check also covers a table whose state
+    ``commit_merge`` rewrote."""
     root = tmp_path_factory.mktemp(f"e2e-{request.param}")
     log_path = str(root / "wal")
     events = change_events(spark, N_EVENTS, n_convs=300, seed=7)
     write_change_log(events, log_path, n_files=8)
-    runner = ReplayRunner(
-        spark, str(root / "table"), n_buckets=8, chunk_size=6_000,
-        merge_mode=request.param,
-    )
+    runner = ReplayRunner(spark, str(root / "table"), n_buckets=8, chunk_size=6_000)
     table = runner.replay(log_path)
+    if request.param == "compacted":
+        table, _ = compact_buckets(table, min_files=1, policy="full")
+        assert table.manifest["unresolved"] == []
     return log_path, table
 
 

@@ -106,14 +106,16 @@ def test_live_processing_time_trigger_tails_appends(spark, tmp_path):
 def test_quality_gated_stream_publishes_good_epochs(spark, tmp_path):
     """audit_checks turns the tail into WAP-per-epoch: good epochs stage,
     audit, publish — final state equals plain batch replay."""
-    from pasar_spark.cdc.quality import assert_unique_key
+    def unique_key(df):
+        if df.groupBy("conv_id", "turn_idx").count().where("count > 1").limit(1).collect():
+            raise ValueError("duplicate keys")
 
     wal = str(tmp_path / "wal")
     write_change_log(change_events(spark, 3_000, n_convs=40, seed=51), wal, n_files=2)
     ingest = StreamingIngest(
         spark, str(tmp_path / "tbl"), wal,
         checkpoint_path=str(tmp_path / "ckpt"), n_buckets=4,
-        audit_checks=[lambda df: assert_unique_key(df, ["conv_id", "turn_idx"])],
+        audit_checks=[unique_key],
     )
     t = ingest.run_available_now()
     batch = ReplayRunner(
@@ -128,7 +130,9 @@ def test_quality_gated_stream_halts_on_bad_epoch(spark, tmp_path):
     never observe the bad rows, and the table is exactly where it was."""
     from pyspark.sql import functions as F
 
-    from pasar_spark.cdc.quality import QualityError, assert_no_nulls
+    def no_null_text(df):
+        if df.where("text IS NULL").limit(1).collect():
+            raise ValueError("nulls in text")
 
     wal = str(tmp_path / "wal")
     bad = change_events(spark, 2_000, n_convs=30, seed=52).withColumn(
@@ -138,13 +142,13 @@ def test_quality_gated_stream_halts_on_bad_epoch(spark, tmp_path):
     ingest = StreamingIngest(
         spark, str(tmp_path / "tbl"), wal,
         checkpoint_path=str(tmp_path / "ckpt"), n_buckets=4,
-        audit_checks=[lambda df: assert_no_nulls(df.where("lsn >= 0"), ["text"])],
+        audit_checks=[lambda df: no_null_text(df.where("lsn >= 0"))],
     )
     import pytest as _p
 
     with _p.raises(Exception) as ei:
         ingest.run_available_now()
-    assert "QualityError" in str(ei.value) or "nulls" in str(ei.value)
+    assert "nulls in text" in str(ei.value)
     from pasar_spark.lake.table import LakeTable
 
     t = LakeTable.load(spark, str(tmp_path / "tbl"))

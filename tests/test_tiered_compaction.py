@@ -39,7 +39,7 @@ def chain(spark, tmp_path_factory):
     table = runner.bootstrap()
     # big base chunk, then force a (major: base empty) compaction
     base_chunk = src.where(F.col("lsn") < N_BASE)
-    table, _ = merge_batch(table, base_chunk, "base", last_lsn=N_BASE - 1, mode="mor")
+    table, _ = merge_batch(table, base_chunk, "base", last_lsn=N_BASE - 1)
     table, d = compact_buckets(table, min_files=1)
     assert d["compacted_buckets"] > 0  # first compaction is major (no base yet)
 
@@ -48,7 +48,7 @@ def chain(spark, tmp_path_factory):
     while lo < N_TOTAL:
         hi = min(lo + CHUNK, N_TOTAL) - 1
         chunk = src.where((F.col("lsn") >= lo) & (F.col("lsn") <= hi))
-        table, _ = merge_batch(table, chunk, f"d-{lo}", last_lsn=hi, mode="mor")
+        table, _ = merge_batch(table, chunk, f"d-{lo}", last_lsn=hi)
         lo = hi + 1
     return wal, str(root / "tbl")
 

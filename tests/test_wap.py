@@ -19,7 +19,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pasar_spark.cdc.merge import merge_batch
-from pasar_spark.cdc.quality import QualityError, assert_no_nulls, assert_unique_key
 from pasar_spark.cdc.runner import ReplayRunner
 from pasar_spark.cdc.wap import write_audit_publish
 from pasar_spark.datagen import change_events, write_change_log
@@ -51,6 +50,22 @@ GOOD = [("conv-wap", 0, "U", 900_100, "audited hello")]
 BAD = [("conv-bad", 0, "U", 900_200, None)]  # null text -> audit veto
 
 
+class Veto(ValueError):
+    """An audit check's veto."""
+
+
+def no_null_text(df):
+    n = df.where("text IS NULL").count()
+    if n:
+        raise Veto(f"nulls in text: {n} rows")
+
+
+def unique_key(df):
+    dupes = df.groupBy("conv_id", "turn_idx").count().where("count > 1").limit(1).collect()
+    if dupes:
+        raise Veto(f"duplicate key {tuple(dupes[0])[:2]}")
+
+
 def test_stage_is_invisible_until_publish(spark, base_table):
     t = base_table
     staged, delta = merge_batch(t, _chunk(spark, GOOD), "wap-good", stage="audit")
@@ -75,10 +90,10 @@ def test_stage_is_invisible_until_publish(spark, base_table):
 
 def test_failed_audit_discards_and_chunk_can_restage(spark, base_table):
     t = base_table
-    with pytest.raises(QualityError):
+    with pytest.raises(Veto):
         write_audit_publish(
             t, _chunk(spark, BAD), "wap-bad",
-            checks=[lambda df: assert_no_nulls(df.where("conv_id = 'conv-bad'"), ["text"])],
+            checks=[lambda df: no_null_text(df.where("conv_id = 'conv-bad'"))],
         )
     main = LakeTable.load(spark, t.path)
     assert main.version == t.version  # readers never saw the bad chunk
@@ -88,26 +103,22 @@ def test_failed_audit_discards_and_chunk_can_restage(spark, base_table):
     fixed = [("conv-bad", 0, "U", 900_201, "fixed")]
     t2, delta, outcome = write_audit_publish(
         main, _chunk(spark, fixed), "wap-bad",
-        checks=[assert_unique_key_factory()],
+        checks=[unique_key],
     )
     assert outcome == "published"
     assert t2.read().where("conv_id = 'conv-bad'").count() == 1
-
-
-def assert_unique_key_factory():
-    return lambda df: assert_unique_key(df, ["conv_id", "turn_idx"])
 
 
 def test_wap_helper_end_to_end_and_replay_skip(spark, base_table):
     t = base_table
     t2, delta, outcome = write_audit_publish(
         t, _chunk(spark, GOOD), "wap-helper",
-        checks=[assert_unique_key_factory()],
+        checks=[unique_key],
     )
     assert outcome == "published" and delta["applied"] == 1
     t3, d3, outcome3 = write_audit_publish(
         t2, _chunk(spark, GOOD), "wap-helper",
-        checks=[assert_unique_key_factory()],
+        checks=[unique_key],
     )
     assert outcome3 == "skipped" and t3.version == t2.version
 
@@ -180,7 +191,7 @@ def test_wap_retries_publish_race(spark, base_table):
     try:
         t2, delta, outcome = write_audit_publish(
             t, _chunk(spark, GOOD), "wap-race",
-            checks=[assert_unique_key_factory()],
+            checks=[unique_key],
         )
     finally:
         mp.undo()
@@ -222,8 +233,8 @@ def test_expire_keeps_live_staged_chain(spark, base_table):
 
 
 def test_crashing_check_discards_stage(spark, base_table):
-    """ADVICE r3 (low): a check that raises anything OTHER than
-    QualityError (a bug in the check itself) must still discard the
+    """ADVICE r3 (low): a check that raises anything OTHER than its
+    designed veto (a bug in the check itself) must still discard the
     stage — a leaked STAGED pointer pins its parent chain against
     expire_snapshots forever."""
     t = base_table
