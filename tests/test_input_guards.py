@@ -17,7 +17,9 @@ def test_compact_buckets_refuses_unknown_policy(spark, tmp_path):
         compact_buckets(table, policy="major")
 
 
-@pytest.mark.parametrize("flags", [["--evolution-plan", "plan.json"]])
+@pytest.mark.parametrize(
+    "flags", [["--evolution-plan=plan.json"], ["--evolution-plan", "plan.json"]]
+)
 def test_cli_patch_ingest_refuses_row_only_flags(tmp_path, capsys, flags):
     from pasar_spark.cli import main
 
